@@ -1779,7 +1779,10 @@ class StatementRouter:
     ) -> None:
         """Write-time constraint enforcement (Column.java:71-78 CHECK /
         NOT NULL; GlobalUniqueIndex.java:33 uniqueness as a group-count
-        validation). One validation job per constrained write."""
+        validation). Spark jobs: one count for the NOT NULL/CHECK
+        predicates, and two per unique column set — the duplicate-group
+        aggregate's shuffle stage, then an ``isEmpty`` probe that stops at
+        the first duplicate. A write with no constraints runs none."""
         cons = self.catalog.constraints.get(name)
         if cons:
             conds = [F.col(c).isNull() for c in cons.not_null if c in incoming.columns]
@@ -1819,15 +1822,14 @@ class StatementRouter:
                 for c in cols:
                     cond = F.col(c).isNotNull()
                     no_nulls = cond if no_nulls is None else (no_nulls & cond)
-                dup = (
+                no_dup = (
                     combined.filter(no_nulls)
                     .groupBy(*cols)
                     .count()
                     .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
+                    .isEmpty()
                 )
-                if dup:
+                if not no_dup:
                     raise ValueError(
                         f"unique constraint violation on {name}({', '.join(cols)})"
                     )

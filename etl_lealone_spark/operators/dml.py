@@ -26,6 +26,7 @@ from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 
@@ -247,6 +248,21 @@ class SnapshotTable:
     (see :meth:`update` / :meth:`delete` with ``partition_filter``) —
     the full-snapshot rewrite cost becomes proportional to the data
     actually touched.
+
+    Schema invariant: a committed version directory is immutable, so its
+    schema is fixed at commit and this object keeps it (the table owns
+    its columns, as the reference's StandardTable does). Reads pass it to
+    Spark, which then skips the schema-inference job a bare
+    ``spark.read.parquet`` runs on every call. A Spark write pins the
+    schema of the frame it wrote; ``insert``, ``restore`` and
+    ``clone_from`` inherit their source version's; a version this object
+    did not commit is inferred once on first read. Only the data columns
+    are kept: Spark still derives partition columns and their types from
+    the directory names on each read, exactly as inference does (and the
+    file source makes every column nullable either way). An entry is
+    keyed on its ``_SUCCESS`` marker's mtime, so a version number reused
+    after a drop, or rewritten by another object over the same root, is
+    never served a stale schema.
     """
 
     def __init__(
@@ -261,6 +277,8 @@ class SnapshotTable:
         self.name = name
         self.partition_by = list(partition_by or [])
         self._version = self._latest_version()
+        # version -> (_SUCCESS mtime_ns, data-column schema)
+        self._schemas: dict[int, tuple[Optional[int], StructType]] = {}
 
     # -- snapshot bookkeeping -----------------------------------------
     def _dir(self, version: int) -> str:
@@ -298,6 +316,34 @@ class SnapshotTable:
         if os.path.isdir(d) and not self._committed(d):
             shutil.rmtree(d, ignore_errors=True)
 
+    def _marker_mtime(self, version: int) -> Optional[int]:
+        try:
+            return os.stat(os.path.join(self._dir(version), "_SUCCESS")).st_mtime_ns
+        except OSError:
+            return None
+
+    def _remember(self, version: int, schema: StructType) -> None:
+        """Pin ``version``'s schema, minus the partition columns (Spark
+        re-derives those from the directory names)."""
+        part = {c.lower() for c in self.partition_by}
+        data = StructType([f for f in schema.fields if f.name.lower() not in part])
+        self._schemas[version] = (self._marker_mtime(version), data)
+
+    def _known_schema(self, version: int) -> Optional[StructType]:
+        hit = self._schemas.get(version)
+        if hit is None or hit[0] != self._marker_mtime(version):
+            return None
+        return hit[1]
+
+    def _inherit_schema(
+        self, version: int, src: "SnapshotTable", src_version: int
+    ) -> None:
+        """A metadata-only or append commit keeps its source's schema —
+        when the source's is known; otherwise the first read infers it."""
+        known = src._known_schema(src_version)
+        if known is not None:
+            self._remember(version, known)
+
     @property
     def version(self) -> int:
         return self._version
@@ -323,7 +369,12 @@ class SnapshotTable:
                 f"table {self.name} has no version {version} "
                 f"(available: {self.versions()})"
             )
-        return self.spark.read.parquet(self._dir(v))
+        schema = self._known_schema(v)
+        if schema is None:
+            df = self.spark.read.parquet(self._dir(v))
+            self._remember(v, df.schema)
+            return df
+        return self.spark.read.schema(schema).parquet(self._dir(v))
 
     def versions(self) -> list[int]:
         """All readable snapshot versions, oldest first."""
@@ -382,6 +433,7 @@ class SnapshotTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(self._dir(new_version))
+        self._remember(new_version, df.schema)
         self._version = new_version
         return new_version
 
@@ -463,8 +515,14 @@ class SnapshotTable:
         )
         transformed = transform(subset)
         # align column order: partition cols last on disk, schema order in reads
-        writer = transformed.select(current.columns).write.mode("append")
-        writer.partitionBy(*self.partition_by).parquet(self._dir(new_version))
+        out = transformed.select(current.columns)
+        out.write.mode("append").partitionBy(*self.partition_by).parquet(
+            self._dir(new_version)
+        )
+        # the frame's schema, not the source's: a widening transform
+        # wrote the wider type, which the reader can also apply to the
+        # linked untouched files
+        self._remember(new_version, out.schema)
         self._version = new_version
         return new_version
 
@@ -527,6 +585,7 @@ class SnapshotTable:
         else:
             self._link_data_files(src, dst)
             rows.write.mode("append").parquet(dst)
+        self._inherit_schema(new_version, self, self._version)
         self._version = new_version
         return new_version
 
@@ -729,6 +788,7 @@ class SnapshotTable:
         # every other mutation (an interrupted restore is invisible)
         with open(os.path.join(dst, "_SUCCESS"), "w"):
             pass
+        self._inherit_schema(new_version, self, version)
         self._version = new_version
         return new_version
 
@@ -776,6 +836,7 @@ class SnapshotTable:
                 )
         with open(os.path.join(dst, "_SUCCESS"), "w"):
             pass
+        self._inherit_schema(nv, src, src.version)
         self._version = nv
         return nv
 
@@ -786,6 +847,7 @@ class SnapshotTable:
 
     def drop(self) -> None:
         shutil.rmtree(os.path.join(self.root, self.name), ignore_errors=True)
+        self._schemas.clear()
         self._version = -1
 
     def vacuum(
@@ -837,6 +899,7 @@ class SnapshotTable:
         for v in versions:
             if v not in reachable and v <= self._version - keep_last:
                 shutil.rmtree(self._dir(v), ignore_errors=True)
+                self._schemas.pop(v, None)
 
 
 def snapshot_diff(

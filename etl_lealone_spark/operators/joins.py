@@ -385,11 +385,13 @@ def bloom_bitmap(
                 ),
             ).alias("bloom_words"),
             "bloom_bits_set",
-            # carried build parameter: probes assert agreement on it
-            # (r12 advisor — a probe with a different m_bits would
-            # compute positions under a different modulus and be
-            # silently wrong; bloom_pass_flag raises instead)
+            # carried build parameters: probes assert agreement on all
+            # three — a probe with a different m_bits, k or tag computes
+            # other bit positions and would be silently wrong;
+            # bloom_pass_flag raises instead
             F.lit(int(m_bits)).alias("bloom_m_bits"),
+            F.lit(int(k)).alias("bloom_k"),
+            F.lit(tag).alias("bloom_tag"),
         )
         .crossJoin(F.broadcast(n_keys))
     )
@@ -399,15 +401,16 @@ def bloom_pass_flag(
     key, m_bits: int = 8192, k: int = 3, tag: str = "bloom"
 ):
     """Membership predicate column for a probe row already cross-joined
-    with the :func:`bloom_bitmap` row (``bloom_words`` + ``bloom_m_bits``
-    in scope). True iff ALL k bit positions of the key are set — may
-    include false positives, never false negatives.
+    with the :func:`bloom_bitmap` row (``bloom_words``, ``bloom_m_bits``,
+    ``bloom_k`` and ``bloom_tag`` in scope). True iff ALL k bit positions
+    of the key are set — may include false positives, never false
+    negatives.
 
-    Build/probe parameter agreement is ENFORCED (r12 advisor): a probe
-    whose ``m_bits`` differs from the bitmap's computes bit positions
-    under a different modulus — silently wrong membership (false
-    negatives possible). The bitmap row carries ``bloom_m_bits``; a
-    mismatch raises at evaluation instead of returning garbage."""
+    Build/probe parameter agreement is ENFORCED: a probe whose
+    ``m_bits``, ``k`` or ``tag`` differs from the bitmap's computes other
+    bit positions — silently wrong membership (false negatives
+    possible). The bitmap row carries all three; a mismatch raises at
+    evaluation instead of returning garbage."""
     from .xhash import hconsts, md5_hash60, mix60
 
     h = md5_hash60(key.cast("string"))
@@ -425,15 +428,19 @@ def bloom_pass_flag(
             )
             != 0
         )
-    return F.when(F.col("bloom_m_bits") == F.lit(int(m_bits)), flag).otherwise(
-        F.raise_error(
+    out = None
+    for col, want in (("m_bits", int(m_bits)), ("k", int(k)), ("tag", tag)):
+        built = F.col(f"bloom_{col}")
+        err = F.raise_error(
             F.format_string(
-                "bloom build/probe m_bits mismatch: bitmap built with %s, "
-                f"probed with {int(m_bits)}",
-                F.col("bloom_m_bits"),
+                f"bloom build/probe {col} mismatch: bitmap built with %s, "
+                f"probed with {str(want).replace('%', '%%')}",
+                built,
             )
         ).cast("boolean")
-    )
+        cond = built != F.lit(want)
+        out = F.when(cond, err) if out is None else out.when(cond, err)
+    return out.otherwise(flag)
 
 
 def bloom_semi_join(
@@ -455,5 +462,12 @@ def bloom_semi_join(
     return (
         probe.crossJoin(F.broadcast(bitmap))
         .filter(bloom_pass_flag(F.col(probe_key), m_bits, k, tag))
-        .drop("bloom_words", "bloom_bits_set", "bloom_n_keys", "bloom_m_bits")
+        .drop(
+            "bloom_words",
+            "bloom_bits_set",
+            "bloom_n_keys",
+            "bloom_m_bits",
+            "bloom_k",
+            "bloom_tag",
+        )
     )

@@ -17,6 +17,7 @@ import itertools
 import os
 import threading
 import time as _time
+import warnings
 from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any, Optional
@@ -69,36 +70,36 @@ def build_spark(
       determinism.
     """
     n = cores or default_parallelism()
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    conf = {
+        "spark.master": f"local[{n}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or n),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # CBO + join reorder: uses ANALYZE-computed stats when present
         # (our ANALYZE statement maps to COMPUTE STATISTICS); the static
         # complement to AQE's runtime re-planning — together they replace
         # the reference's exhaustive/genetic join-order search
-        .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.cbo.joinReorder.enabled", "true")
+        "spark.sql.cbo.enabled": "true",
+        "spark.sql.cbo.joinReorder.enabled": "true",
         # testdata parquet stores TIMESTAMP(NANOS); Spark has no nanos type —
         # read as long and convert at load (tables.load_table)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Off-heap column vectors for the parquet reader: decode lands
         # outside the GC'd heap (standard columnar-engine practice at
         # cluster scale). Measured at 5e8 rows: W3 1.77 -> 1.36s, W2
         # 0.76 -> 0.67s — a 10-23% cut to the scan-shape substrate gap
         # (docs/BENCHLOG.md r05). Sized to the host (see _default_offheap;
         # SPARK_GRAFT_OFFHEAP or the offheap_size parameter override).
-        .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", offheap_size or _default_offheap())
-        .config("spark.sql.columnVector.offheap.enabled", "true")
+        "spark.memory.offHeap.enabled": "true",
+        "spark.memory.offHeap.size": offheap_size or _default_offheap(),
+        "spark.sql.columnVector.offheap.enabled": "true",
         # Whole-stage-codegen class cache (r13, measured): the default
         # caches only 100 generated classes JVM-wide; a session serving
         # a many-query workload (this engine's 226-workload surface, or
@@ -113,7 +114,7 @@ def build_spark(
         # i.e. the entire warm-vs-in-suite gap was recompilation.
         # 4096 ≈ 2× the suite's generated-class count; metaspace cost
         # is ~tens of KB per class, bounded well under the driver heap.
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        "spark.sql.codegen.cache.maxEntries": "4096",
         # Streaming state retention: the default (100) keeps up to 100
         # HDFSBackedStateStore map VERSIONS in executor memory per
         # stateful partition — after a dozen drained streaming queries
@@ -123,13 +124,44 @@ def build_spark(
         # mechanism a slower host amplifies). 2 is the safe minimum for
         # micro-batch recovery; our drains checkpoint to per-run tmp
         # dirs and never restart, so deep version history buys nothing.
-        .config("spark.sql.streaming.minBatchesToRetain", "2")
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.sql.streaming.minBatchesToRetain": "2",
+    }
+    conf.update(extra_conf or {})
+    existing = SparkSession.getActiveSession() is not None
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
+    if existing:
+        _warn_unapplied_confs(spark, conf)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _warn_unapplied_confs(spark: SparkSession, requested: dict[str, str]) -> None:
+    """Warn when ``getOrCreate`` handed back a running session that keeps
+    other values for requested confs it cannot change: core confs are
+    fixed when the SparkContext starts, static SQL confs (e.g.
+    ``spark.sql.codegen.cache.maxEntries``) when the session state is
+    built. Runtime SQL confs are applied to the running session, so they
+    never drift. The app name is only a label and is not compared."""
+    static_sql = spark._jvm.org.apache.spark.sql.internal.SQLConf.isStaticConfigKey
+    core = spark.sparkContext.getConf()
+    drift = []
+    for key, want in requested.items():
+        if key == "spark.app.name":
+            continue
+        if key.startswith("spark.sql."):
+            if not static_sql(key):
+                continue
+            have = spark.conf.get(key, None)
+        else:
+            have = core.get(key, None)
+        if have != want:
+            drift.append(f"{key}={have!r} (requested {want!r})")
+    if drift:
+        warnings.warn(
+            "build_spark reused a running Spark session whose static confs "
+            "differ from the requested ones: " + ", ".join(drift),
+            stacklevel=3,
+        )
 
 
 def quiet_bounded_window_warnings(spark: SparkSession) -> None:

@@ -5,9 +5,14 @@ lineitem events documents embeddings — one parquet each under
 /root/testdata/sf{0.001,0.01,0.1}/.
 
 Scale notes: loading is a lazy parquet scan — column pruning and filter
-pushdown happen in Catalyst, so registering all ten views costs nothing
-until an action runs. At cluster scale the same code reads a partitioned
-table directory; nothing here assumes single-file inputs.
+pushdown happen in Catalyst, so no table data is read until an action
+runs. Registration is not free, though: each ``spark.read.parquet``
+without a schema runs one Spark job to read a footer and infer the
+schema — about 1 s for the first table of a session and 50–80 ms for
+each after it at sf0.01 (``local[2]`` on a 4-core Xeon). ``load_tables``
+memoizes the relations per session so that cost is paid once. At
+cluster scale the same code reads a partitioned table directory;
+nothing here assumes single-file inputs.
 """
 
 from __future__ import annotations

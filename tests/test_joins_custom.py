@@ -203,6 +203,26 @@ def test_bloom_m_bits_guards(spark):
         probe.filter(bloom_pass_flag(F.col("k"), m_bits=16384)).count()
 
 
+def test_bloom_k_and_tag_guards(spark):
+    """The bitmap row carries (m_bits, k, tag); a probe that disagrees on
+    k or tag hashes to other bit positions, so it raises."""
+    import pytest
+
+    from etl_lealone_spark.operators.joins import bloom_bitmap, bloom_pass_flag
+    from pyspark.sql import functions as F
+
+    build = spark.range(0, 10).selectExpr("id AS k")
+    bitmap = bloom_bitmap(build, "k", m_bits=8192, k=3, tag="t1")
+    row = bitmap.collect()[0]
+    assert (row["bloom_m_bits"], row["bloom_k"], row["bloom_tag"]) == (8192, 3, "t1")
+    probe = spark.range(0, 5).selectExpr("id AS k").crossJoin(F.broadcast(bitmap))
+    assert probe.filter(bloom_pass_flag(F.col("k"), 8192, 3, "t1")).count() == 5
+    with pytest.raises(Exception, match="k mismatch: bitmap built with 3, probed with 4"):
+        probe.filter(bloom_pass_flag(F.col("k"), 8192, 4, "t1")).count()
+    with pytest.raises(Exception, match="tag mismatch: bitmap built with t1, probed with t2"):
+        probe.filter(bloom_pass_flag(F.col("k"), 8192, 3, "t2")).count()
+
+
 def test_bloom_empty_build_side_passes_nothing(spark):
     from etl_lealone_spark.operators.joins import bloom_semi_join
 
