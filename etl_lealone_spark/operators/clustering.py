@@ -64,12 +64,12 @@ def _sq_dist_sql(vec_sql: str, centroid: list[int]) -> str:
       PER ROW (20M-row probe) but is instantiated k times inside the
       argmin and pays ~2.3s Catalyst+janino fixed cost PER ACTION,
       re-paid every Lloyd iteration — 3x slower end-to-end at bench
-      corpus scale (2000 rows). r12 crossover measurement
-      (scripts/argmin_crossover.py, BENCHLOG.md r12): at the full
-      argmin shape the unroll is also per-row SLOWER (64 vs 54
-      us/row at 200k-2M rows) — the cost is the 8-wide
-      struct-array + array_min assembly, not the distance kernel, so
-      NO row count favors unrolling. If a billion-row assignment pass
+      corpus scale (2000 rows). Crossover measurement
+      (``git show 3d2eabf:scripts/argmin_crossover.py``, numbers in
+      docs/BENCHLOG.md): at the full argmin shape the unroll is also
+      per-row SLOWER (64 vs 54 us/row at 200k-2M rows) — the cost is
+      the 8-wide struct-array + array_min assembly, not the distance
+      kernel, so NO row count favors unrolling. If a billion-row assignment pass
       ever dominates a real profile, attack the assembly shape
       (chained least()/CASE comparators or an Arrow-vectorized scorer
       a la similarity.score_int_cosine), not the kernel.

@@ -99,8 +99,7 @@ def merge_by_key(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
-    broadcast_source: Optional[bool] = None,
-    validate_keys: bool = True,
+    broadcast_source: bool = False,
 ) -> DataFrame:
     """MERGE INTO target KEY(k...) — upsert (Merge.java:35,146-230).
 
@@ -115,18 +114,15 @@ def merge_by_key(
     source-presence marker — one shuffle, or zero when the source
     broadcasts. ``source`` must have the same schema as ``target``.
     """
-    if validate_keys:
-        null_key = None
-        for k in keys:
-            c = F.col(k).isNull()
-            null_key = c if null_key is None else (null_key | c)
-        if not source.filter(null_key).isEmpty():
-            raise ValueError(
-                f"MERGE source has NULL in key column(s) {list(keys)} "
-                "(reference: COLUMN_CONTAINS_NULL_VALUES)"
-            )
-    if broadcast_source is None:
-        broadcast_source = False
+    null_key = None
+    for k in keys:
+        c = F.col(k).isNull()
+        null_key = c if null_key is None else (null_key | c)
+    if not source.filter(null_key).isEmpty():
+        raise ValueError(
+            f"MERGE source has NULL in key column(s) {list(keys)} "
+            "(reference: COLUMN_CONTAINS_NULL_VALUES)"
+        )
     src = F.broadcast(source) if broadcast_source else source
     s = src.select(
         [F.col(c).alias(f"__s_{c}") for c in source.columns]
@@ -162,7 +158,6 @@ def merge_ansi(
     delete_matched: bool = False,
     matched_guard: Optional[Column] = None,
     insert_values: Optional[Mapping[str, Column]] = None,
-    enforce_single_match: bool = True,
 ) -> DataFrame:
     """ANSI MERGE USING as ONE full-outer join (reference extension;
     Merge.java:146-230 covers only the KEY upsert form).
@@ -180,7 +175,6 @@ def merge_ansi(
     enforced from the same join: a window count per target row id turns
     into a runtime ``raise_error`` — one job, one extra hash exchange,
     instead of the two eager ``count()`` actions the naive form needs.
-    Disable via ``enforce_single_match`` when the source is known unique.
 
     Namespace contract: ``on``, ``update_set`` values and
     ``matched_guard`` are Columns over the joined row — target columns by
@@ -207,18 +201,15 @@ def merge_ansi(
         if matched_guard is not None
         else matched
     )
-    if enforce_single_match:
-        # materialized as a column: window expressions are not legal
-        # directly inside a filter predicate
-        joined = joined.withColumn(
-            "__n_matches",
-            F.sum(F.when(matched, F.lit(1)).otherwise(F.lit(0))).over(
-                Window.partitionBy("__t_id")
-            ),
-        )
-        dup = t_present & (F.col("__n_matches") > F.lit(1))
-    else:
-        dup = F.lit(False)
+    # materialized as a column: window expressions are not legal
+    # directly inside a filter predicate
+    joined = joined.withColumn(
+        "__n_matches",
+        F.sum(F.when(matched, F.lit(1)).otherwise(F.lit(0))).over(
+            Window.partitionBy("__t_id")
+        ),
+    )
+    dup = t_present & (F.col("__n_matches") > F.lit(1))
     keep = F.when(dup, F.raise_error(ANSI_MERGE_DUP_MSG).cast("boolean")).otherwise(
         F.when(~t_present, F.lit(insert_values is not None))
         .when(act & F.lit(delete_matched), F.lit(False))

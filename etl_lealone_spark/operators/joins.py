@@ -457,7 +457,14 @@ def bloom_semi_join(
     map-side predicate, NO shuffle of the probe side. Admits false
     positives (rate (1-e^{-kn/m})^k); chase with the exact join if the
     consumer needs exactness — the point is the probe volume that
-    reaches that join is a fraction of the table."""
+    reaches that join is a fraction of the table.
+
+    No eager Python-side parameter check: both sides are built here from
+    the one ``(m_bits, k, tag)``, so a mismatch cannot arise, and the
+    row-level guard in :func:`bloom_pass_flag` covers callers that pair a
+    bitmap and a probe themselves. That guard never fires on an empty
+    probe, but an empty probe yields no rows, so no wrong row can escape;
+    an eager check would be dead code."""
     bitmap = bloom_bitmap(build, build_key, m_bits, k, tag)
     return (
         probe.crossJoin(F.broadcast(bitmap))

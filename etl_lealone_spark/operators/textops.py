@@ -365,9 +365,10 @@ def unigram_logprob(
     table, once for the per-doc sum) rather than materialized once: an
     (id, bucket) pre-aggregation behind an eager localCheckpoint was
     measured SLOWER interleaved at sf0.1 (0.97 -> 1.66s,
-    scripts/opt_ab_r12.py — the blocking materialization job plus the
-    extra (id, bucket) shuffle cost more than the saved map-only
-    tokenize+md5 pass), and both passes stay shuffle-free; at cluster
+    ``git show 3d2eabf:scripts/opt_ab_r12.py`` — the blocking
+    materialization job plus the extra (id, bucket) shuffle cost more
+    than the saved map-only tokenize+md5 pass), and both passes stay
+    shuffle-free; at cluster
     scale the same trade holds as long as tokenization is CPU-cheap —
     a pipeline with a heavier tokenizer should cut the plan at ``tok``
     with a persist(DISK_ONLY)/table write instead.

@@ -52,7 +52,6 @@ def build_spark(
     cores: Optional[int] = None,
     shuffle_partitions: Optional[int] = None,
     extra_conf: Optional[dict[str, str]] = None,
-    offheap_size: Optional[str] = None,
 ) -> SparkSession:
     """Create a SparkSession tuned for this engine.
 
@@ -96,9 +95,9 @@ def build_spark(
         # cluster scale). Measured at 5e8 rows: W3 1.77 -> 1.36s, W2
         # 0.76 -> 0.67s — a 10-23% cut to the scan-shape substrate gap
         # (docs/BENCHLOG.md r05). Sized to the host (see _default_offheap;
-        # SPARK_GRAFT_OFFHEAP or the offheap_size parameter override).
+        # SPARK_GRAFT_OFFHEAP or extra_conf override).
         "spark.memory.offHeap.enabled": "true",
-        "spark.memory.offHeap.size": offheap_size or _default_offheap(),
+        "spark.memory.offHeap.size": _default_offheap(),
         "spark.sql.columnVector.offheap.enabled": "true",
         # Whole-stage-codegen class cache (r13, measured): the default
         # caches only 100 generated classes JVM-wide; a session serving

@@ -1,8 +1,8 @@
-"""Generate docs/PLANS.md: formatted physical plans of the headline
-queries with the scale-relevant properties called out. Evidence artifact
-for plan-shape review; regenerate after optimizer-relevant changes:
+"""Print the physical plans of the headline queries, with the
+scale-relevant properties called out, as markdown on stdout. Plan-shape
+evidence, regenerated on demand rather than committed:
 
-    python scripts/plan_audit.py
+    python scripts/plan_audit.py > plans.md
 """
 
 from __future__ import annotations
@@ -228,9 +228,7 @@ def main() -> None:
         out.append(simple.strip()[:4000])
         out.append("```")
         out.append("")
-    with open("docs/PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote docs/PLANS.md ({len(AUDIT)} plans)")
+    print("\n".join(out))
 
 
 if __name__ == "__main__":
