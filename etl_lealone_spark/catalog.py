@@ -32,10 +32,18 @@ import copy
 import os
 import re
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING, Optional
+from typing import TYPE_CHECKING, Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    DateType,
+    DecimalType,
+    IntegralType,
+    StringType,
+)
 
 from .operators.dml import SnapshotTable, merge_by_key
 from .services import ServiceMeta, generate_model_code, generate_service_code, parse_methods
@@ -99,6 +107,32 @@ def _sql_literal(v) -> str:
         return "ARRAY[" + ", ".join(_sql_literal(x) for x in v) + "]"
     s = str(v).replace("'", "''")
     return f"'{s}'"
+
+
+def _driver_keyable(t: DataType) -> bool:
+    """Whether key values of type ``t`` compare on the driver exactly as
+    Spark compares them: no NaN or -0.0 rules (floats), no session time
+    zone round trip (timestamps), no collation (non-binary strings), no
+    unhashable values (binary)."""
+    if isinstance(t, StringType):
+        return t.collation == "UTF8_BINARY"
+    return isinstance(t, (IntegralType, DecimalType, DateType, BooleanType))
+
+
+def _key_literal(v, t: DataType) -> str:
+    """SQL literal of a collected key value of a ``_driver_keyable`` type
+    ``t``, cast to ``t`` so that an ``IN`` list of them pushes down to the
+    scan. A string goes through its UTF-8 hex, so no character in it
+    needs escaping."""
+    if isinstance(t, StringType):
+        raw = f"X'{v.encode().hex()}'"
+    elif isinstance(t, DecimalType):
+        raw = f"'{v:f}'"
+    elif isinstance(t, DateType):
+        raw = f"DATE '{v.isoformat()}'"
+    else:  # integral or boolean
+        raw = str(v).lower()
+    return f"CAST({raw} AS {t.simpleString()})"
 
 
 def _import_dotted(path: str):
@@ -996,14 +1030,20 @@ class StatementRouter:
         )
         if m:
             # indexes are metadata-only: Catalyst + parquet stats subsume
-            # BTree access paths (SURVEY.md §2.1)
+            # BTree access paths (SURVEY.md §2.1). A unique index checks
+            # the rows the table already has, once: writes then check
+            # only the rows they change (_validate_write)
             name = m.group("name").lower()
-            self.catalog.indexes[name] = IndexMeta(
+            meta = IndexMeta(
                 name,
                 m.group("table").lower(),
                 [c.strip().lower() for c in m.group("cols").split(",")],
                 unique=bool(m.group("unique")),
             )
+            st = self.catalog.tables.get(meta.table)
+            if meta.unique and st is not None and st.exists():
+                self._check_unique(meta.table, st.read(), meta.columns)
+            self.catalog.indexes[name] = meta
             return self._ok(f"created index {name} (metadata only)")
 
         m = re.match(
@@ -1432,7 +1472,12 @@ class StatementRouter:
                 if typ in ("decimal", "numeric", "dec", "number") and args
                 else TYPE_MAP.get(typ, "string")
             )
-            st.write(st.read().withColumn(col, F.col(col).cast(spark_type)))
+            df = st.read()
+            new_value = F.col(col).cast(spark_type)
+            new_df = df.withColumn(col, new_value)
+            # a narrowing cast can NULL a value or merge two keys
+            self._validate_write(name, df, assigned={col: new_value}, after=new_df)
+            st.write(new_df)
             self.catalog.refresh_view(name)
             return self._ok(f"altered {name}.{col} type to {spark_type}")
         raise ValueError(f"unsupported ALTER COLUMN: {rest[:80]}")
@@ -1703,7 +1748,8 @@ class StatementRouter:
             raise ValueError(f"cannot parse INSERT: {s[:80]}")
         name = m.group("name").lower()
         st = self.catalog.table(name)
-        target_cols = [f.name for f in st.read().schema.fields]
+        target_schema = dict(st.read().dtypes)
+        target_cols = list(target_schema)
         rest = m.group("rest").strip()
         cols = (
             [c.strip().lower() for c in m.group("cols").split(",")]
@@ -1721,7 +1767,7 @@ class StatementRouter:
             # INSERT INTO t DEFAULT VALUES (Parser.java:1033): one row,
             # every column from its DEFAULT/IDENTITY (the alignment step
             # below fills all of them — the source carries no columns)
-            src = self.spark.sql("SELECT 1 AS __dummy")
+            src = self.spark.sql("SELECT * FROM VALUES (1) AS t(__dummy)")
         elif rest.upper().startswith("SET"):
             # MySQL-style INSERT … SET a = 1, b = 'x' (Parser.java:1053)
             pairs = self._split_top_level(rest[len("SET"):])
@@ -1746,7 +1792,6 @@ class StatementRouter:
         # align to target schema: missing columns → DEFAULT expr (falling
         # back to NULL), computed columns recomputed, order normalized
         cons = self.catalog.constraints.get(name, TableConstraints())
-        target_schema = dict(st.read().dtypes)
 
         def source_col(c: str):
             if c in cons.computed:
@@ -1769,23 +1814,64 @@ class StatementRouter:
         aligned = src.select(
             *[source_col(c).cast(target_schema[c]).alias(c) for c in target_cols]
         )
-        self._validate_write(name, aligned, incoming_only=True)
+        # VALUES / SET / DEFAULT VALUES carry their rows in the statement
+        # text: the plan folds to a LocalRelation, so the rows are on the
+        # driver and reading them back runs no Spark job
+        local = bool(re.match(r"(VALUES|SET|DEFAULT)\b", rest, re.IGNORECASE))
+        self._validate_write(name, aligned, insert=True, local=local)
         st.insert(aligned)
         self.catalog.refresh_view(name)
         return self._ok(f"inserted into {name}")
 
     def _validate_write(
-        self, name: str, incoming: DataFrame, incoming_only: bool = False
+        self,
+        name: str,
+        rows: DataFrame,
+        *,
+        where: Optional[Column] = None,
+        assigned: Optional[Mapping[str, Column]] = None,
+        after: Optional[DataFrame] = None,
+        insert: bool = False,
+        local: bool = False,
     ) -> None:
         """Write-time constraint enforcement (Column.java:71-78 CHECK /
-        NOT NULL; GlobalUniqueIndex.java:33 uniqueness as a group-count
-        validation). Spark jobs: one count for the NOT NULL/CHECK
-        predicates, and two per unique column set — the duplicate-group
-        aggregate's shuffle stage, then an ``isEmpty`` probe that stops at
-        the first duplicate. A write with no constraints runs none."""
+        NOT NULL; GlobalUniqueIndex.java:33 uniqueness).
+
+        The committed snapshot already satisfies every constraint: each
+        write path validates, and CREATE UNIQUE INDEX / SET NOT NULL
+        validate the rows a table has. So a statement only checks what it
+        can break:
+
+        - INSERT (``insert=True``, ``rows`` = the incoming rows): NOT
+          NULL/CHECK over the incoming rows; per unique column set,
+          duplicates among the incoming keys and existing rows whose key
+          is among them — never an aggregate over the whole table. With
+          ``local`` (VALUES / SET / DEFAULT VALUES) the keys are read back
+          from the folded LocalRelation without a job and the snapshot is
+          probed by one pushed-down ``IN`` filter: 1 job per unique set.
+          INSERT … SELECT runs one semi-join probe per unique set: the
+          probe's broadcast and shuffle stages, then an ``isEmpty``.
+        - UPDATE (``rows`` = the table before, ``where`` = the rows it
+          selects, ``assigned`` = column -> new value, ``after`` = the
+          table after): NOT NULL only on assigned columns and the CHECKs
+          (row-local) only on the selected rows' new images, one
+          ``isEmpty`` probe if either applies; a unique set sharing a
+          column with ``assigned`` is group-by checked over ``after`` (2
+          jobs), any other is skipped. A non-key UPDATE of a table
+          without CHECKs runs no job here and builds no plan.
+        - MERGE (``rows`` = the table after): every constraint, one probe
+          and 2 jobs per unique set. A column type change is an UPDATE
+          of that column without ``where``.
+
+        A NOT NULL/CHECK probe is an ``isEmpty``; ``count`` runs only to
+        word the error. A write with no constraints runs no job."""
         cons = self.catalog.constraints.get(name)
         if cons:
-            conds = [F.col(c).isNull() for c in cons.not_null if c in incoming.columns]
+            conds = [
+                F.col(c).isNull()
+                for c in cons.not_null
+                if c in rows.columns and (assigned is None or c in assigned)
+            ]
             conds += [
                 ~F.coalesce(F.expr(e), F.lit(False)) for e in cons.checks
             ]
@@ -1793,46 +1879,107 @@ class StatementRouter:
                 viol = None
                 for c in conds:
                     viol = c if viol is None else (viol | c)
-                n_bad = incoming.filter(viol).count()
-                if n_bad:
+                written = rows if where is None else rows.filter(where)
+                if assigned is not None:
+                    written = written.select(
+                        *[assigned.get(c, F.col(c)).alias(c) for c in rows.columns]
+                    )
+                bad = written.filter(viol)
+                if not bad.isEmpty():
                     raise ValueError(
-                        f"constraint violation on {name}: {n_bad} row(s) "
+                        f"constraint violation on {name}: {bad.count()} row(s) "
                         f"fail NOT NULL/CHECK"
                     )
-        # uniqueness: PK + unique indexes over the post-write table state
-        unique_sets = [
-            m.columns
-            for m in self.catalog.indexes.values()
-            if m.unique and m.table == name
+        for meta in self.catalog.indexes.values():
+            cols = meta.columns
+            if not meta.unique or meta.table != name:
+                continue
+            if not all(c in rows.columns for c in cols):
+                continue
+            if assigned is not None and not set(cols) & set(assigned):
+                continue
+            if not insert:
+                self._check_unique(name, rows if after is None else after, cols)
+            elif local and all(_driver_keyable(rows.schema[c].dataType) for c in cols):
+                self._probe_local_keys(name, rows, cols)
+            else:
+                self._probe_incoming_keys(name, rows, cols)
+
+    @staticmethod
+    def _unique_violation(name: str, cols: Sequence[str]) -> ValueError:
+        return ValueError(f"unique constraint violation on {name}({', '.join(cols)})")
+
+    @staticmethod
+    def _no_nulls(cols: Sequence[str]):
+        # H2/Lealone unique indexes allow any number of NULLs (NULL !=
+        # NULL for uniqueness): a key with a NULL in it never collides
+        cond = F.col(cols[0]).isNotNull()
+        for c in cols[1:]:
+            cond &= F.col(c).isNotNull()
+        return cond
+
+    def _check_unique(self, name: str, df: DataFrame, cols: Sequence[str]) -> None:
+        """Group-by duplicate check over a whole table state: the
+        aggregate's shuffle stage, then an ``isEmpty`` that stops at the
+        first duplicate."""
+        no_dup = (
+            df.filter(self._no_nulls(cols))
+            .groupBy(*cols)
+            .count()
+            .filter(F.col("count") > 1)
+            .isEmpty()
+        )
+        if not no_dup:
+            raise self._unique_violation(name, cols)
+
+    def _probe_local_keys(
+        self, name: str, rows: DataFrame, cols: Sequence[str]
+    ) -> None:
+        """INSERT of driver-side rows: the incoming keys are compared on
+        the driver, then the snapshot is scanned once with a pushed-down
+        ``IN`` filter per key column. Existing keys are unique, so the
+        rows it returns are at most the incoming rows."""
+        keys = [
+            tuple(r) for r in rows.filter(self._no_nulls(cols)).select(*cols).collect()
         ]
-        if unique_sets:
-            st = self.catalog.tables[name]
-            combined = (
-                st.read().select(incoming.columns).unionByName(incoming)
-                if incoming_only and st.exists()
-                else incoming
-            )
-            for cols in unique_sets:
-                if not all(c in combined.columns for c in cols):
-                    continue
-                # H2/Lealone unique indexes allow any number of NULLs
-                # (NULL != NULL for uniqueness) — exclude rows with a NULL
-                # in the indexed column set from the duplicate count.
-                no_nulls = None
-                for c in cols:
-                    cond = F.col(c).isNotNull()
-                    no_nulls = cond if no_nulls is None else (no_nulls & cond)
-                no_dup = (
-                    combined.filter(no_nulls)
-                    .groupBy(*cols)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .isEmpty()
-                )
-                if not no_dup:
-                    raise ValueError(
-                        f"unique constraint violation on {name}({', '.join(cols)})"
-                    )
+        if not keys:
+            return
+        if len(set(keys)) < len(keys):
+            raise self._unique_violation(name, cols)
+        st = self.catalog.tables[name]
+        if not st.exists():
+            return
+        # one SQL string, not a Column per literal: a py4j call each
+        types = [rows.schema[c].dataType for c in cols]
+        lits = [[_key_literal(v, t) for v, t in zip(k, types)] for k in keys]
+        conds = [
+            f"`{c}` IN ({', '.join(dict.fromkeys(row[i] for row in lits))})"
+            for i, c in enumerate(cols)
+        ]
+        if len(cols) > 1:
+            # the per-column lists push down; the tuple list makes it exact
+            def tup(vals):
+                return "named_struct(" + ", ".join(
+                    f"'{c}', {v}" for c, v in zip(cols, vals)
+                ) + ")"
+
+            keyed = tup(f"`{c}`" for c in cols)
+            conds.append(f"{keyed} IN ({', '.join(tup(row) for row in lits)})")
+        if st.read().where(" AND ".join(conds)).select(*cols).collect():
+            raise self._unique_violation(name, cols)
+
+    def _probe_incoming_keys(
+        self, name: str, rows: DataFrame, cols: Sequence[str]
+    ) -> None:
+        """INSERT … SELECT: incoming keys plus the existing keys that are
+        among them (a semi-join whose build side is the incoming keys),
+        grouped — any key seen twice is a duplicate."""
+        keys = rows.filter(self._no_nulls(cols)).select(*cols)
+        st = self.catalog.tables[name]
+        if st.exists():
+            hits = st.read().select(*cols).join(keys, list(cols), "left_semi")
+            keys = keys.unionByName(hits)
+        self._check_unique(name, keys, cols)
 
     def _update(self, s: str) -> DataFrame:
         m = re.match(
@@ -1850,18 +1997,26 @@ class StatementRouter:
             k, v = part.split("=", 1)
             assignments[k.strip().lower()] = F.expr(v.strip())
         cond = F.expr(m.group("where")) if m.group("where") else F.lit(True)
+        df = st.read()
         if m.group("limit"):
             from .operators.dml import apply_update_limit
 
             pk = self._pk_of(name)
             new_df = apply_update_limit(
-                st.read(), cond, assignments, int(m.group("limit")), pk
+                df, cond, assignments, int(m.group("limit")), pk
+            )
+            # LIMIT picks among the matching rows: check every row after
+            self._validate_write(
+                name, new_df, assigned={c: F.col(c) for c in assignments}, after=new_df
             )
         else:
             from .operators.dml import apply_update
 
-            new_df = apply_update(st.read(), cond, assignments)
-        self._validate_write(name, new_df)
+            new_df = apply_update(df, cond, assignments)
+            self._validate_write(
+                name, df, where=cond.isNotNull() & cond, assigned=assignments,
+                after=new_df,
+            )
         st.write(new_df)
         self.catalog.refresh_view(name)
         return self._ok(f"updated {name}")

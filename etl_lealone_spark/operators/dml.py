@@ -919,31 +919,35 @@ def snapshot_diff(
             f"snapshot schemas differ: {old_df.columns} vs {new_df.columns}"
         )
 
+    # the plan is built from SQL expression strings: one py4j call per
+    # projection instead of several per column
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
+
+    rowhash = (
+        "md5(concat_ws('\\u001f', "
+        + ", ".join(f"coalesce(cast({q(c)} AS string), '\\u0000')" for c in val_cols)
+        + "))"
+        if val_cols
+        else "''"
+    )
+
     def hashed(df: DataFrame, side: str) -> DataFrame:
-        h = F.md5(F.concat_ws("\x1f", *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in val_cols
-        ])) if val_cols else F.lit("")
-        return df.select(
-            *[F.col(c).alias(f"{side}_{c}") for c in df.columns],
-            h.alias(f"{side}_rowhash"),
+        # ``__in_{side}`` marks the side a joined row came from, so a
+        # NULL key or a value updated to NULL is never taken for absence
+        return df.selectExpr(
+            *[f"{q(c)} AS {q(f'{side}_{c}')}" for c in df.columns],
+            f"{rowhash} AS __hash_{side}",
+            f"true AS __in_{side}",
         )
 
-    o = hashed(old_df, "o")
-    n = hashed(new_df, "n")
-    cond = [o[f"o_{k}"].eqNullSafe(n[f"n_{k}"]) for k in keys]
-    joined = o.join(n, cond, "full_outer")
-    change = (
-        F.when(o[f"o_{keys[0]}"].isNull() & F.lit(True), F.lit("insert"))
-        .when(n[f"n_{keys[0]}"].isNull() & F.lit(True), F.lit("delete"))
-        .when(F.col("o_rowhash") != F.col("n_rowhash"), F.lit("update"))
-        .otherwise(F.lit(None))
-    )
-    out_cols = [
-        F.coalesce(F.col(f"n_{c}"), F.col(f"o_{c}")).alias(c)
-        for c in new_df.columns
-    ]
-    return (
-        joined.withColumn("change_type", change)
-        .filter(F.col("change_type").isNotNull())
-        .select(*out_cols, "change_type")
-    )
+    on = " AND ".join(f"{q(f'o_{k}')} <=> {q(f'n_{k}')}" for k in keys)
+    joined = hashed(old_df, "o").join(hashed(new_df, "n"), F.expr(on), "full_outer")
+    return joined.selectExpr(
+        *[
+            f"CASE WHEN __in_n IS NULL THEN {q(f'o_{c}')} ELSE {q(f'n_{c}')} END AS {q(c)}"
+            for c in new_df.columns
+        ],
+        "CASE WHEN __in_o IS NULL THEN 'insert' WHEN __in_n IS NULL THEN 'delete' "
+        "WHEN __hash_o != __hash_n THEN 'update' END AS change_type",
+    ).where("change_type IS NOT NULL")

@@ -594,7 +594,7 @@ def _ckpt_tmp(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-def _drain_stream(spark, sdf, tmp: str, qname: str, state_partitions: int = 4):
+def _drain_stream(spark, sdf, tmp: str, qname: str, state_partitions: int = 2):
     """Workload-side alias of the public knob-bearing drain
     (streaming.ingest.drain_to_batch, r9 verdict task 6) — the
     ``state_partitions`` sizing guidance lives on that docstring."""
@@ -994,7 +994,7 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         totals = running_user_totals(
             stream_from_parquet_dir(spark, os.path.join(feed, "ev"))
         )
-        # state_partitions=8 here, against the suite's 4: the stateful
+        # state_partitions=8 here, against the suite's 2: the stateful
         # stage is applyInPandasWithState, so partition count = Python
         # workers running concurrently per trigger — the Arrow/Python
         # stage wants MORE parallelism where the JVM stateful aggs want

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -36,3 +37,23 @@ def tables(spark, sf_dir):
     from etl_lealone_spark.tables import load_tables
 
     return load_tables(spark, sf_dir)
+
+
+@pytest.fixture()
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)``: the number of Spark jobs ``fn()`` starts — the
+    tool of the job-count guards."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobcount-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count guard")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

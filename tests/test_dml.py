@@ -371,3 +371,19 @@ def test_diff_sql_surface(spark, tmp_path):
         ).collect()
     }
     assert rows == {2: ("update", 99), 3: ("insert", 30)}
+
+
+def test_snapshot_diff_null_values_and_keys(spark):
+    """A value updated to NULL shows the new (NULL) image, and a matched
+    row whose first key column is NULL is unchanged, not an insert."""
+    from etl_lealone_spark.operators.dml import snapshot_diff
+
+    old = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20), (None, "c", 30)], "k int, s string, v int"
+    )
+    new = spark.createDataFrame(
+        [(1, None, 10), (2, "b", 20), (None, "c", 30)], "k int, s string, v int"
+    )
+    got = [tuple(r) for r in snapshot_diff(old, new, ["k"]).collect()]
+    assert got == [(1, None, 10, "update")]
+    assert snapshot_diff(new, new, ["k", "s", "v"]).count() == 0

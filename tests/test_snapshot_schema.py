@@ -13,8 +13,6 @@ per read). These tests pin the two halves of that contract:
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -160,19 +158,6 @@ def test_opened_table_infers_once(spark, tmp_path):
     _assert_pinned(spark, opened)
 
 
-def _jobs_run_by(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count guard")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "stmt",
     [
@@ -181,9 +166,9 @@ def _jobs_run_by(spark, fn) -> int:
     ],
     ids=["delete", "insert"],
 )
-def test_warm_dml_runs_only_its_write_job(spark, tmp_path, stmt):
+def test_warm_dml_runs_only_its_write_job(spark, tmp_path, stmt, jobs_run_by):
     es = EngineSession(spark, warehouse=str(tmp_path))
     es.sql("CREATE TABLE jc (id INT, s VARCHAR(5))")
     es.sql("INSERT INTO jc VALUES " + ", ".join(f"({i}, 'x')" for i in range(10)))
     es.sql(stmt.format(i=1))  # warm
-    assert _jobs_run_by(spark, lambda: es.sql(stmt.format(i=2))) == 1
+    assert jobs_run_by(lambda: es.sql(stmt.format(i=2))) == 1
