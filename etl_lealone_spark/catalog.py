@@ -1403,12 +1403,32 @@ class StatementRouter:
             st.write(df.drop(col))
         elif op == "RENAME COLUMN":
             cm = re.match(rf"({_IDENT})\s+TO\s+({_IDENT})", rest, re.IGNORECASE)
-            st.write(df.withColumnRenamed(cm.group(1).lower(), cm.group(2).lower()))
+            return self._rename_column(name, cm.group(1).lower(), cm.group(2).lower())
         elif op == "RENAME TO":
             # logical rename only: catalog key changes, storage dir keeps
-            # the original physical name (zero data movement)
+            # the original physical name (zero data movement); the
+            # constraint metadata moves to the new key with it
             new = rest.split()[0].lower()
-            self.catalog.tables[new] = self.catalog.tables.pop(name)
+            cat = self.catalog
+            cat.tables[new] = cat.tables.pop(name)
+            if name in cat.constraints:
+                cat.constraints[new] = cat.constraints.pop(name)
+            if name in cat.table_ddl:
+                cat.table_ddl[new] = re.sub(
+                    rf"(\bTABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?){re.escape(name)}\b",
+                    lambda mm: mm.group(1) + new,
+                    cat.table_ddl.pop(name),
+                    count=1,
+                    flags=re.IGNORECASE,
+                )
+            for iname, meta in list(cat.indexes.items()):
+                if meta.table == name:
+                    del cat.indexes[iname]
+                    if iname == f"__pk_{name}":
+                        iname = f"__pk_{new}"
+                    cat.indexes[iname] = IndexMeta(
+                        iname, new, meta.columns, unique=meta.unique
+                    )
             self.spark.catalog.dropTempView(name)
             self.catalog.refresh_view(new)
             return self._ok(f"renamed {name} to {new}")
@@ -1446,17 +1466,7 @@ class StatementRouter:
             return self._ok(f"altered {name}.{col} nullable")
         m = re.match(rf"RENAME\s+TO\s+(?P<new>{_IDENT})\s*$", rest, re.IGNORECASE)
         if m:
-            new = m.group("new").lower()
-            st.write(st.read().withColumnRenamed(col, new))
-            for attr in ("not_null", "identity"):
-                lst = getattr(cons, attr)
-                if col in lst:
-                    lst[lst.index(col)] = new
-            for d in (cons.defaults, cons.computed):
-                if col in d:
-                    d[new] = d.pop(col)
-            self.catalog.refresh_view(name)
-            return self._ok(f"renamed {name}.{col} to {new}")
+            return self._rename_column(name, col, m.group("new").lower())
         # type change: [SET DATA TYPE] <type>[(p[,s])]
         m = re.match(
             rf"(?:SET\s+DATA\s+TYPE\s+)?(?P<typ>{_IDENT})"
@@ -1481,6 +1491,40 @@ class StatementRouter:
             self.catalog.refresh_view(name)
             return self._ok(f"altered {name}.{col} type to {spark_type}")
         raise ValueError(f"unsupported ALTER COLUMN: {rest[:80]}")
+
+    def _rename_column(self, name: str, old: str, new: str) -> DataFrame:
+        """Both column-rename forms: a projection, plus every constraint
+        entry naming the column — NOT NULL, identity, DEFAULT and computed
+        entries, unique-index column lists, and identifiers in CHECK and
+        computed expressions (outside string literals). A write checks
+        only the constraints it can break, by column name, so a stale
+        name would silently skip the renamed column's checks."""
+        from .dialect import _sub_outside_literals
+
+        st = self.catalog.table(name)
+        st.write(st.read().withColumnRenamed(old, new))
+        ident = rf"\b{re.escape(old)}\b(?!\s*\()"
+
+        def renamed(sql: str) -> str:
+            return _sub_outside_literals(ident, lambda _m: new, sql, re.IGNORECASE)
+
+        cons = self.catalog.constraints.get(name)
+        if cons:
+            for cols in (cons.not_null, cons.identity):
+                cols[:] = [new if c == old else c for c in cols]
+            for exprs in (cons.defaults, cons.computed):
+                if old in exprs:
+                    exprs[new] = exprs.pop(old)
+            cons.computed.update({c: renamed(e) for c, e in cons.computed.items()})
+            cons.checks[:] = [renamed(e) for e in cons.checks]
+        for iname, meta in list(self.catalog.indexes.items()):
+            if meta.table == name and old in meta.columns:
+                cols = [new if c == old else c for c in meta.columns]
+                self.catalog.indexes[iname] = IndexMeta(
+                    iname, name, cols, unique=meta.unique
+                )
+        self.catalog.refresh_view(name)
+        return self._ok(f"renamed {name}.{old} to {new}")
 
     def _runscript(self, s: str) -> DataFrame:
         """RUNSCRIPT FROM 'file' (RunScript.java): execute statements
@@ -1661,10 +1705,10 @@ class StatementRouter:
                 raise KeyError(f"table not found: {name}")
             # Shallow clones hold symlinks into this table's physical
             # files; a hard delete would silently corrupt them (VACUUM
-            # already protects via _external_refs — DROP is the other
+            # already protects via _links_into — DROP is the other
             # hard-delete path). RESTRICT by default; CASCADE drops the
             # dependent clones first (recursively, clone-of-clone safe).
-            deps = self._dependent_tables(name)
+            deps = self._links_into(name)
             if deps:
                 if (m.group("mode") or "").upper() != "CASCADE":
                     raise ValueError(
@@ -2034,22 +2078,13 @@ class StatementRouter:
         st = self.catalog.table(name)
         cond = F.expr(m.group("where")) if m.group("where") else F.lit(True)
         if m.group("limit"):
-            # DELETE LIMIT: first n matching rows in PK order (Delete.java:34)
-            pk = self._pk_of(name)
-            df = st.read()
-            picked = (
-                df.filter(cond.isNotNull() & cond)
-                .select(*pk)
-                .orderBy(*pk)
-                .limit(int(m.group("limit")))
-                .withColumn("__del", F.lit(True))
+            from .operators.dml import apply_delete_limit
+
+            st.write(
+                apply_delete_limit(
+                    st.read(), cond, int(m.group("limit")), self._pk_of(name)
+                )
             )
-            remaining = (
-                df.join(F.broadcast(picked), on=pk, how="left")
-                .filter(F.col("__del").isNull())
-                .drop("__del")
-            )
-            st.write(remaining)
         else:
             st.delete(cond)
         self.catalog.refresh_view(name)
@@ -2086,37 +2121,15 @@ class StatementRouter:
             )
         else:
             src = self.spark.sql(rewrite(rest, session=self.session)).toDF(*cols)
+        # a column the statement leaves out keeps its target value
         target_schema = dict(st.read().dtypes)
         aligned = src.select(
             *[
-                (F.col(c) if c in src.columns else F.lit(None))
-                .cast(target_schema[c])
+                (F.col(c).cast(target_schema[c]) if c in target_schema else F.col(c))
                 .alias(c)
-                for c in target_cols
+                for c in cols
             ]
         )
-        # partial-row source (cols ⊂ target): keep target values for
-        # unspecified columns by coalescing after the key join
-        if set(cols) < set(target_cols):
-            existing = st.read()
-            sdf = aligned.select(
-                *[F.col(c).alias(f"__n_{c}") for c in target_cols]
-            )
-            cond = None
-            for k in keys:
-                c = existing[k] == sdf[f"__n_{k}"]
-                cond = c if cond is None else cond & c
-            joined = sdf.join(existing, cond, "left")
-            aligned = joined.select(
-                *[
-                    (
-                        F.col(f"__n_{c}")
-                        if c in cols or c in keys
-                        else F.coalesce(existing[c], F.col(f"__n_{c}"))
-                    ).alias(c)
-                    for c in target_cols
-                ]
-            )
         merged = merge_by_key(st.read(), aligned, keys)
         self._validate_write(name, merged)
         st.write(merged)
@@ -2626,64 +2639,27 @@ class StatementRouter:
         st = self.catalog.table(name)
         keep = int(m.group("n") or 1)
         before = st.versions()
-        st.vacuum(keep_last=keep, protected=self._external_refs(name))
+        protected = set().union(*self._links_into(name).values())
+        st.vacuum(keep_last=keep, protected=protected)
         after = st.versions()
         return self._ok(
             f"vacuumed {name}: {len(before) - len(after)} snapshots removed, "
             f"{len(after)} kept"
         )
 
-    def _external_refs(self, name: str) -> "set[int]":
-        """Versions of ``name`` that OTHER registered tables link into —
-        shallow clones hold links that the table's own vacuum
-        reachability scan (which only walks its own dirs) cannot see.
-        Metadata-only directory walk; transitive dependencies are then
-        expanded by vacuum's existing reference graph."""
+    def _links_into(self, name: str) -> "dict[str, set[int]]":
+        """OTHER registered tables whose links resolve into ``name``'s
+        version dirs — shallow clones of it, or of its clones — mapped to
+        those versions. A table's own vacuum walks only its own dirs, so
+        VACUUM protects these versions and DROP refuses while any exist.
+        Metadata-only."""
         st = self.catalog.table(name)
-        base_real = os.path.realpath(os.path.join(st.root, st.name))
-        refs: set[int] = set()
-        for oname, ot in self.catalog.tables.items():
-            if oname == name:
-                continue
-            obase = os.path.join(ot.root, ot.name)
-            for dirpath, dirnames, filenames in os.walk(obase):
-                for d in list(dirnames) + list(filenames):
-                    p = os.path.join(dirpath, d)
-                    if not os.path.islink(p):
-                        continue
-                    rp = os.path.realpath(p)
-                    if not rp.startswith(base_real + os.sep):
-                        continue
-                    top = os.path.relpath(rp, base_real).split(os.sep, 1)[0]
-                    if top.startswith("v") and top[1:].isdigit():
-                        refs.add(int(top[1:]))
-        return refs
-
-    def _dependent_tables(self, name: str) -> "set[str]":
-        """Names of OTHER registered tables holding symlinks that resolve
-        into ``name``'s physical files — i.e. shallow clones of it (or of
-        its clones). Same directory walk as :meth:`_external_refs` but
-        keyed by owner table instead of version number; metadata-only."""
-        st = self.catalog.tables.get(name)
-        if st is None:
-            return set()
-        base_real = os.path.realpath(os.path.join(st.root, st.name))
-        deps: set[str] = set()
-        for oname, ot in self.catalog.tables.items():
-            if oname == name:
-                continue
-            obase = os.path.join(ot.root, ot.name)
-            for dirpath, dirnames, filenames in os.walk(obase):
-                if oname in deps:
-                    break
-                for d in list(dirnames) + list(filenames):
-                    p = os.path.join(dirpath, d)
-                    if os.path.islink(p) and os.path.realpath(p).startswith(
-                        base_real + os.sep
-                    ):
-                        deps.add(oname)
-                        break
-        return deps
+        refs = {
+            oname: ot.links_into(st)
+            for oname, ot in self.catalog.tables.items()
+            if oname != name
+        }
+        return {oname: vs for oname, vs in refs.items() if vs}
 
     def _use(self, s: str) -> DataFrame:
         """``USE [=] schema`` (Parser.java:5063 parseUse — sugar for

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Mapping, Optional, Sequence
+from typing import Callable, Mapping, Optional, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +53,32 @@ def apply_update(
     )
 
 
+def _pick_first(
+    df: DataFrame, condition: Column, limit: int, order_by: Sequence[str]
+) -> tuple[DataFrame, Column]:
+    """``df`` marked with the first ``limit`` rows matching ``condition``
+    in ascending ``order_by`` — the pick of UPDATE/DELETE ... LIMIT n.
+
+    The reference takes the first n rows in scan order; scan order is not
+    reproducible on a distributed engine, so we pin ascending
+    ``order_by`` — which must be a UNIQUE key (the PK) — a documented
+    semantic refinement (SURVEY.md §7 "what's hard").
+
+    Scale: only MATCHING rows are globally ranked (filter → top-k via
+    TakeOrderedAndProject, no full-table window), then a broadcast-able
+    join marks the rows. Returns the marked frame and the "picked"
+    predicate over it."""
+    cond = condition.isNotNull() & condition
+    keys = [F.col(c) for c in order_by]
+    picked = df.filter(cond).select(*order_by).orderBy(*keys).limit(limit)
+    marked = df.join(
+        F.broadcast(picked.withColumn("__picked", F.lit(True))),
+        on=list(order_by),
+        how="left",
+    )
+    return marked, F.coalesce(F.col("__picked"), F.lit(False))
+
+
 def apply_update_limit(
     df: DataFrame,
     condition: Column,
@@ -59,26 +86,9 @@ def apply_update_limit(
     limit: int,
     order_by: Sequence[str],
 ) -> DataFrame:
-    """UPDATE ... WHERE cond LIMIT n (Update.java:44,139-150).
-
-    The reference updates the first n rows in scan order; scan order is
-    not reproducible on a distributed engine, so we pin ascending
-    ``order_by`` — which must be a UNIQUE key (the PK) — a documented
-    semantic refinement (SURVEY.md §7 "what's hard").
-
-    Scale: only MATCHING rows are globally ranked (filter → top-k via
-    TakeOrderedAndProject, no full-table window), then a broadcast-able
-    semi-join marks the rows to rewrite.
-    """
-    cond = condition.isNotNull() & condition
-    keys = [F.col(c) for c in order_by]
-    picked = df.filter(cond).select(*order_by).orderBy(*keys).limit(limit)
-    marked = df.join(
-        F.broadcast(picked.withColumn("__upd_hit", F.lit(True))),
-        on=list(order_by),
-        how="left",
-    )
-    eff = F.coalesce(F.col("__upd_hit"), F.lit(False))
+    """UPDATE ... WHERE cond LIMIT n (Update.java:44,139-150), rows picked
+    by :func:`_pick_first`."""
+    marked, eff = _pick_first(df, condition, limit, order_by)
     return marked.select(
         *[
             F.when(eff, assignments[c]).otherwise(F.col(c)).alias(c)
@@ -87,6 +97,15 @@ def apply_update_limit(
             for c in df.columns
         ]
     )
+
+
+def apply_delete_limit(
+    df: DataFrame, condition: Column, limit: int, order_by: Sequence[str]
+) -> DataFrame:
+    """DELETE ... WHERE cond LIMIT n (Delete.java:34), rows picked by
+    :func:`_pick_first`."""
+    marked, picked = _pick_first(df, condition, limit, order_by)
+    return marked.filter(~picked).select(*df.columns)
 
 
 def apply_delete(df: DataFrame, condition: Column) -> DataFrame:
@@ -110,10 +129,21 @@ def merge_by_key(
     unmatched target rows survive. A NULL in a source KEY column is an
     error (reference raises COLUMN_CONTAINS_NULL_VALUES before the upsert).
 
+    ``source`` may lack some non-key target columns (MERGE with a column
+    list): a matched row keeps the target's value there, an inserted row
+    gets NULL. It must not carry a column the target lacks.
+
     Implemented as a single full-outer join on the key with an explicit
     source-presence marker — one shuffle, or zero when the source
-    broadcasts. ``source`` must have the same schema as ``target``.
+    broadcasts.
     """
+    extra = [c for c in source.columns if c not in target.columns]
+    missing = [k for k in keys if k not in source.columns]
+    if extra or missing:
+        raise ValueError(
+            f"MERGE source columns {source.columns} must be target columns "
+            f"including every key {list(keys)}"
+        )
     null_key = None
     for k in keys:
         c = F.col(k).isNull()
@@ -139,6 +169,9 @@ def merge_by_key(
         if c in keys:
             # keys are equal when matched and never NULL on the source side
             out_cols.append(F.coalesce(target[c], s[f"__s_{c}"]).alias(c))
+        elif c not in source.columns:
+            # NULL on an inserted row: the target side of the join is empty
+            out_cols.append(target[c])
         else:
             # whole source row wins when present — even if the value is NULL
             out_cols.append(
@@ -240,6 +273,23 @@ class SnapshotTable:
     the full-snapshot rewrite cost becomes proportional to the data
     actually touched.
 
+    Commit sequence (:meth:`_commit`, the one path that publishes a
+    version): take the next version number, clear an uncommitted leftover
+    there, fill the directory, pin its schema, then advance ``version``.
+    Filling ends with the ``_SUCCESS`` marker — Spark's output committer
+    writes it, a metadata-only commit (restore, clone) writes it itself.
+    A version directory without the marker is uncommitted: a crash
+    mid-mutation leaves one, readers skip it and the next commit clears it.
+
+    Link policy (:meth:`_link_version`, the one place that makes a link):
+    a new version shares data with its source version through symlinks,
+    one per data file or one per untouched leaf partition directory
+    (metadata-only on a local FS; a manifest entry on an object store).
+    Every link is RELATIVE, so a table tree can be renamed or copied, and
+    points at its fully resolved target, never at another link, so the
+    link-reference scan (:meth:`_link_refs`) sees every version a
+    surviving version depends on and vacuum never frees one of them.
+
     Schema invariant: a committed version directory is immutable, so its
     schema is fixed at commit and this object keeps it (the table owns
     its columns, as the reference's StandardTable does). Reads pass it to
@@ -267,45 +317,153 @@ class SnapshotTable:
         self.root = root
         self.name = name
         self.partition_by = list(partition_by or [])
-        self._version = self._latest_version()
+        self._version = max(self.versions(), default=-1)
         # version -> (_SUCCESS mtime_ns, data-column schema)
         self._schemas: dict[int, tuple[Optional[int], StructType]] = {}
 
-    # -- snapshot bookkeeping -----------------------------------------
+    # -- snapshot layout ------------------------------------------------
+    def _base(self) -> str:
+        return os.path.join(self.root, self.name)
+
     def _dir(self, version: int) -> str:
-        return os.path.join(self.root, self.name, f"v{version:06d}")
+        return os.path.join(self._base(), f"v{version:06d}")
+
+    @staticmethod
+    def _version_of(entry: str) -> Optional[int]:
+        """``n`` for a ``v<n>`` directory name, else None."""
+        return int(entry[1:]) if entry[:1] == "v" and entry[1:].isdigit() else None
+
+    def _version_dirs(self) -> list[int]:
+        """Every version directory, uncommitted ones included, oldest
+        first."""
+        if not os.path.isdir(self._base()):
+            return []
+        found = (self._version_of(d) for d in os.listdir(self._base()))
+        return sorted(v for v in found if v is not None)
 
     @staticmethod
     def _committed(vdir: str) -> bool:
-        """A snapshot directory is COMMITTED only once Spark's output
-        committer has written its _SUCCESS marker — the final step of
-        every mutation path (write/insert/_pruned_rewrite all end in a
-        Spark write into the dir). A crash mid-mutation leaves a torn
-        dir without the marker; treating it as latest would silently
-        drop the rows the interrupted job had not yet written (e.g. a
-        pruned rewrite's touched buckets), so readers must skip it."""
+        """Readers must skip an uncommitted version: treating a torn dir
+        as latest would silently drop the rows the interrupted job had
+        not yet written (e.g. a pruned rewrite's touched buckets)."""
         return os.path.exists(os.path.join(vdir, "_SUCCESS"))
 
-    def _latest_version(self) -> int:
-        base = os.path.join(self.root, self.name)
-        if not os.path.isdir(base):
-            return -1
-        versions = [
-            int(d[1:])
-            for d in os.listdir(base)
-            if d.startswith("v")
-            and d[1:].isdigit()
-            and self._committed(os.path.join(base, d))
-        ]
-        return max(versions, default=-1)
-
     def _clear_torn(self, version: int) -> None:
-        """Remove an uncommitted leftover at ``version`` (a previous
-        crash's torn dir) so the new mutation starts clean — appending
-        beside torn remains would merge two half-writes."""
+        """Remove an uncommitted leftover at ``version`` so the new
+        mutation starts clean — appending beside torn remains would merge
+        two half-writes."""
         d = self._dir(version)
         if os.path.isdir(d) and not self._committed(d):
             shutil.rmtree(d, ignore_errors=True)
+
+    def _commit(self, fill: Callable[[str], Optional[StructType]]) -> int:
+        """The commit sequence (class docstring). ``fill(dir)`` writes the
+        new version's directory, ending with its ``_SUCCESS`` marker, and
+        returns the schema to pin (None: inferred on first read)."""
+        new_version = self._version + 1
+        self._clear_torn(new_version)
+        schema = fill(self._dir(new_version))
+        if schema is not None:
+            self._remember(new_version, schema)
+        self._version = new_version
+        return new_version
+
+    def _save(self, df: DataFrame, vdir: str, mode: str) -> None:
+        writer = df.write.mode(mode)
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        writer.parquet(vdir)
+
+    @staticmethod
+    def _partition_value(entry: str) -> str:
+        """The key component a ``col=value`` partition directory stands
+        for: the value hive-unescaped ('a%3Ab' -> 'a:b'; strict
+        two-hex-digit escapes, multi-byte sequences as UTF-8). A NULL
+        partition keeps its directory name as its key, which is also how
+        :meth:`_key_exprs` spells a NULL row."""
+        return unquote(entry.split("=", 1)[1])
+
+    def _key_exprs(self) -> list[str]:
+        """SQL for a row's partition key, spelled as :meth:`_partition_value`
+        reads the directory Spark writes the row to: the value cast to
+        string, NULL and '' as the default partition."""
+        return [
+            f"coalesce(nullif(cast(`{c.replace('`', '``')}` AS string), ''), "
+            "'__HIVE_DEFAULT_PARTITION__')"
+            for c in self.partition_by
+        ]
+
+    def _touched(self, rows: DataFrame) -> DataFrame:
+        """The distinct partition keys of ``rows``, as ``__key<i>``."""
+        keys = [F.expr(e).alias(f"__key{i}") for i, e in enumerate(self._key_exprs())]
+        return rows.select(*keys).distinct()
+
+    def _link_version(
+        self,
+        src: str,
+        dst: str,
+        touched: "set[tuple]" = frozenset(),
+        link_touched: bool = False,
+    ) -> None:
+        """Link version dir ``src``'s data into ``dst`` by the link
+        policy: data files of an unpartitioned table one link each,
+        untouched leaf partitions one directory link each. A leaf whose
+        key is in ``touched`` is skipped (the caller rewrites it) or, with
+        ``link_touched``, linked file by file, so an append lands beside
+        the old files and never through a directory link into ``src``."""
+        os.makedirs(dst, exist_ok=True)
+        depth = len(self.partition_by)
+
+        def link(target: str, path: str) -> None:
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            os.symlink(
+                os.path.relpath(os.path.realpath(target), os.path.dirname(path)),
+                path,
+            )
+
+        def walk(s: str, d: str, key: tuple) -> None:
+            for entry in os.listdir(s):
+                sp, dp = os.path.join(s, entry), os.path.join(d, entry)
+                if len(key) == depth:
+                    if not entry.startswith(("_", ".")) and not os.path.isdir(sp):
+                        link(sp, dp)
+                elif "=" in entry and os.path.isdir(sp):
+                    k = key + (self._partition_value(entry),)
+                    if len(k) < depth or (k in touched and link_touched):
+                        walk(sp, dp, k)
+                    elif k not in touched:
+                        link(sp, dp)
+
+        walk(src, dst, ())
+
+    def _link_refs(self) -> dict[int, set[tuple[str, int]]]:
+        """The link-reference scan: for every version dir, uncommitted
+        ones included (an in-flight commit's links must still protect
+        their targets), the (resolved table dir, version) pairs its links
+        resolve into. Metadata-only."""
+        refs: dict[int, set[tuple[str, int]]] = {}
+        for v in self._version_dirs():
+            out = refs[v] = set()
+            for dirpath, dirnames, filenames in os.walk(self._dir(v)):
+                for entry in dirnames + filenames:
+                    p = os.path.join(dirpath, entry)
+                    if not os.path.islink(p):
+                        continue
+                    # the version dir is the last v<n> component: partition
+                    # dirs hold '=' and data files are part-*
+                    head, tail = os.path.split(os.path.realpath(p))
+                    while tail and self._version_of(tail) is None:
+                        head, tail = os.path.split(head)
+                    if tail:
+                        out.add((head, self._version_of(tail)))
+        return refs
+
+    def links_into(self, other: "SnapshotTable") -> set[int]:
+        """Versions of ``other`` that this table's links resolve into —
+        e.g. the source versions a shallow clone shares."""
+        base = os.path.realpath(other._base())
+        refs = self._link_refs().values()
+        return {t for pairs in refs for d, t in pairs if d == base}
 
     def _marker_mtime(self, version: int) -> Optional[int]:
         try:
@@ -326,14 +484,14 @@ class SnapshotTable:
             return None
         return hit[1]
 
-    def _inherit_schema(
-        self, version: int, src: "SnapshotTable", src_version: int
-    ) -> None:
-        """A metadata-only or append commit keeps its source's schema —
-        when the source's is known; otherwise the first read infers it."""
-        known = src._known_schema(src_version)
-        if known is not None:
-            self._remember(version, known)
+    def _check_version(self, version: int) -> None:
+        """Raise for an unknown version, so a typo cannot silently read
+        the wrong data."""
+        if version not in self.versions():
+            raise ValueError(
+                f"table {self.name} has no version {version} "
+                f"(available: {self.versions()})"
+            )
 
     @property
     def version(self) -> int:
@@ -349,17 +507,13 @@ class SnapshotTable:
         Every committed version remains readable until vacuumed —
         ``read(version=n)`` is the AS-OF query the snapshot layout gives
         for free (each version is a self-contained directory), the same
-        contract lakehouse table formats expose. Raises for unknown
-        versions so a typo cannot silently read the wrong data.
+        contract lakehouse table formats expose.
         """
         if not self.exists():
             raise FileNotFoundError(f"table {self.name} has no snapshot")
+        if version is not None:
+            self._check_version(version)
         v = self._version if version is None else version
-        if version is not None and version not in self.versions():
-            raise ValueError(
-                f"table {self.name} has no version {version} "
-                f"(available: {self.versions()})"
-            )
         schema = self._known_schema(v)
         if schema is None:
             df = self.spark.read.parquet(self._dir(v))
@@ -368,33 +522,19 @@ class SnapshotTable:
         return self.spark.read.schema(schema).parquet(self._dir(v))
 
     def versions(self) -> list[int]:
-        """All readable snapshot versions, oldest first."""
-        base = os.path.join(self.root, self.name)
-        if not os.path.isdir(base):
-            return []
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(base)
-            if d.startswith("v")
-            and d[1:].isdigit()
-            and self._committed(os.path.join(base, d))
-        )
+        """All readable (committed) snapshot versions, oldest first."""
+        return [v for v in self._version_dirs() if self._committed(self._dir(v))]
 
     def commit_ts(self, version: int) -> float:
         """Commit timestamp (epoch seconds) of a version — the mtime of
-        its ``_SUCCESS`` marker, i.e. the instant the committer PUBLISHED
-        the snapshot; no extra metadata file to keep consistent. Every
-        commit path (Spark write, restore, clone) ends by creating the
-        marker, so the timestamp exists iff the version is readable.
+        its ``_SUCCESS`` marker, i.e. the instant the commit PUBLISHED
+        the snapshot; no extra metadata file to keep consistent. The
+        timestamp exists iff the version is readable.
         ``os.rename`` of the tree preserves it (the relocatability
         contract); an archival copy should use ``cp -p`` or the
         TIMESTAMP AS OF ordering within one second is lost (VERSION AS
         OF is unaffected either way)."""
-        if version not in self.versions():
-            raise ValueError(
-                f"table {self.name} has no version {version} "
-                f"(available: {self.versions()})"
-            )
+        self._check_version(version)
         return os.path.getmtime(os.path.join(self._dir(version), "_SUCCESS"))
 
     def version_as_of_timestamp(self, ts: float) -> int:
@@ -418,167 +558,60 @@ class SnapshotTable:
             raise ValueError(f"table {self.name} already exists (mode={mode})")
         if mode == "ignore" and self.exists():
             return self._version
-        new_version = self._version + 1
-        self._clear_torn(new_version)
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self._dir(new_version))
-        self._remember(new_version, df.schema)
-        self._version = new_version
-        return new_version
 
-    @staticmethod
-    def _unescape_hive(val: str) -> str:
-        """Hive-style partition-dir unescaping: %XX byte escapes back to
-        the raw value ('a%3Ab' -> 'a:b'). Directory names escape chars
-        that are unsafe in paths; the DataFrame side carries the RAW
-        value, so every dir-name-vs-column-value comparison must
-        unescape first or special-char partitions silently mismatch.
-        urllib's unquote is the correct decoder: strict two-hex-digit
-        escapes only (a literal '%' followed by non-hex stays literal),
-        multi-byte %XX%XX sequences decode as UTF-8."""
-        if "%" not in val:
-            return val
-        from urllib.parse import unquote
+        def fill(vdir: str) -> StructType:
+            self._save(df, vdir, "overwrite")
+            return df.schema
 
-        return unquote(val)
-
-    def _clone_partitions_except(
-        self,
-        new_version: int,
-        touched: DataFrame,
-        src_version: Optional[int] = None,
-    ) -> None:
-        """Hard-link the untouched partition dirs of the source snapshot
-        (current by default) into the new snapshot (metadata-only on a
-        local FS; a cheap server-side copy/manifest entry on object
-        stores)."""
-        src = self._dir(self._version if src_version is None else src_version)
-        dst = self._dir(new_version)
-        os.makedirs(dst, exist_ok=True)
-        touched_dirs = {
-            tuple(r[c] for c in self.partition_by) for r in touched.collect()
-        }
-
-        def walk(cur_src: str, cur_dst: str, depth: int, prefix: tuple):
-            for entry in os.listdir(cur_src):
-                sp = os.path.join(cur_src, entry)
-                if not os.path.isdir(sp) or "=" not in entry:
-                    continue
-                val = self._unescape_hive(entry.split("=", 1)[1])
-                key = prefix + (val,)
-                if depth + 1 == len(self.partition_by):
-                    if key in {tuple(str(v) for v in t) for t in touched_dirs}:
-                        continue  # will be rewritten
-                    os.makedirs(cur_dst, exist_ok=True)
-                    # Link to the fully-resolved target so chains never
-                    # form: a link in v2 must never route THROUGH v1, or
-                    # vacuum (which resolves realpath past intermediates)
-                    # would free v1 while v2 still depends on it.
-                    # The link itself is RELATIVE so the whole table tree
-                    # is relocatable — a staged build dir renamed into
-                    # place (the workload/content-keyed-root discipline)
-                    # or a copied table must not strand absolute targets.
-                    os.symlink(
-                        os.path.relpath(os.path.realpath(sp), cur_dst),
-                        os.path.join(cur_dst, entry),
-                    )
-                else:
-                    walk(sp, os.path.join(cur_dst, entry), depth + 1, key)
-
-        walk(src, dst, 0, ())
+        return self._commit(fill)
 
     def _pruned_rewrite(self, transform, partition_filter: Column) -> int:
-        """Rewrite ONLY the partitions matching ``partition_filter``:
-        untouched partitions are linked into the new snapshot, touched
-        partitions are read → transformed → written. Cost is O(touched
+        """Rewrite ONLY the partitions holding a row that matches
+        ``partition_filter``; the others are linked. Cost is O(touched
         data), not O(table)."""
         current = self.read()
-        touched_keys = (
-            current.filter(partition_filter).select(*self.partition_by).distinct()
-        )
-        new_version = self._version + 1
-        self._clear_torn(new_version)
-        self._clone_partitions_except(new_version, touched_keys)
-        subset = current.join(
-            F.broadcast(touched_keys), on=self.partition_by, how="left_semi"
-        )
-        transformed = transform(subset)
-        # align column order: partition cols last on disk, schema order in reads
-        out = transformed.select(current.columns)
-        out.write.mode("append").partitionBy(*self.partition_by).parquet(
-            self._dir(new_version)
-        )
-        # the frame's schema, not the source's: a widening transform
-        # wrote the wider type, which the reader can also apply to the
-        # linked untouched files
-        self._remember(new_version, out.schema)
-        self._version = new_version
-        return new_version
+        keys = self._key_exprs()
+        touched = self._touched(current.filter(partition_filter))
+        src = self._dir(self._version)
+
+        def fill(vdir: str) -> StructType:
+            self._link_version(src, vdir, {tuple(r) for r in touched.collect()})
+            # keys spell NULL as the default partition: equality is null-safe
+            on = [F.expr(e) == F.col(k) for e, k in zip(keys, touched.columns)]
+            subset = current.join(F.broadcast(touched), on, "left_semi")
+            # align column order: partition cols last on disk, schema order in reads
+            out = transform(subset).select(current.columns)
+            self._save(out, vdir, "append")
+            # the frame's schema, not the source's: a widening transform
+            # wrote the wider type, which the reader can also apply to the
+            # linked untouched files
+            return out.schema
+
+        return self._commit(fill)
 
     def create(self, df: DataFrame) -> int:
         return self.write(df)
 
-    def _link_data_files(self, src_dir: str, dst_dir: str) -> None:
-        """Symlink every data file of ``src_dir`` into ``dst_dir``
-        (fully resolved — no chains; relative — relocatable; see
-        _clone_partitions_except)."""
-        os.makedirs(dst_dir, exist_ok=True)
-        for entry in os.listdir(src_dir):
-            sp = os.path.join(src_dir, entry)
-            if os.path.isdir(sp) or entry.startswith(("_", ".")):
-                continue
-            os.symlink(
-                os.path.relpath(os.path.realpath(sp), dst_dir),
-                os.path.join(dst_dir, entry),
-            )
-
     def insert(self, rows: DataFrame) -> int:
-        """INSERT: append-only — a NEW snapshot whose existing data files
-        are metadata-only links to the previous version (a manifest append
-        on an object store), plus the freshly written files. Readers of
-        the old version never see the new rows (snapshot isolation), and
-        the version bump makes the insert rollbackable like any other
+        """INSERT: append-only — a NEW snapshot that links the previous
+        version's data and adds the freshly written files. Readers of the
+        old version never see the new rows (snapshot isolation), and the
+        version bump makes the insert rollbackable like any other
         mutation. Cost: O(new rows) data written, zero read, zero shuffle.
         """
         if not self.exists():
             return self.write(rows)
-        src = self._dir(self._version)
-        new_version = self._version + 1
-        self._clear_torn(new_version)
-        dst = self._dir(new_version)
+        src = self._version
+        touched = set()
         if self.partition_by:
-            touched = rows.select(*self.partition_by).distinct()
-            # untouched partitions: one dir-level link each
-            self._clone_partitions_except(new_version, touched)
-            # touched partitions: real dirs with file-level links, so the
-            # append below lands beside (never through) the old files
-            touched_keys = {
-                tuple(str(r[c]) for c in self.partition_by)
-                for r in touched.collect()
-            }
+            touched = {tuple(r) for r in self._touched(rows).collect()}
 
-            def relink(cur_src: str, cur_dst: str, depth: int, prefix: tuple):
-                for entry in os.listdir(cur_src):
-                    sp = os.path.join(cur_src, entry)
-                    if not os.path.isdir(sp) or "=" not in entry:
-                        continue
-                    key = prefix + (self._unescape_hive(entry.split("=", 1)[1]),)
-                    if depth + 1 == len(self.partition_by):
-                        if key in touched_keys:
-                            self._link_data_files(sp, os.path.join(cur_dst, entry))
-                    else:
-                        relink(sp, os.path.join(cur_dst, entry), depth + 1, key)
+        def fill(vdir: str) -> Optional[StructType]:
+            self._link_version(self._dir(src), vdir, touched, link_touched=True)
+            self._save(rows, vdir, "append")
+            return self._known_schema(src)
 
-            relink(src, dst, 0, ())
-            rows.write.mode("append").partitionBy(*self.partition_by).parquet(dst)
-        else:
-            self._link_data_files(src, dst)
-            rows.write.mode("append").parquet(dst)
-        self._inherit_schema(new_version, self, self._version)
-        self._version = new_version
-        return new_version
+        return self._commit(fill)
 
     def update(
         self,
@@ -612,9 +645,8 @@ class SnapshotTable:
         """{resolved path -> logical path} of every data file in a
         snapshot.
 
-        Symlinks (the metadata-only file sharing between insert
-        snapshots) RESOLVE to the file that actually holds the bytes, so
-        two versions sharing a file report the same resolved key — the
+        Links RESOLVE to the file that actually holds the bytes, so two
+        versions sharing a file report the same resolved key — the
         identity the file-level delta relies on. The LOGICAL path (under
         this version's directory, hive partition dirs intact) is what a
         reader must use so partition columns survive.
@@ -634,10 +666,9 @@ class SnapshotTable:
         return set(self._file_map(v))
 
     def file_counts(self, version: Optional[int] = None) -> dict[tuple, int]:
-        """Data-file count per leaf partition directory of a snapshot
-        (``{(): n}`` for unpartitioned tables) — the input to
-        :meth:`compact`'s threshold decision. Counts logical entries, so
-        metadata-only links (from inserts / pruned rewrites) count like
+        """Data-file count per leaf partition key of a snapshot (``{(): n}``
+        for unpartitioned tables) — the input to :meth:`compact`'s
+        threshold decision. Counts logical entries, so links count like
         real files: they cost a reader task each, which is exactly the
         small-file problem compaction exists to fix."""
         v = self._version if version is None else version
@@ -648,10 +679,8 @@ class SnapshotTable:
             if not n:
                 continue
             rel = os.path.relpath(dirpath, root)
-            key = () if rel == "." else tuple(
-                self._unescape_hive(part.split("=", 1)[1])
-                for part in rel.split(os.sep)
-                if "=" in part
+            key = tuple(
+                self._partition_value(part) for part in rel.split(os.sep) if "=" in part
             )
             out[key] = out.get(key, 0) + n
         return out
@@ -667,49 +696,31 @@ class SnapshotTable:
         the object store's request count) scales with files, not bytes.
         This rewrites ONLY partitions whose data-file count exceeds
         ``max_files``, coalescing each to a single file; every other
-        partition is linked into the new snapshot (metadata-only).
-        Row-identical by construction (pinned by test). Returns the new
-        snapshot version, or the current one when nothing exceeds the
-        threshold (no-op, no new snapshot)."""
+        partition is linked into the new snapshot. Row-identical by
+        construction (pinned by test). Returns the new snapshot version,
+        or the current one when nothing exceeds the threshold (no-op, no
+        new snapshot)."""
         counts = self.file_counts()
         if not self.partition_by:
             if counts.get((), 0) <= max_files:
                 return self._version
             return self.write(self.read().coalesce(1))
-        # dir-derived keys are hive-UNESCAPED (file_counts), matching the
-        # cast-to-string of the raw column values below; NULL partitions
-        # (__HIVE_DEFAULT_PARTITION__) are skipped — isin cannot match
-        # null, so selecting them would exclude their dirs from linking
-        # without rewriting them
-        touched = [
-            k
-            for k, n in counts.items()
-            if n > max_files
-            and "__HIVE_DEFAULT_PARTITION__" not in k
-        ]
+        touched = [k for k, n in counts.items() if n > max_files]
         if not touched:
             return self._version
-        # membership as a disjunction of per-column equality tuples, NOT
-        # a concat_ws(sep).isin(): concat_ws silently DROPS null columns
-        # (a multi-column key with one NULL component could collide with
-        # a different touched key) and a value containing the separator
-        # could forge a match (r7 advisor finding). Touched keys never
-        # contain nulls (__HIVE_DEFAULT_PARTITION__ filtered above), so
-        # plain `==` is null-correct: a row with a NULL partition value
-        # matches no tuple and stays linked, untouched.
-        def tuple_match(key: tuple) -> Column:
-            preds = [
-                F.col(c).cast("string") == F.lit(v)
-                for c, v in zip(self.partition_by, key)
-            ]
-            out = preds[0]
-            for p in preds[1:]:
-                out = out & p
-            return out
-
-        membership = tuple_match(touched[0])
-        for key in touched[1:]:
-            membership = membership | tuple_match(key)
+        # membership as a disjunction of per-column key equalities, NOT a
+        # concat_ws(sep).isin(): concat_ws silently DROPS null columns (a
+        # multi-column key with one NULL component could collide with a
+        # different touched key) and a value containing the separator
+        # could forge a match. Keys spell NULL as the default partition,
+        # so a NULL partition compacts like any other.
+        keys = [F.expr(e) for e in self._key_exprs()]
+        membership = F.lit(False)
+        for t in touched:
+            match = F.lit(True)
+            for k, v in zip(keys, t):
+                match = match & (k == F.lit(v))
+            membership = membership | match
         # one repartition by the partition columns lands each touched
         # partition's rows in one task -> one file per partition dir
         return self._pruned_rewrite(
@@ -748,55 +759,43 @@ class SnapshotTable:
             .select(self.read().columns)
         )
 
+    def _link_clone(self, src: "SnapshotTable", version: int) -> int:
+        """Commit a new version that links all of ``src``'s ``version``:
+        the body of RESTORE and SHALLOW CLONE. Metadata-only — no Spark
+        job runs, so the marker is written here."""
+
+        def fill(vdir: str) -> Optional[StructType]:
+            self._link_version(src._dir(version), vdir)
+            with open(os.path.join(vdir, "_SUCCESS"), "w"):
+                pass
+            return src._known_schema(version)
+
+        return self._commit(fill)
+
     def restore(self, version: int) -> int:
         """RESTORE: roll the table back to ``version`` by committing a
-        NEW version that is an exact link-clone of it (Delta-style
-        RESTORE semantics). History is preserved — the rollback is
-        itself a version, auditable and re-rollbackable — and the
-        operation is metadata-only (links + a commit marker, no data
-        rewrite, no Spark job). Vacuum's transitive reference graph
-        keeps the restored-from snapshot alive for as long as the
-        restore references it."""
-        if version not in self.versions():
-            raise ValueError(
-                f"table {self.name} has no version {version} "
-                f"(available: {self.versions()})"
-            )
-        new_version = self._version + 1
-        self._clear_torn(new_version)
-        dst = self._dir(new_version)
-        src = self._dir(version)
-        if self.partition_by:
-            empty = self.spark.createDataFrame(
-                [], ", ".join(f"{c} string" for c in self.partition_by)
-            )
-            self._clone_partitions_except(new_version, empty, src_version=version)
-        else:
-            self._link_data_files(src, dst)
-        os.makedirs(dst, exist_ok=True)
-        # metadata-only commit: no Spark write ran, so the committer's
-        # _SUCCESS marker is written here — same torn-crash contract as
-        # every other mutation (an interrupted restore is invisible)
-        with open(os.path.join(dst, "_SUCCESS"), "w"):
-            pass
-        self._inherit_schema(new_version, self, version)
-        self._version = new_version
-        return new_version
+        NEW version that is a link-clone of it (Delta-style RESTORE
+        semantics). History is preserved — the rollback is itself a
+        version, auditable and re-rollbackable — and vacuum keeps the
+        restored-from snapshot alive for as long as the restore links
+        into it."""
+        self._check_version(version)
+        return self._link_clone(self, version)
 
     def clone_from(self, src: "SnapshotTable") -> int:
         """SHALLOW CLONE: this (empty) table's first version becomes a
-        metadata-only link-clone of ``src``'s current snapshot — the
-        zero-copy table copy (Delta shallow-clone semantics). The clone
-        then evolves independently: its own mutations write its own
-        versions and never touch the source.
+        link-clone of ``src``'s current snapshot — the zero-copy table
+        copy (Delta shallow-clone semantics). The clone then evolves
+        independently: its own mutations write its own versions and never
+        touch the source.
 
         Vacuum composition: a clone's links resolve into the SOURCE
         table's version dirs, which the source's own vacuum cannot see.
-        The catalog's VACUUM handler closes that hole — it scans other
-        registered tables for links into the vacuumed table and passes
-        them as ``protected`` versions (transitively kept through the
-        existing reachability graph). Direct ``SnapshotTable.vacuum``
-        callers on shared roots must pass ``protected`` themselves.
+        The catalog's VACUUM handler closes that hole — it asks the other
+        registered tables which versions they link into
+        (:meth:`links_into`) and passes them as ``protected``. Direct
+        ``SnapshotTable.vacuum`` callers on shared roots must pass
+        ``protected`` themselves.
         """
         if self.exists():
             raise ValueError(f"clone target {self.name} already has data")
@@ -805,31 +804,7 @@ class SnapshotTable:
                 "clone partitioning must match the source "
                 f"({self.partition_by} != {src.partition_by})"
             )
-        nv = self._version + 1
-        self._clear_torn(nv)
-        dst = self._dir(nv)
-        src_dir = src._dir(src.version)
-        os.makedirs(dst, exist_ok=True)
-        for entry in os.listdir(src_dir):
-            sp = os.path.join(src_dir, entry)
-            if os.path.isdir(sp) and "=" in entry:
-                # whole-partition link (resolved + relative, like
-                # _clone_partitions_except); inner historical links
-                # resolve through it unchanged
-                os.symlink(
-                    os.path.relpath(os.path.realpath(sp), dst),
-                    os.path.join(dst, entry),
-                )
-            elif not os.path.isdir(sp) and not entry.startswith(("_", ".")):
-                os.symlink(
-                    os.path.relpath(os.path.realpath(sp), dst),
-                    os.path.join(dst, entry),
-                )
-        with open(os.path.join(dst, "_SUCCESS"), "w"):
-            pass
-        self._inherit_schema(nv, src, src.version)
-        self._version = nv
-        return nv
+        return self._link_clone(src, src.version)
 
     def truncate(self) -> int:
         """TRUNCATE TABLE (TruncateTable.java): empty snapshot, schema kept."""
@@ -837,7 +812,7 @@ class SnapshotTable:
         return self.write(empty)
 
     def drop(self) -> None:
-        shutil.rmtree(os.path.join(self.root, self.name), ignore_errors=True)
+        shutil.rmtree(self._base(), ignore_errors=True)
         self._schemas.clear()
         self._version = -1
 
@@ -846,40 +821,20 @@ class SnapshotTable:
     ) -> None:
         """Remove snapshots older than the newest ``keep_last``.
 
-        Partition-pruned rewrites link untouched partitions of the OLD
-        snapshot into the new one, so a snapshot is only removable when
-        no surviving snapshot links into it. ``protected`` versions
-        (e.g. ones a CLONE of this table links into — supplied by the
-        catalog's cross-table scan) are kept regardless of age, along
-        with everything they transitively reference."""
-        base = os.path.join(self.root, self.name)
-        if not os.path.isdir(base):
-            return
-        versions = sorted(
-            int(d[1:]) for d in os.listdir(base) if d.startswith("v") and d[1:].isdigit()
-        )
-        # Build the version-reference graph: v references t when any link
-        # (dir-level from pruned rewrites, file-level from append
-        # snapshots) inside v resolves into t's directory. References are
-        # TRANSITIVE — a survivor may link a real dir in t whose own files
-        # link further back — so we keep the full reachable set.
-        real_base = os.path.realpath(base)
-        refs: dict[int, set[int]] = {v: set() for v in versions}
-        for v in versions:
-            for dirpath, dirnames, filenames in os.walk(self._dir(v)):
-                for d in list(dirnames) + list(filenames):
-                    p = os.path.join(dirpath, d)
-                    if not os.path.islink(p):
-                        continue
-                    rel = os.path.relpath(os.path.realpath(p), real_base)
-                    top = rel.split(os.sep, 1)[0]
-                    if top.startswith("v") and top[1:].isdigit():
-                        refs[v].add(int(top[1:]))
-        keep = {
-            v for v in versions if v > self._version - keep_last
+        A snapshot is only removable when no surviving snapshot links
+        into it. References are TRANSITIVE — a survivor may link a real
+        dir in t whose own files link further back — so the full
+        reachable set is kept. ``protected`` versions (e.g. ones a CLONE
+        of this table links into — supplied by the catalog's cross-table
+        scan) are kept regardless of age, along with everything they
+        transitively reference."""
+        base = os.path.realpath(self._base())
+        refs = {
+            v: {t for d, t in pairs if d == base}
+            for v, pairs in self._link_refs().items()
         }
-        if protected:
-            keep |= {v for v in protected if v in set(versions)}
+        keep = {v for v in refs if v > self._version - keep_last}
+        keep |= set(protected or ()) & set(refs)
         reachable = set(keep)
         work = list(keep)
         while work:
@@ -887,8 +842,8 @@ class SnapshotTable:
                 if t not in reachable:
                     reachable.add(t)
                     work.append(t)
-        for v in versions:
-            if v not in reachable and v <= self._version - keep_last:
+        for v in refs:
+            if v not in reachable:
                 shutil.rmtree(self._dir(v), ignore_errors=True)
                 self._schemas.pop(v, None)
 

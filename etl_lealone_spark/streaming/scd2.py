@@ -137,7 +137,7 @@ class Scd2Applier:
         if batch_id is not None and batch_id <= self._marker.last_committed(
             query_key
         ):
-            return self.history._version
+            return self.history.version
         k, eff = self.key_col, self.eff_col
         # net effect per key within the batch: latest eff_date wins,
         # deterministic tie-break through the attr tuple
@@ -164,7 +164,7 @@ class Scd2Applier:
             # later read — so an empty batch never creates the table.
             if batch_id is not None:
                 self._marker.commit(batch_id, query_key)
-            return self.history._version
+            return self.history.version
         if not self.history.exists():
             # pure-CDC bootstrap (no base snapshot): the first batch's
             # net changes become the initial history — every key opens
@@ -191,7 +191,7 @@ class Scd2Applier:
             # more small file per touched bucket
             if batch_id is not None:
                 self._marker.commit(batch_id, query_key)
-            return self.history._version
+            return self.history.version
         probe = net.select(F.col(k).alias("__k"), F.col(eff).alias("__eff"))
 
         def transform(subset: DataFrame) -> DataFrame:

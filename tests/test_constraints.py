@@ -219,3 +219,30 @@ def test_warm_dml_on_pk_table_checks_only_changed_rows(es, jobs_run_by):
     # pushed-down key probe to its write
     assert jobs_run_by(lambda: es.sql(upd.format(s="b"))) == 1
     assert jobs_run_by(lambda: es.sql(ins.format(i=200))) <= 2
+
+
+@pytest.mark.parametrize(
+    "rename, table, stmt",
+    [
+        ("ALTER TABLE r RENAME COLUMN id TO k", "r", "INSERT INTO r VALUES (1, 2)"),
+        ("ALTER TABLE r ALTER COLUMN id RENAME TO k", "r", "INSERT INTO r VALUES (1, 2)"),
+        ("ALTER TABLE r RENAME TO d", "d", "INSERT INTO d VALUES (1, 2)"),
+        ("ALTER TABLE r RENAME TO d", "d", "INSERT INTO d VALUES (2, NULL)"),
+        ("ALTER TABLE r RENAME COLUMN v TO w", "r", "INSERT INTO r VALUES (2, NULL)"),
+    ],
+)
+def test_renames_keep_constraints(es, rename, table, stmt):
+    """Writes check only what they can break, by column and table name:
+    a rename must carry the PK and NOT NULL metadata along, or the
+    renamed column's checks are silently skipped."""
+    es.sql("CREATE TABLE r (id int PRIMARY KEY, v int NOT NULL CHECK (v > 0))")
+    es.sql("INSERT INTO r VALUES (1, 1)")
+    es.sql(rename)
+    with pytest.raises(ValueError, match="constraint violation"):
+        es.sql(stmt)
+    assert es.sql(f"SELECT count(*) FROM {table}").collect()[0][0] == 1
+    # the renamed CHECK still holds and still admits valid rows
+    with pytest.raises(ValueError, match="constraint violation"):
+        es.sql(f"INSERT INTO {table} VALUES (3, -1)")
+    es.sql(f"INSERT INTO {table} VALUES (4, 4)")
+    assert es.sql(f"SELECT count(*) FROM {table}").collect()[0][0] == 2

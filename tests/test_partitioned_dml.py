@@ -616,3 +616,92 @@ def test_timestamp_as_of(spark, tmp_path):
     assert t.commit_ts(2) == base + 7200
     with _pytest.raises(ValueError, match="no version 99"):
         t.commit_ts(99)
+
+
+def _null_part_table(spark, tmp_path):
+    st = SnapshotTable(spark, str(tmp_path), "np", partition_by=["pk"])
+    st.create(
+        spark.createDataFrame(
+            [("a", 1, 10), (None, 2, 20)], "pk string, id int, v int"
+        )
+    )
+    return st
+
+
+def test_null_partition_insert_leaves_old_version(spark, tmp_path):
+    """A NULL partition value lands in __HIVE_DEFAULT_PARTITION__; the
+    insert must link that dir file by file, never append through a
+    directory link into the previous version."""
+    st = _null_part_table(spark, tmp_path)
+    st.insert(spark.createDataFrame([(None, 3, 30)], "pk string, id int, v int"))
+    assert st.read(version=0).count() == 2
+    assert sorted(r["id"] for r in st.read().collect()) == [1, 2, 3]
+
+
+def test_pruned_update_of_null_partition(spark, tmp_path):
+    st = _null_part_table(spark, tmp_path)
+    st.update(
+        F.col("pk").isNull(),
+        {"v": F.col("v") + 1},
+        partition_filter=F.col("pk").isNull(),
+    )
+    got = {r["id"]: r["v"] for r in st.read().collect()}
+    assert got == {1: 10, 2: 21}
+    assert {r["id"]: r["v"] for r in st.read(version=0).collect()} == {1: 10, 2: 20}
+
+
+def test_compact_null_partition(spark, tmp_path):
+    st = _null_part_table(spark, tmp_path)
+    for i in range(3):
+        st.insert(
+            spark.createDataFrame([(None, 10 + i, i)], "pk string, id int, v int")
+        )
+    before = sorted(tuple(r) for r in st.read().collect())
+    assert st.file_counts()[("__HIVE_DEFAULT_PARTITION__",)] == 4
+    st.compact(max_files=2)
+    counts = st.file_counts()
+    assert counts[("__HIVE_DEFAULT_PARTITION__",)] == 1
+    assert counts[("a",)] == 1
+    assert sorted(tuple(r) for r in st.read().collect()) == before
+
+
+def test_nested_partitions_clone_insert_restore_vacuum(spark, tmp_path):
+    """Two-column partitioning through every commit path: a clone's leaf
+    partitions are directory links into the source, an insert into one
+    of them must not write through into the source, and RESTORE plus
+    VACUUM on the source must keep every version both tables still
+    read."""
+    from etl_lealone_spark.session import EngineSession
+
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    schema = "p string, q string, id int"
+    st = SnapshotTable(spark, str(tmp_path), "ns", partition_by=["p", "q"])
+    st.create(
+        spark.createDataFrame([("a", "x", 1), ("a", "y", 2), ("b", "x", 3)], schema)
+    )
+    es.catalog.tables["ns"] = st
+    es.catalog.refresh_view("ns")
+    v0 = [("a", "x", 1), ("a", "y", 2), ("b", "x", 3)]
+
+    es.sql("CREATE TABLE nc CLONE ns")
+    clone = es.catalog.table("nc")
+    assert os.path.islink(os.path.join(clone._dir(0), "p=a", "q=x"))
+    es.sql("INSERT INTO nc (p, q, id) VALUES ('a', 'x', 4)")
+
+    def rows(t, v=None):
+        return sorted((r["p"], r["q"], r["id"]) for r in t.read(version=v).collect())
+
+    assert rows(st) == v0
+
+    st.update(
+        F.col("p") == "b",
+        {"id": F.col("id") * 10},
+        partition_filter=F.col("p") == "b",
+    )
+    es.sql("RESTORE TABLE ns TO VERSION AS OF 0")
+    es.sql("VACUUM ns RETAIN 1 VERSIONS")
+    assert st.versions() == [0, 2]  # v1 is referenced by nothing
+    assert rows(st, 0) == v0 and rows(st, 2) == v0
+    assert clone.versions() == [0, 1]
+    assert rows(clone, 0) == v0
+    assert rows(clone, 1) == sorted(v0 + [("a", "x", 4)])

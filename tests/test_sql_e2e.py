@@ -121,9 +121,11 @@ def test_merge_values(es):
 
 
 def test_merge_partial_columns_preserves_rest(es):
-    es.sql("MERGE INTO t (pk, f3) KEY(pk) VALUES ('01', 777)")
+    es.sql("MERGE INTO t (pk, f3) KEY(pk) VALUES ('01', 777), ('99', 5)")
     row = es.sql("SELECT f1, f3 FROM t WHERE pk = '01'").collect()[0]
     assert row["f3"] == 777 and row["f1"] == "a1"  # unspecified col kept
+    row = es.sql("SELECT f1, f3 FROM t WHERE pk = '99'").collect()[0]
+    assert row["f3"] == 5 and row["f1"] is None  # inserted: unspecified NULL
 
 
 def test_merge_select(es):
