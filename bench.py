@@ -1,24 +1,51 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness and per-layer profiler: one traced rep loop over
+registry workloads, timed by ``perfbench/layers.Tracer``.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py                      # headline suite, then the dual-runs
+    python bench.py [--reps N] NAME...   # per-layer profile of each NAME
 
-Each query is forced end-to-end with a noop write (count() would let
-Catalyst prune the projections being measured).
+The data dir is ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
+
+A rep is the registry ``Workload.build`` plus a ``toPandas`` collect,
+traced by the tracer into one record: its wall time and the pass record
+— ``exec.*`` (jobs, stages, executor run, CPU and GC time, shuffle,
+spill, and ``exec.unattributed_s``: wall time outside build and action
+jobs), ``catalyst.*_ms``, ``plan.exchanges`` and ``plan.broadcasts`` of
+the final AQE plan, ``codegen.*``, ``python.*`` and ``streaming.*``
+(trigger phases and state commit time). Jobs that run eagerly inside
+``build`` count in the rep that ran them.
+
+Suite mode runs one cold and one warm rep of every HEADLINE query. The
+warm rep's ``wall_s`` is the query's time, and its record goes to
+``BENCH_DETAIL.json`` under ``layers``; host drift shows per query as
+``exec.cpu_s`` against ``wall_s``. Then the W1-W5 shapes at
+``$SPARK_GRAFT_BASE_ROWS`` rows (default 5e7) and the EXT_DUAL workloads
+are dual-run against DuckDB. The last stdout line is a fixed-size JSON
+summary (:func:`final_line`).
+
+NAME mode runs one cold rep, then N warm reps (default 3), of each NAME
+and prints one JSON line per rep. After the reps the frame is built and
+collected once more, outside the timing, and its final plan
+(``isFinalPlan=true``) is written to ``.profile/NAME.txt``.
 """
 
 from __future__ import annotations
 
+import argparse
+import hashlib
 import json
 import os
 import sys
 import time
+from types import SimpleNamespace
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from etl_lealone_spark.session import build_spark, default_parallelism
-from etl_lealone_spark.workloads import all_workloads
+from etl_lealone_spark.session import build_spark, quiet_bounded_window_warnings  # noqa: E402
+from etl_lealone_spark.workloads import all_workloads  # noqa: E402
+from perfbench.layers import Tracer  # noqa: E402
+from perfbench.ops import Op  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -95,11 +122,7 @@ HEADLINE = [
                                # from birth, same rule as ridge)
     "quantile_sketch_by_flag",  # grouped stride-quantile twin (r12)
     "quantile_sketch_merged",  # sharded-build merge path (r12)
-    # ---- ML / corpus-statistics family: contiguous and LAST, bracketed
-    # by anchor_pre_ml/anchor_post_ml (r10 verdict task 1 — the driver's
-    # r10 record read this family 2.8-7.5x over the same code run
-    # elsewhere; the bracket anchors attribute any such drift to host
-    # state in-run instead of leaving it ambiguous) ----
+    # ---- ML / corpus-statistics family ----
     "kmeans_cluster_profile",  # distributed Lloyd's k-means + purity profile
     "knn_label_vote",          # k-NN weak-label audit (int-cosine vote)
     "tfidf_doc_keywords",      # TF-IDF keyword extraction
@@ -119,34 +142,7 @@ HEADLINE = [
                                # bench row)
 ]
 
-# First workload of the ML family (see HEADLINE comment): an anchor run
-# is recorded immediately before this query and after the last headline
-# query, published as anchor_pre_ml / anchor_post_ml.
-_ML_FAMILY_START = "kmeans_cluster_profile"
-
-# Per-segment anchors (r11 verdict task 1): the r11 driver record read
-# minhash_band_skew at 6.34s vs its own r10 record 2.49s on UNTOUCHED
-# code while the suite-edge and ML-bracket anchors got faster — the
-# mid-suite segment containing it had no in-run attribution, so host
-# drift vs code regression was undecidable from the record. Generalize
-# the ML bracketing: an anchor run immediately before each of these
-# headline queries splits the suite into ~13-query segments, each
-# bracketed by two anchors (anchor_first / seg anchors / anchor_pre_ml /
-# anchor_post_ml=anchor_last). A segment whose queries drift while BOTH
-# its bracketing anchors hold is a code/plan regression; drift that the
-# anchors mirror is host state. Cost: 4 extra constant-size probes
-# (~0.7s each), outside every per-query timing and the suite total.
-_SEGMENT_ANCHORS = {
-    "ann_bruteforce_topk": "anchor_seg_ann",        # idx 13: ANN/text block
-    "join_seven_tables": "anchor_seg_tpch",         # idx 26: join/TPC-H block
-    "scd2_stream_compacted": "anchor_seg_snap",     # idx 39: snapshot/skew block
-    "hard_negative_mining_batch": "anchor_seg_strm",  # idx 52: streaming block
-}
-
-
-def baseline_workloads(
-    spark, n: int = 50_000_000, reps: int = 3, w1_last: bool = False
-) -> dict[str, float]:
+def baseline_workloads(spark, n: int = 50_000_000, reps: int = 3) -> dict[str, float]:
     """BASELINE.md W1-W5 batch shapes at n rows (the reference's own
     microbench table ``test(f1 int primary key, f2 long)`` scaled up),
     dual-run against DuckDB on the identical parquet — the measured
@@ -161,15 +157,6 @@ def baseline_workloads(
     so the Spark/DuckDB ratio — the graded metric — is stable even when
     absolute times are not. Fresh DataFrames per rep (re-using one would
     replay materialized AQE query stages and time nothing).
-
-    ``w1_last=True`` (the settle's cache-state control, r5 verdict
-    task 2): W1's DuckDB twin bulk-writes the full table (~15 GB at
-    5e8 rows), which can evict the scan shapes' pages from the OS cache
-    and make a later W2/W3 rep read from disk — the r5b settle recorded
-    an unreproducible 7.3s w3 outlier in exactly that sequence. Running
-    the write shape AFTER the scan shapes removes the only bulk
-    cache-evictor from their measurement window without changing any
-    query.
     """
     import shutil
     import tempfile
@@ -351,11 +338,7 @@ def baseline_workloads(
             "w4": ("w4_joins", w4),
             "w5": ("w5_topk_offset", w5),
         }
-        order = list(spark_keys)
-        if w1_last:
-            order = order[1:] + ["w1"]
-        for key in order:
-            out_key, fn = spark_keys[key]
+        for key, (out_key, fn) in spark_keys.items():
             fn()  # warm spark
             duck_run(key)  # warm duckdb
             s_times, d_times = [], []
@@ -399,45 +382,41 @@ EXT_DUAL = [
 ]
 
 
-def extension_dual_run(spark, wl, reps: int = 2) -> dict[str, float]:
+def extension_dual_run(spark, data_dir: str, reps: int = 2) -> dict[str, float]:
     """Interleaved Spark-vs-DuckDB timings for oracle-backed extension
-    workloads at SF_DIR; returns {name_spark: s, name_duckdb: s}."""
+    workloads at ``data_dir``; returns {ext_NAME_spark: s, ext_NAME_duckdb: s}."""
     import duckdb
 
     from etl_lealone_spark.tables import TABLE_NAMES
 
+    registry = all_workloads()
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
+            f"read_parquet('{data_dir}/{t}.parquet')"
         )
     out: dict[str, float] = {}
     for name in EXT_DUAL:
-        w = wl[name]
-        if w.oracle is None:
-            continue
+        w = registry[name]
 
         def s_run():
-            w.build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            w.build(spark, data_dir).write.format("noop").mode("overwrite").save()
 
         def d_run():
             con.execute(w.oracle).fetchall()
 
-        try:
-            s_run(), d_run()  # warm both engines
-            st, dt = [], []
-            for _ in range(reps):
-                t0 = time.time()
-                s_run()
-                st.append(time.time() - t0)
-                t0 = time.time()
-                d_run()
-                dt.append(time.time() - t0)
-            out[f"ext_{name}_spark"] = round(min(st), 3)
-            out[f"ext_{name}_duckdb"] = round(min(dt), 3)
-        except Exception:
-            pass
+        s_run(), d_run()  # warm both engines
+        st, dt = [], []
+        for _ in range(reps):
+            t0 = time.time()
+            s_run()
+            st.append(time.time() - t0)
+            t0 = time.time()
+            d_run()
+            dt.append(time.time() - t0)
+        out[f"ext_{name}_spark"] = round(min(st), 3)
+        out[f"ext_{name}_duckdb"] = round(min(dt), 3)
     con.close()
     return out
 
@@ -445,235 +424,150 @@ def extension_dual_run(spark, wl, reps: int = 2) -> dict[str, float]:
 def _isolate(spark) -> None:
     """Between-query hygiene: Python gc releases py4j-held JVM refs
     (DataFrames, localCheckpoint RDDs) so ContextCleaner can actually
-    free their blocks, THEN a JVM gc reclaims them."""
+    free their blocks, THEN a JVM gc reclaims them; and every loaded
+    state-store provider is unloaded, since a stopped streaming query's
+    in-memory state maps otherwise linger in the (local-mode: only) JVM
+    for the rest of the run."""
     import gc
 
     gc.collect()
+    jvm = spark.sparkContext._jvm
+    jvm.System.gc()
+    jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+
+
+def traced_reps(spark, names, reps: int, data_dir: str, plan_dir: str | None = None):
+    """Yield one tracer record per rep of every name: rep 0 is the cold
+    one, then ``reps`` warm ones. With ``plan_dir``, each name's final
+    plan is written to ``plan_dir/NAME.txt`` after its reps. Every name
+    ends with :func:`_isolate`."""
+    from etl_lealone_spark.plans import explain_str
+
+    registry = all_workloads()
+    if plan_dir:
+        os.makedirs(plan_dir, exist_ok=True)
+    # the tracer adds a streaming listener; take it off again afterwards
+    # so that a long-lived session does not keep calling back into it
+    jsqm = spark.streams._jsqm
+    before = list(jsqm.listListeners())
+    tracer = Tracer("bench", 0, spark.sparkContext.defaultParallelism)
+    tracer.attach(spark)
+    added = [lst for lst in jsqm.listListeners() if lst not in before]
+    eng = SimpleNamespace(spark=spark, es=None)
+    wl = SimpleNamespace(data_dir=data_dir)
+    p = 0
     try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+        for name in names:
+            for rep in range(reps + 1):
+                tracer.begin_pass(p)
+                dt, _ = tracer.run_op(Op(name, "build", name), name, eng, wl)
+                tracer.end_pass(p, dt, traced=True)
+                row = tracer.pass_rows.pop(p)
+                p += 1
+                yield {"name": name, "rep": rep,
+                       **{k: v for k, v in row.items() if not isinstance(v, list)}}
+            if plan_dir:
+                # the final plan exists only after an action on this same frame
+                df = registry[name].build(spark, data_dir)
+                df.toPandas()
+                with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
+                    f.write(explain_str(df))
+            _isolate(spark)
+    finally:
+        for lst in added:
+            jsqm.removeListener(lst)
 
 
-def anchor_run(spark) -> float:
-    """Fixed host-state anchor (r7 verdict task 4): a constant-size,
-    SF-independent CPU+shuffle probe timed at the START and END of the
-    headline loop. Cross-round comparisons divide per-query drift by
-    anchor drift to separate host state from code regressions — the r7
-    round graded a phantom +13% that the same-run DuckDB twins
-    mirrored; the anchor makes that self-correcting in-run. Runs once
-    untimed (codegen/JIT) before the first timed call via main()."""
-    from pyspark.sql import functions as F
-
-    t0 = time.time()
-    (
-        spark.range(20_000_000)
-        .select((F.col("id") % 9973).alias("g"), (F.col("id") * 31).alias("v"))
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
-        .agg(F.count(F.lit(1)), F.sum("n"), F.sum("s"))
-        .collect()
-    )
-    return round(time.time() - t0, 3)
-
-
-def main() -> None:
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    spark = build_spark(
-        app_name="etl_lealone_spark_bench",
-        cores=default_parallelism(),
-    )
-    wl = all_workloads()
-    # warmup: JVM/codegen/parquet-footer caches — not part of any timing.
-    # Each headline query runs once untimed at SF_DIR first so
-    # whole-stage-codegen compilation + C2 JIT of the generated classes
-    # (~5-15s across the widest plans, and NOT transferable from a smaller
-    # scale factor — AQE picks different physical plans) is paid before the
-    # measured pass, which then reflects the steady-state throughput a
-    # long-running cluster session would see.
-    from etl_lealone_spark.tables import load_tables
-
-    for df in load_tables(spark, SF_DIR).values():
-        df.limit(1).count()
-    for name in HEADLINE:
-        try:
-            wl[name].build(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
-    # warmup leaves the same residue a timed pass would — unload
-    # streaming state + gc before any timed reading
-    try:
-        spark.sparkContext._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass
-    _isolate(spark)
-    # TWO untimed warms (r9 settle lesson: a single warm left residual
-    # JIT in the first anchor reading — bench_settle.py carries the
-    # same fix)
-    anchor_run(spark)
-    anchor_run(spark)
-    anchor_first = anchor_run(spark)
-    timings: dict[str, float] = {}
-    anchors: dict[str, float] = {}
-    anchor_pre_ml = anchor_post_ml = None
-    for name in HEADLINE:
-        w = wl[name]
-        # per-query isolation: a long single-JVM sequence otherwise lets
-        # one query's garbage inflate a later query's measurement (a
-        # 33-query run read dedup_clusters at 10.9s vs 3.7-4.0s isolated).
-        # Python gc FIRST (r11): py4j holds JVM-side DataFrame/RDD refs
-        # (localCheckpoint blocks included) alive until the Python
-        # wrappers are collected — System.gc alone cannot release them.
-        _isolate(spark)
-        if name in _SEGMENT_ANCHORS:
-            anchors[_SEGMENT_ANCHORS[name]] = anchor_run(spark)
-        if name == _ML_FAMILY_START:
-            anchor_pre_ml = anchor_run(spark)
-        t0 = time.time()
-        w.build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-        if name.startswith("stream_") or name.startswith("scd2_"):
-            # unload every loaded state-store provider: a stopped
-            # streaming query's in-memory state maps otherwise linger in
-            # the (local-mode: only) JVM for the rest of the suite
-            try:
-                jvm = spark.sparkContext._jvm
-                jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-            except Exception:
-                pass
-    # the ML family is the headline tail, so the suite-closing anchor IS
-    # the post-ML anchor — published under both names (one measurement)
-    anchor_post_ml = anchor_last = anchor_run(spark)
-    # 5e7 default: BASELINE.md shows the Spark/DuckDB crossover lives at
-    # this scale — fixed JVM overhead is amortized and the ratio reflects
-    # throughput, which is what a 100 TB deployment cares about.
-    base_rows = int(os.environ.get("SPARK_GRAFT_BASE_ROWS", "50000000"))
+def suite(spark, names, data_dir: str, base_rows: int, out_dir: str) -> str:
+    """Run the headline suite over ``names`` and the dual-runs, write
+    ``out_dir/BENCH_DETAIL.json`` and return the final stdout line."""
+    layers = {
+        rec["name"]: {k: v for k, v in rec.items() if k not in ("name", "rep")}
+        for rec in traced_reps(spark, names, 1, data_dir)
+        if rec["rep"] == 1
+    }
+    timings = {name: round(rec["wall_s"], 3) for name, rec in layers.items()}
     baseline = baseline_workloads(spark, n=base_rows)
-    ext = extension_dual_run(spark, wl)
-    total = round(sum(timings.values()), 3)
+    ext = extension_dual_run(spark, data_dir)
+    sf = data_dir.rstrip("/").rsplit("sf", 1)[-1]
     payload = {
         "metric": "headline_suite_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": {
-            **timings,
-            **baseline,
-            **ext,
-            "anchor_first": anchor_first,
-            **anchors,
-            "anchor_last": anchor_last,
-            "anchor_pre_ml": anchor_pre_ml,
-            "anchor_post_ml": anchor_post_ml,
-        },
+        "queries": {**timings, **baseline, **ext},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "baseline_rows": base_rows,
+        "layers": layers,
     }
-    emit(payload, timings, baseline, ext)
-
-
-# The round-record keeps only the LAST 2000 chars of stdout and parses
-# the final line as JSON; the full payload serializes to ~3 KB, so a
-# single full-detail final line gets its FRONT truncated and every
-# BENCH_r0*.json through r9 recorded "parsed": null. Framing fix (r9
-# verdict task 2): the full payload goes to BENCH_DETAIL.json (repo
-# root, committed with the round) AND a full-detail penultimate stdout
-# line; the FINAL line is a compact summary hard-capped below the tail
-# window — baseline/ext dual-run pairs and anchors always included
-# (they are the graded ratios), then headline timings slowest-first
-# until the cap, with the spill count recorded in queries_omitted.
-_TAIL_BUDGET = 1800  # < 2000-char tail, with headroom for a preceding \n
-
-
-def emit(payload, timings, baseline, ext, out_dir: str | None = None) -> None:
-    here = out_dir or os.path.dirname(os.path.abspath(__file__))
-    detail = json.dumps(payload, separators=(",", ":"))
-    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
+    with open(os.path.join(out_dir, "BENCH_DETAIL.json"), "w") as f:
         f.write(json.dumps(payload, indent=1) + "\n")
-    compact = {
+    return final_line(payload)
+
+
+def final_line(payload: dict) -> str:
+    """The last stdout line, fixed-size by construction: no per-query
+    entry, only the roster size and digest, one subtotal per family (the
+    module a workload's ``build`` lives in, without its package) and the
+    dual-run pairs. A record keeper that keeps only the last 2000 chars of
+    stdout can therefore always parse it; the per-query times and layer
+    records are in ``BENCH_DETAIL.json``."""
+    registry = all_workloads()
+    roster = list(payload["layers"])
+    families: dict[str, float] = {}
+    for name in roster:
+        fam = registry[name].build.__module__.rsplit(".", 1)[-1]
+        families[fam] = round(families.get(fam, 0.0) + payload["queries"][name], 3)
+    return json.dumps({
         "metric": payload["metric"],
         "value": payload["value"],
         "unit": payload["unit"],
         "sf": payload["sf"],
         "baseline_rows": payload["baseline_rows"],
         "detail": "BENCH_DETAIL.json",
-        # placeholder = the widest value this key can take (the real
-        # count is <= len(payload queries)), so substituting the final
-        # count after trimming can only SHRINK the line — the trim loop
-        # below therefore bounds the printed length, provably (r11
-        # advisor: the old post-trim substitution 0 -> N could exceed
-        # the budget by the digit difference)
-        "queries_omitted": len(payload["queries"]),
-        "queries": {
-            **baseline,
-            **ext,
-            **{
-                k: v
-                for k, v in payload["queries"].items()
-                if k.startswith("anchor_")
-            },
-        },
-    }
-    for name, t in sorted(timings.items(), key=lambda kv: -kv[1]):
-        compact["queries"][name] = t
-        if len(json.dumps(compact, separators=(",", ":"))) > _TAIL_BUDGET:
-            del compact["queries"][name]
-    # graceful degrade (r10 advisor + r11 review): the baseline/ext/
-    # anchor set is added unconditionally above, so if it ever outgrows
-    # the budget on its own, trim IT too instead of asserting after the
-    # full timed run completed — a truncated compact line still parses;
-    # a dead process records nothing. Trimming drops each spark/duckdb
-    # DUAL-RUN PAIR as one unit (half a ratio pair is worthless to the
-    # grader), fastest-pair-first, then the ML anchors, then the suite
-    # anchors; if even the skeleton exceeds the budget, the final
-    # fallback empties queries entirely — the line ALWAYS fits.
-    _BASE_PAIR = {
-        "w1_bulk_insert": "w1_duckdb",
-        "w2_scan_predicate": "w2_duckdb",
-        "w2_decode_substrate": "w2sub_duckdb",
-        "w3_groupby_having": "w3_duckdb",
-        "w4_joins": "w4_duckdb",
-        "w5_topk_offset": "w5_duckdb",
-    }
+        "roster": len(roster),
+        "roster_digest": hashlib.sha256(",".join(roster).encode()).hexdigest()[:12],
+        "families": families,
+        "queries": {k: v for k, v in payload["queries"].items() if k not in payload["layers"]},
+    }, separators=(",", ":"))
 
-    def _pair_groups():
-        seen, groups = set(), []
-        for k in compact["queries"]:
-            if k.startswith("anchor_") or k in seen:
-                continue
-            if k in _BASE_PAIR:
-                g = [k, _BASE_PAIR[k]]
-                if k == "w5_topk_offset":
-                    g.append("w5_plain_sort")
-            elif k.startswith("ext_") and k.endswith("_spark"):
-                g = [k, k[: -len("_spark")] + "_duckdb"]
-            else:
-                g = [k]
-            g = [x for x in g if x in compact["queries"]]
-            seen.update(g)
-            groups.append(g)
-        groups.sort(key=lambda g: max(compact["queries"][k] for k in g))
-        return groups
-    droppable = _pair_groups() + [
-        sorted(_SEGMENT_ANCHORS.values()),
-        ["anchor_pre_ml", "anchor_post_ml"],
-        ["anchor_first", "anchor_last"],
-    ]
-    while (
-        len(json.dumps(compact, separators=(",", ":"))) > _TAIL_BUDGET
-        and droppable
-    ):
-        for k in droppable.pop(0):
-            compact["queries"].pop(k, None)
-    if len(json.dumps(compact, separators=(",", ":"))) > _TAIL_BUDGET:
-        compact["queries"] = {}
-    compact["queries_omitted"] = len(payload["queries"]) - len(
-        compact["queries"]
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--reps", type=int, help="NAME mode: warm reps after the cold one (default 3)")
+    ap.add_argument("names", nargs="*", metavar="NAME")
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.names) - set(all_workloads()))
+    if unknown:
+        ap.error(f"unknown workload(s): {', '.join(unknown)}")
+    if args.reps is not None and not args.names:
+        ap.error("--reps needs at least one NAME")
+    # Python workers are processes of their own: they find the package
+    # through PYTHONPATH, whatever the working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
-    print(detail)
-    print(json.dumps(compact, separators=(",", ":")))
+    spark = build_spark(app_name="etl_lealone_spark_bench",
+                        extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    quiet_bounded_window_warnings(spark)
+    try:
+        if args.names:
+            reps = 3 if args.reps is None else args.reps
+            for rec in traced_reps(spark, args.names, reps, SF_DIR,
+                                   os.path.join(ROOT, ".profile")):
+                print(json.dumps(rec), flush=True)
+        else:
+            # 5e7 default: BASELINE.md shows the Spark/DuckDB crossover
+            # lives at this scale — fixed JVM overhead is amortized and the
+            # ratio reflects throughput
+            base_rows = int(os.environ.get("SPARK_GRAFT_BASE_ROWS", "50000000"))
+            print(suite(spark, HEADLINE, SF_DIR, base_rows, ROOT))
+    finally:
+        # a session left running when the interpreter exits makes the
+        # JVM shut down under py4j, which then prints listener errors
+        spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

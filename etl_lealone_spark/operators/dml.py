@@ -297,10 +297,13 @@ class SnapshotTable:
     ``spark.read.parquet`` runs on every call. A Spark write pins the
     schema of the frame it wrote; ``insert``, ``restore`` and
     ``clone_from`` inherit their source version's; a version this object
-    did not commit is inferred once on first read. Only the data columns
-    are kept: Spark still derives partition columns and their types from
-    the directory names on each read, exactly as inference does (and the
-    file source makes every column nullable either way). An entry is
+    did not commit is inferred once on first read — a table first opened
+    from disk therefore still infers its schema, partition column types
+    included, once. The pinned schema keeps the partition columns with
+    the written frame's types, so a read casts each directory value to
+    its written type: a zero-padded string key '01' stays '01' instead of
+    the int 1 inference would make of it (the file source makes every
+    column nullable either way). An entry is
     keyed on its ``_SUCCESS`` marker's mtime, so a version number reused
     after a drop, or rewritten by another object over the same root, is
     never served a stale schema.
@@ -318,7 +321,7 @@ class SnapshotTable:
         self.name = name
         self.partition_by = list(partition_by or [])
         self._version = max(self.versions(), default=-1)
-        # version -> (_SUCCESS mtime_ns, data-column schema)
+        # version -> (_SUCCESS mtime_ns, schema)
         self._schemas: dict[int, tuple[Optional[int], StructType]] = {}
 
     # -- snapshot layout ------------------------------------------------
@@ -472,11 +475,8 @@ class SnapshotTable:
             return None
 
     def _remember(self, version: int, schema: StructType) -> None:
-        """Pin ``version``'s schema, minus the partition columns (Spark
-        re-derives those from the directory names)."""
-        part = {c.lower() for c in self.partition_by}
-        data = StructType([f for f in schema.fields if f.name.lower() not in part])
-        self._schemas[version] = (self._marker_mtime(version), data)
+        """Pin ``version``'s schema, partition columns included."""
+        self._schemas[version] = (self._marker_mtime(version), schema)
 
     def _known_schema(self, version: int) -> Optional[StructType]:
         hit = self._schemas.get(version)

@@ -1,8 +1,8 @@
-"""scripts/profile.py on the shared session: one layer record per rep
-from perfbench's tracer, and the final AQE plan written after the reps,
-for a batch and a streaming workload."""
+"""bench.py's traced rep loop on the shared session, as NAME mode runs
+it: one layer record per rep from perfbench's tracer, and the final AQE
+plan written after the reps, for a batch and a streaming workload."""
 
-from scripts.profile import profile
+from bench import traced_reps
 
 NAMES = ["agg_groupby_having", "stream_tumbling_agg"]
 
@@ -10,7 +10,7 @@ NAMES = ["agg_groupby_having", "stream_tumbling_agg"]
 def test_profile_records_layers_and_final_plan(spark, sf_dir, tmp_path):
     jsqm = spark.streams._jsqm
     n_listeners = len(jsqm.listListeners())
-    recs = list(profile(spark, NAMES, 1, sf_dir, str(tmp_path)))
+    recs = list(traced_reps(spark, NAMES, 1, sf_dir, str(tmp_path)))
 
     assert [(r["name"], r["rep"]) for r in recs] == [(n, rep) for n in NAMES for rep in (0, 1)]
     for r in recs:
@@ -24,5 +24,5 @@ def test_profile_records_layers_and_final_plan(spark, sf_dir, tmp_path):
 
     assert "isFinalPlan=true" in (tmp_path / "agg_groupby_having.txt").read_text()
     assert (tmp_path / "stream_tumbling_agg.txt").read_text().startswith("== Physical Plan ==")
-    # the tracer's streaming listener does not outlive the profile
+    # the tracer's streaming listener does not outlive the loop
     assert len(jsqm.listListeners()) == n_listeners

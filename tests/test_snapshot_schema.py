@@ -97,9 +97,11 @@ def test_sql_mutation_paths_keep_inferred_schema(spark, tmp_path):
 
 
 def test_partitioned_paths_keep_inferred_schema(spark, tmp_path):
-    """Partition columns stay inferred from the directory names on each
-    read: a STRING column whose values look like integers reads back as
-    int, exactly as a bare ``spark.read.parquet`` gives it."""
+    """Partition columns are pinned with their written types: a STRING
+    column whose values look like integers stays string, where a bare
+    ``spark.read.parquet`` infers int. Every pinned read equals what
+    inference gives with partition type inference off (every partition
+    value read as a string)."""
     st = SnapshotTable(spark, str(tmp_path), "pt", partition_by=["p"])
     df = spark.range(40).select(
         F.col("id").cast("int").alias("id"),
@@ -107,32 +109,43 @@ def test_partitioned_paths_keep_inferred_schema(spark, tmp_path):
         (F.col("id") * 2).alias("x"),
     )
     st.write(df)
-    assert dict(st.read().dtypes)["p"] == "int"
-    _assert_pinned(spark, st)
+    assert dict(st.read().dtypes)["p"] == "string"
+    assert dict(spark.read.parquet(st._dir(0)).dtypes)["p"] == "int"
+
+    def pinned(t: SnapshotTable) -> None:
+        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        spark.conf.set(key, "false")
+        try:
+            _assert_pinned(spark, t)
+        finally:
+            spark.conf.unset(key)
+
+    pinned(st)
     for i in range(3):
         st.insert(
             spark.createDataFrame([(100 + i, "1", 7)], "id int, p string, x bigint")
         )
-        _assert_pinned(spark, st)
-    st.update(F.col("p") == 1, {"x": F.col("x") + 1}, partition_filter=F.col("p") == 1)
-    _assert_pinned(spark, st)
-    st.delete(F.col("id") == 0, partition_filter=F.col("p") == 0)
-    _assert_pinned(spark, st)
+        pinned(st)
+    st.update(F.col("p") == "1", {"x": F.col("x") + 1}, partition_filter=F.col("p") == "1")
+    pinned(st)
+    st.delete(F.col("id") == 0, partition_filter=F.col("p") == "0")
+    pinned(st)
 
     es = EngineSession(spark, warehouse=str(tmp_path / "wh"))
     es.catalog.tables["pt"] = st
     es.catalog.refresh_view("pt")
     es.sql("OPTIMIZE pt COMPACT MAX FILES 1")
     assert st.file_counts()[("1",)] == 1
-    _assert_pinned(spark, st)
+    pinned(st)
     es.sql("OPTIMIZE pt ZORDER BY (id, x)")
-    _assert_pinned(spark, st)
+    pinned(st)
     es.sql("OPTIMIZE pt")
-    _assert_pinned(spark, st)
+    pinned(st)
     es.sql("RESTORE TABLE pt TO VERSION AS OF 2")
-    _assert_pinned(spark, st)
+    pinned(st)
     es.sql("CREATE TABLE pt_clone CLONE pt")
-    _assert_pinned(spark, es.catalog.table("pt_clone"))
+    pinned(es.catalog.table("pt_clone"))
+    assert dict(st.read().dtypes)["p"] == "string"
 
 
 def test_version_reused_by_another_object_is_not_stale(spark, tmp_path):
