@@ -799,7 +799,11 @@ class StatementRouter:
         return self.spark.sql(self._rewrite_info_schema(q))
 
     def _ok(self, msg: str = "ok") -> DataFrame:
-        return self.spark.createDataFrame([(msg,)], "status string")
+        """A statement's one-row ``status`` result, as a LocalRelation:
+        showing it runs no job."""
+        return self.spark.sql(
+            "SELECT * FROM VALUES (:msg) AS t(status)", args={"msg": msg}
+        )
 
     # -- DDL -------------------------------------------------------------
     def _create(self, s: str) -> DataFrame:
@@ -884,7 +888,7 @@ class StatementRouter:
                         f"unknown collation in column DDL: {exc}"
                     ) from exc
                 raise
-            st.create(empty)
+            st.create_empty(empty.schema)
             self.catalog.tables[name] = st
             self.catalog.table_ddl[name] = s
             self.catalog.constraints[name] = cons
@@ -1836,11 +1840,12 @@ class StatementRouter:
         # align to target schema: missing columns → DEFAULT expr (falling
         # back to NULL), computed columns recomputed, order normalized
         cons = self.catalog.constraints.get(name, TableConstraints())
+        src_cols = set(src.columns)
 
         def source_col(c: str):
             if c in cons.computed:
                 return F.expr(cons.computed[c])
-            if c in src.columns:
+            if c in src_cols:
                 return F.col(c)
             if c in cons.identity:
                 # IDENTITY auto-fill (Column.java:78): a driver-reserved
@@ -2017,10 +2022,11 @@ class StatementRouter:
     ) -> None:
         """INSERT … SELECT: incoming keys plus the existing keys that are
         among them (a semi-join whose build side is the incoming keys),
-        grouped — any key seen twice is a duplicate."""
+        grouped — any key seen twice is a duplicate. A version without a
+        data file has no keys to probe."""
         keys = rows.filter(self._no_nulls(cols)).select(*cols)
         st = self.catalog.tables[name]
-        if st.exists():
+        if st.exists() and st.data_files():
             hits = st.read().select(*cols).join(keys, list(cols), "left_semi")
             keys = keys.unionByName(hits)
         self._check_unique(name, keys, cols)

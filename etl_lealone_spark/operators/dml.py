@@ -20,8 +20,10 @@ Scale design:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import tempfile
 from typing import Callable, Mapping, Optional, Sequence
 from urllib.parse import unquote
 
@@ -29,6 +31,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from ..tables import footer_schema
 
 
 def apply_update(
@@ -275,11 +279,12 @@ class SnapshotTable:
 
     Commit sequence (:meth:`_commit`, the one path that publishes a
     version): take the next version number, clear an uncommitted leftover
-    there, fill the directory, pin its schema, then advance ``version``.
-    Filling ends with the ``_SUCCESS`` marker — Spark's output committer
-    writes it, a metadata-only commit (restore, clone) writes it itself.
-    A version directory without the marker is uncommitted: a crash
-    mid-mutation leaves one, readers skip it and the next commit clears it.
+    there, persist the version's schema, fill the directory, then advance
+    ``version``. Filling ends with the ``_SUCCESS`` marker — Spark's
+    output committer writes it, a metadata-only commit (restore, clone,
+    an empty version) writes it itself. A version directory without the
+    marker is uncommitted: a crash mid-mutation leaves one, readers skip
+    it and the next commit clears it.
 
     Link policy (:meth:`_link_version`, the one place that makes a link):
     a new version shares data with its source version through symlinks,
@@ -291,22 +296,24 @@ class SnapshotTable:
     surviving version depends on and vacuum never frees one of them.
 
     Schema invariant: a committed version directory is immutable, so its
-    schema is fixed at commit and this object keeps it (the table owns
-    its columns, as the reference's StandardTable does). Reads pass it to
-    Spark, which then skips the schema-inference job a bare
-    ``spark.read.parquet`` runs on every call. A Spark write pins the
-    schema of the frame it wrote; ``insert``, ``restore`` and
-    ``clone_from`` inherit their source version's; a version this object
-    did not commit is inferred once on first read — a table first opened
-    from disk therefore still infers its schema, partition column types
-    included, once. The pinned schema keeps the partition columns with
-    the written frame's types, so a read casts each directory value to
-    its written type: a zero-padded string key '01' stays '01' instead of
-    the int 1 inference would make of it (the file source makes every
-    column nullable either way). An entry is
-    keyed on its ``_SUCCESS`` marker's mtime, so a version number reused
-    after a drop, or rewritten by another object over the same root, is
-    never served a stale schema.
+    schema is fixed at commit and kept on disk beside it, in
+    ``_v<n>.schema.json`` (the table owns its columns, as the
+    reference's StandardTable does). It sits outside the version
+    directory, which a Spark overwrite clears, and is written before the
+    version's ``_SUCCESS`` can exist, so every committed version has one;
+    VACUUM and DROP remove it with its version, and clearing a torn
+    version removes its schema with it. Reads pass it to Spark, which then
+    skips the schema-inference job a bare ``spark.read.parquet`` runs, on
+    any object over the root, a table reopened from disk included. A
+    Spark write persists the schema of the frame it wrote; ``insert``,
+    ``restore`` and ``clone_from`` their source version's. The schema
+    keeps the partition columns with the written frame's types, so a read
+    casts each directory value to its written type: a zero-padded string
+    key '01' stays '01' instead of the int 1 inference would make of it
+    (the file source makes every column nullable either way). A version
+    committed before schemas were persisted is inferred once, from its
+    footer (:func:`~etl_lealone_spark.tables.footer_schema`) and its
+    partition directories, and that schema is then persisted.
     """
 
     def __init__(
@@ -321,8 +328,6 @@ class SnapshotTable:
         self.name = name
         self.partition_by = list(partition_by or [])
         self._version = max(self.versions(), default=-1)
-        # version -> (_SUCCESS mtime_ns, schema)
-        self._schemas: dict[int, tuple[Optional[int], StructType]] = {}
 
     # -- snapshot layout ------------------------------------------------
     def _base(self) -> str:
@@ -352,24 +357,36 @@ class SnapshotTable:
         return os.path.exists(os.path.join(vdir, "_SUCCESS"))
 
     def _clear_torn(self, version: int) -> None:
-        """Remove an uncommitted leftover at ``version`` so the new
-        mutation starts clean — appending beside torn remains would merge
-        two half-writes."""
-        d = self._dir(version)
-        if os.path.isdir(d) and not self._committed(d):
-            shutil.rmtree(d, ignore_errors=True)
+        """Remove an uncommitted leftover at ``version``, its schema
+        included, so the new mutation starts clean — appending beside torn
+        remains would merge two half-writes."""
+        if not self._committed(self._dir(version)):
+            self._remove_version(version)
 
-    def _commit(self, fill: Callable[[str], Optional[StructType]]) -> int:
-        """The commit sequence (class docstring). ``fill(dir)`` writes the
-        new version's directory, ending with its ``_SUCCESS`` marker, and
-        returns the schema to pin (None: inferred on first read)."""
+    def _remove_version(self, version: int) -> None:
+        shutil.rmtree(self._dir(version), ignore_errors=True)
+        try:
+            os.remove(self._schema_path(version))
+        except FileNotFoundError:
+            pass
+
+    def _commit(self, schema: StructType, fill: Callable[[str], None]) -> int:
+        """The commit sequence (class docstring): persist ``schema`` as the
+        new version's, then ``fill(dir)`` writes the version's directory,
+        ending with its ``_SUCCESS`` marker."""
         new_version = self._version + 1
         self._clear_torn(new_version)
-        schema = fill(self._dir(new_version))
-        if schema is not None:
-            self._remember(new_version, schema)
+        self._persist_schema(new_version, schema)
+        fill(self._dir(new_version))
         self._version = new_version
         return new_version
+
+    @staticmethod
+    def _mark(vdir: str) -> None:
+        """The ``_SUCCESS`` marker of a commit no Spark job writes."""
+        os.makedirs(vdir, exist_ok=True)
+        with open(os.path.join(vdir, "_SUCCESS"), "w"):
+            pass
 
     def _save(self, df: DataFrame, vdir: str, mode: str) -> None:
         writer = df.write.mode(mode)
@@ -468,21 +485,44 @@ class SnapshotTable:
         refs = self._link_refs().values()
         return {t for pairs in refs for d, t in pairs if d == base}
 
-    def _marker_mtime(self, version: int) -> Optional[int]:
-        try:
-            return os.stat(os.path.join(self._dir(version), "_SUCCESS")).st_mtime_ns
-        except OSError:
-            return None
+    def _schema_path(self, version: int) -> str:
+        """Beside the version dir, '_'-prefixed like ``_SUCCESS``: file
+        scans treat it as metadata, not data."""
+        return os.path.join(self._base(), f"_v{version:06d}.schema.json")
 
-    def _remember(self, version: int, schema: StructType) -> None:
-        """Pin ``version``'s schema, partition columns included."""
-        self._schemas[version] = (self._marker_mtime(version), schema)
+    def _persist_schema(self, version: int, schema: StructType) -> None:
+        """Write ``version``'s schema, partition columns included; a
+        rename publishes it whole."""
+        path = self._schema_path(version)
+        os.makedirs(self._base(), exist_ok=True)
+        with tempfile.NamedTemporaryFile(
+            "w", dir=self._base(), prefix="_", suffix=".tmp", delete=False
+        ) as f:
+            f.write(schema.json())
+        os.replace(f.name, path)
 
     def _known_schema(self, version: int) -> Optional[StructType]:
-        hit = self._schemas.get(version)
-        if hit is None or hit[0] != self._marker_mtime(version):
+        """``version``'s persisted schema, None if it has none."""
+        try:
+            with open(self._schema_path(version)) as f:
+                return StructType.fromJson(json.load(f))
+        except FileNotFoundError:
             return None
-        return hit[1]
+
+    def _schema(self, version: int) -> StructType:
+        """``version``'s schema. A version committed before schemas were
+        persisted has none: its schema is inferred once, as a bare read
+        would infer it but without a Spark job, and persisted."""
+        schema = self._known_schema(version)
+        if schema is None:
+            vdir = self._dir(version)
+            schema = (
+                self.spark.read.schema(footer_schema(self.spark, vdir))
+                .parquet(vdir)
+                .schema
+            )
+            self._persist_schema(version, schema)
+        return schema
 
     def _check_version(self, version: int) -> None:
         """Raise for an unknown version, so a typo cannot silently read
@@ -514,12 +554,7 @@ class SnapshotTable:
         if version is not None:
             self._check_version(version)
         v = self._version if version is None else version
-        schema = self._known_schema(v)
-        if schema is None:
-            df = self.spark.read.parquet(self._dir(v))
-            self._remember(v, df.schema)
-            return df
-        return self.spark.read.schema(schema).parquet(self._dir(v))
+        return self.spark.read.schema(self._schema(v)).parquet(self._dir(v))
 
     def versions(self) -> list[int]:
         """All readable (committed) snapshot versions, oldest first."""
@@ -559,38 +594,37 @@ class SnapshotTable:
         if mode == "ignore" and self.exists():
             return self._version
 
-        def fill(vdir: str) -> StructType:
-            self._save(df, vdir, "overwrite")
-            return df.schema
-
-        return self._commit(fill)
+        return self._commit(df.schema, lambda vdir: self._save(df, vdir, "overwrite"))
 
     def _pruned_rewrite(self, transform, partition_filter: Column) -> int:
         """Rewrite ONLY the partitions holding a row that matches
         ``partition_filter``; the others are linked. Cost is O(touched
         data), not O(table)."""
         current = self.read()
-        keys = self._key_exprs()
         touched = self._touched(current.filter(partition_filter))
+        # keys spell NULL as the default partition: equality is null-safe
+        on = [F.expr(e) == F.col(k) for e, k in zip(self._key_exprs(), touched.columns)]
+        subset = current.join(F.broadcast(touched), on, "left_semi")
+        # align column order: partition cols last on disk, schema order in reads
+        out = transform(subset).select(current.columns)
         src = self._dir(self._version)
 
-        def fill(vdir: str) -> StructType:
+        def fill(vdir: str) -> None:
             self._link_version(src, vdir, {tuple(r) for r in touched.collect()})
-            # keys spell NULL as the default partition: equality is null-safe
-            on = [F.expr(e) == F.col(k) for e, k in zip(keys, touched.columns)]
-            subset = current.join(F.broadcast(touched), on, "left_semi")
-            # align column order: partition cols last on disk, schema order in reads
-            out = transform(subset).select(current.columns)
             self._save(out, vdir, "append")
-            # the frame's schema, not the source's: a widening transform
-            # wrote the wider type, which the reader can also apply to the
-            # linked untouched files
-            return out.schema
 
-        return self._commit(fill)
+        # the frame's schema, not the source's: a widening transform wrote
+        # the wider type, which the reader can also apply to the linked
+        # untouched files
+        return self._commit(out.schema, fill)
 
     def create(self, df: DataFrame) -> int:
         return self.write(df)
+
+    def create_empty(self, schema: StructType) -> int:
+        """Commit an empty version: no data file, only its schema and
+        marker. Metadata-only — no Spark job runs."""
+        return self._commit(schema, self._mark)
 
     def insert(self, rows: DataFrame) -> int:
         """INSERT: append-only — a NEW snapshot that links the previous
@@ -606,12 +640,11 @@ class SnapshotTable:
         if self.partition_by:
             touched = {tuple(r) for r in self._touched(rows).collect()}
 
-        def fill(vdir: str) -> Optional[StructType]:
+        def fill(vdir: str) -> None:
             self._link_version(self._dir(src), vdir, touched, link_touched=True)
             self._save(rows, vdir, "append")
-            return self._known_schema(src)
 
-        return self._commit(fill)
+        return self._commit(self._schema(src), fill)
 
     def update(
         self,
@@ -751,12 +784,14 @@ class SnapshotTable:
         # so hive partition columns (stored in the directory names, not
         # the files) are reconstructed for partitioned tables
         new_files = sorted(cur_map[r] for r in set(cur_map) - old)
+        current = self.read()
         if not new_files:
-            return self.read().limit(0)
+            return current.limit(0)
         return (
-            self.spark.read.option("basePath", self._dir(self._version))
+            self.spark.read.schema(self._schema(self._version))
+            .option("basePath", self._dir(self._version))
             .parquet(*new_files)
-            .select(self.read().columns)
+            .select(current.columns)
         )
 
     def _link_clone(self, src: "SnapshotTable", version: int) -> int:
@@ -764,13 +799,11 @@ class SnapshotTable:
         the body of RESTORE and SHALLOW CLONE. Metadata-only — no Spark
         job runs, so the marker is written here."""
 
-        def fill(vdir: str) -> Optional[StructType]:
+        def fill(vdir: str) -> None:
             self._link_version(src._dir(version), vdir)
-            with open(os.path.join(vdir, "_SUCCESS"), "w"):
-                pass
-            return src._known_schema(version)
+            self._mark(vdir)
 
-        return self._commit(fill)
+        return self._commit(src._schema(version), fill)
 
     def restore(self, version: int) -> int:
         """RESTORE: roll the table back to ``version`` by committing a
@@ -807,13 +840,12 @@ class SnapshotTable:
         return self._link_clone(src, src.version)
 
     def truncate(self) -> int:
-        """TRUNCATE TABLE (TruncateTable.java): empty snapshot, schema kept."""
-        empty = self.read().limit(0)
-        return self.write(empty)
+        """TRUNCATE TABLE (TruncateTable.java): empty snapshot, schema
+        kept in its read order. Metadata-only."""
+        return self.create_empty(self.read().schema)
 
     def drop(self) -> None:
         shutil.rmtree(self._base(), ignore_errors=True)
-        self._schemas.clear()
         self._version = -1
 
     def vacuum(
@@ -844,8 +876,7 @@ class SnapshotTable:
                     work.append(t)
         for v in refs:
             if v not in reachable:
-                shutil.rmtree(self._dir(v), ignore_errors=True)
-                self._schemas.pop(v, None)
+                self._remove_version(v)
 
 
 def snapshot_diff(

@@ -6,21 +6,27 @@ lineitem events documents embeddings — one parquet each under
 
 Scale notes: loading is a lazy parquet scan — column pruning and filter
 pushdown happen in Catalyst, so no table data is read until an action
-runs. Registration is not free, though: each ``spark.read.parquet``
-without a schema runs one Spark job to read a footer and infer the
-schema — about 1 s for the first table of a session and 50–80 ms for
-each after it at sf0.01 (``local[2]`` on a 4-core Xeon). ``load_tables``
-memoizes the relations per session so that cost is paid once. At
-cluster scale the same code reads a partitioned table directory;
+runs. Registration runs no Spark job either: each table's schema is
+read on the driver from one parquet footer (:func:`footer_schema`, the
+same footer and converter Spark's schema inference uses) and passed to
+``spark.read.schema(...)``, so Spark skips the inference job a bare
+``spark.read.parquet`` runs per table — about 1 s for the first table of
+a session and 50–80 ms for each after it at sf0.01 (``local[2]`` on a
+4-core Xeon). Registering all ten takes ~2.6 s in a fresh session,
+nearly all of it first-use JVM warm-up, and ~0.4 s warm; ``load_tables``
+memoizes the relations per session. At cluster scale the same code reads a partitioned table directory:
 nothing here assumes single-file inputs.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 TABLE_NAMES = (
     "region",
@@ -56,13 +62,82 @@ NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {
 }
 
 
+def _first_parquet_file(fs, root):
+    """The file whose footer Spark's schema inference reads under
+    ``root`` (``ParquetUtils.inferSchema`` without mergeSchema): a
+    ``_common_metadata`` summary, else a ``_metadata`` one, else the first
+    data file by path. Hidden entries are skipped as Spark's file index
+    skips them: names starting with '.', and with '_' unless a partition
+    directory (``_c=v``) or a summary file."""
+    if not fs.getFileStatus(root).isDirectory():
+        return root
+    leaves, todo = [], [root]
+    while todo:
+        for status in fs.listStatus(todo.pop()):
+            path = status.getPath()
+            name = path.getName()
+            if (
+                name.startswith(".")
+                or name.endswith("._COPYING_")
+                or name.startswith("_")
+                and "=" not in name
+                and not name.startswith(("_common_metadata", "_metadata"))
+            ):
+                continue
+            (todo if status.isDirectory() else leaves).append(path)
+    if not leaves:
+        raise FileNotFoundError(f"no parquet file under {root.toString()}")
+    rank = {"_common_metadata": 0, "_metadata": 1}
+    return min(leaves, key=lambda p: (rank.get(p.getName(), 2), p.toString()))
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The data schema Spark's parquet inference gives ``path``, read on
+    the driver from one footer: no Spark job runs.
+
+    It reads the footer inference reads (:func:`_first_parquet_file`) and
+    converts it as inference does: the Spark row metadata a Spark-written
+    file carries wins, else Spark's ``ParquetToSparkSchemaConverter``
+    built from the session's SQLConf converts the parquet schema, so the
+    session's nanosAsLong, timestamp-NTZ and binary-as-string settings
+    apply exactly as they apply to inference. Partition columns are not
+    in it: partition discovery adds them when ``path`` is read with this
+    schema. There is no fallback to inference: a footer that cannot be
+    read raises with its path."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        file = _first_parquet_file(root.getFileSystem(conf), root)
+    except Py4JJavaError as exc:
+        raise OSError(f"cannot list parquet path {path}: {exc.java_exception}") from exc
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    try:
+        footer = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        schema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(file, footer),
+            pq.ParquetToSparkSchemaConverter(state.conf()),
+        )
+    except Py4JJavaError as exc:
+        raise ValueError(
+            f"cannot read the parquet footer of {file.toString()}: {exc.java_exception}"
+        ) from exc
+    return StructType.fromJson(json.loads(schema.json()))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # defensive: the driver may pass a session built without this legacy
     # conf; it is runtime-settable and required to read TIMESTAMP(NANOS)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     for col in NANO_TS_COLUMNS.get(name, ()):
-        if col in df.columns and dict(df.dtypes)[col] == "bigint":
+        if col in schema.fieldNames() and schema[col].dataType == LongType():
             df = df.withColumn(
                 col, F.timestamp_micros((F.col(col) / 1000).cast("long"))
             )
@@ -70,15 +145,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # Lazy-relation memo, keyed by (SparkContext application id, dir): one
-# ``spark.read.parquet`` costs ~0.1s of driver-side footer/metadata work
-# even warm, so re-resolving all ten relations on EVERY workload build
-# (~1.0s/call measured, r12) multiplied across an 86-query bench run was
-# ~half the suite wall. The cached object is the UNRESOLVED lazy scan —
-# the session-catalog equivalent of a registered view, not a result or
-# a materialized intermediate: every query still plans, optimizes and
-# executes from the parquet files. Keyed by applicationId so a stopped
-# context's DataFrames are never handed to a new one; per-process only
-# (a fresh bench/verify invocation starts empty).
+# ``load_table`` costs ~40-50 ms of driver-side footer read and relation
+# resolution even warm (sf0.01, ``local[2]``, 4-core Xeon), so
+# re-resolving all ten relations on EVERY workload build would add
+# ~0.4 s to each build of an 86-query bench run. The cached object is
+# the UNRESOLVED lazy scan — the session-catalog equivalent of a
+# registered view, not a result or a materialized intermediate: every
+# query still plans, optimizes and executes from the parquet files.
+# Keyed by applicationId so a stopped context's DataFrames are never
+# handed to a new one; per-process only (a fresh bench/verify invocation
+# starts empty).
 _TABLE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 

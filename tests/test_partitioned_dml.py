@@ -204,9 +204,9 @@ def test_torn_snapshot_is_invisible_and_cleared(spark, tmp_path):
     next mutation must clear the torn remains instead of merging with
     them (the exactly-once contract the SCD2 applier builds on)."""
     st = _table(spark, tmp_path)
-    # a handle opened from disk infers dt as a date, the writer's handle
-    # keeps the written string: compare the rows in one spelling
-    cols = [F.col("dt").cast("string"), "id", "v"]
+    # a handle opened from disk reads the persisted schema, dt string
+    # included, as the writer's handle does
+    cols = ["dt", "id", "v"]
     v0_rows = sorted(tuple(r) for r in st.read().select(*cols).collect())
     # simulate the torn dir: cloned links only, no _SUCCESS, no data
     # for the 'touched' partition
@@ -653,15 +653,19 @@ def test_pruned_update_of_null_partition(spark, tmp_path):
     assert {r["id"]: r["v"] for r in st.read(version=0).collect()} == {1: 10, 2: 20}
 
 
-def test_string_partition_keeps_type_through_pruned_update(spark, tmp_path):
+def test_string_partition_keeps_type_through_pruned_update(
+    spark, tmp_path, jobs_run_by
+):
     """A zero-padded STRING partition value reads back as written: '01'
     stays '01', not the int 1 partition inference makes of it. With the
     inferred int, a pruned update of p = '01' wrote its new rows to p=1
-    and kept p=01 linked, so 3 rows became 5."""
-    st = SnapshotTable(spark, str(tmp_path), "zp", partition_by=["p"])
-    st.create(
+    and kept p=01 linked, so 3 rows became 5. The type is persisted with
+    the version, so a handle opened from disk reads it too, with no job."""
+    SnapshotTable(spark, str(tmp_path), "zp", partition_by=["p"]).create(
         spark.createDataFrame([("01", 1), ("01", 2), ("02", 3)], "p string, x int")
     )
+    st = SnapshotTable(spark, str(tmp_path), "zp", partition_by=["p"])
+    assert jobs_run_by(st.read) == 0
     assert dict(st.read().dtypes)["p"] == "string"
     st.update(
         F.lit(True), {"x": F.col("x") + 10}, partition_filter=F.col("p") == "01"

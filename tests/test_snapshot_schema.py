@@ -1,17 +1,23 @@
-"""SnapshotTable keeps each committed version's schema.
+"""SnapshotTable keeps each committed version's schema on disk.
 
 A version directory is immutable, so ``SnapshotTable.read`` passes the
-schema it recorded at commit instead of letting Spark infer it (one job
-per read). These tests pin the two halves of that contract:
+schema persisted at commit instead of letting Spark infer it (one job
+per read). These tests pin the halves of that contract:
 
 - after every mutation path, the pinned read has exactly the schema a
   bare ``spark.read.parquet(dir)`` infers, and the read was served from
   the pinned schema rather than by inference;
+- a table reopened from disk reads the persisted schema, partition
+  types included, without a job;
 - a warm single-statement DELETE or INSERT runs exactly one Spark job,
-  its write — a schema-inference job that comes back fails here.
+  its write, CREATE TABLE runs none, and a bulk INSERT … SELECT into
+  an empty keyed table does not probe its empty snapshot — a
+  schema-inference job that comes back fails here.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,10 +27,17 @@ from etl_lealone_spark.session import EngineSession
 
 
 def _assert_pinned(spark, st: SnapshotTable, version=None):
-    """``st.read(v)`` serves the pinned schema and it equals inference."""
+    """``st.read(v)`` serves the pinned schema and it equals inference.
+    An empty version (CREATE TABLE, TRUNCATE) has no data file, so there
+    is nothing to infer from: it reads as its pinned columns."""
     v = st.version if version is None else version
-    assert st._known_schema(v) is not None, f"v{v} schema not pinned"
-    assert st.read(v).schema == spark.read.parquet(st._dir(v)).schema
+    pinned = st._known_schema(v)
+    assert pinned is not None, f"v{v} schema not pinned"
+    if st.data_files(v):
+        assert st.read(v).schema == spark.read.parquet(st._dir(v)).schema
+    else:
+        got = [(f.name, f.dataType, f.nullable) for f in st.read(v).schema]
+        assert got == [(f.name, f.dataType, True) for f in pinned]
 
 
 def test_sql_mutation_paths_keep_inferred_schema(spark, tmp_path):
@@ -163,12 +176,69 @@ def test_version_reused_by_another_object_is_not_stale(spark, tmp_path):
     assert a.read().schema == spark.read.parquet(a._dir(0)).schema
 
 
-def test_opened_table_infers_once(spark, tmp_path):
+def test_opened_table_infers_once(spark, tmp_path, jobs_run_by):
+    """A version committed before schemas were persisted has no schema
+    file: its first read infers the schema from its footer, without a
+    job, and persists it."""
     SnapshotTable(spark, str(tmp_path), "t").write(spark.range(5))
     opened = SnapshotTable(spark, str(tmp_path), "t")
+    os.remove(opened._schema_path(0))
     assert opened._known_schema(0) is None
+    assert jobs_run_by(opened.read) == 0
+    assert opened._known_schema(0) is not None
     assert opened.read().count() == 5
     _assert_pinned(spark, opened)
+
+    # a partitioned version that links its source's partitions infers
+    # its partition columns as a bare read does
+    pt = SnapshotTable(spark, str(tmp_path), "lp", partition_by=["k"])
+    pt.write(spark.range(6).selectExpr("id", "id % 3 AS k"))
+    pt.insert(spark.range(6, 8).selectExpr("id", "id % 3 AS k"))
+    for v in pt.versions():
+        os.remove(pt._schema_path(v))
+    reopened = SnapshotTable(spark, str(tmp_path), "lp", partition_by=["k"])
+    for v, n in zip(reopened.versions(), (6, 8)):
+        assert jobs_run_by(lambda: reopened.read(v)) == 0
+        assert reopened.read(v).count() == n
+        _assert_pinned(spark, reopened, v)
+
+
+def test_vacuum_and_drop_remove_schemas(spark, tmp_path):
+    st = SnapshotTable(spark, str(tmp_path), "vs")
+    for i in range(3):
+        st.write(spark.range(i + 1))
+    st.vacuum(keep_last=1)
+    assert st.versions() == [2]
+    assert [f for f in os.listdir(st._base()) if f.endswith(".json")] == [
+        os.path.basename(st._schema_path(2))
+    ]
+    st.drop()
+    assert not os.path.exists(st._schema_path(2))
+
+
+def test_create_table_runs_no_job(spark, tmp_path, jobs_run_by):
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    create = "CREATE TABLE e0 (id INT PRIMARY KEY, s VARCHAR(5))"
+    assert jobs_run_by(lambda: es.sql(create).collect()) == 0
+    st = es.catalog.table("e0")
+    assert not st.data_files()
+    assert es.sql("SELECT * FROM e0").collect() == []
+    _assert_pinned(spark, st)
+
+
+def test_bulk_insert_into_empty_keyed_table(spark, tmp_path, jobs_run_by):
+    """INSERT … SELECT into a keyed table whose snapshot holds no data
+    file skips the semi-join probe of that snapshot; duplicates among
+    the incoming keys are still rejected."""
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    es.sql("CREATE TABLE bk (id INT PRIMARY KEY, v INT)")
+    bulk = "INSERT INTO bk SELECT CAST(id AS INT), CAST(id * 2 AS INT) FROM range(50) AS r"
+    assert jobs_run_by(lambda: es.sql(bulk)) < 5
+    assert es.sql("SELECT count(*) FROM bk").collect()[0][0] == 50
+    es.sql("CREATE TABLE bd (id INT PRIMARY KEY, v INT)")
+    with pytest.raises(ValueError, match="unique constraint violation"):
+        es.sql("INSERT INTO bd SELECT 1, CAST(id AS INT) FROM range(2) AS r")
+    assert es.sql("SELECT count(*) FROM bd").collect()[0][0] == 0
 
 
 @pytest.mark.parametrize(
