@@ -1834,9 +1834,13 @@ class StatementRouter:
                 f"AS t({', '.join(cols)})"
             )
         else:
-            src = self.spark.sql(rewrite(rest.strip("()"), session=self.session)).toDF(
-                *cols
-            )
+            # INSERT INTO t (SELECT …): drop one pair of parentheses, and
+            # only when it encloses the whole query — not the ones of
+            # `… FROM range(50)` or `(SELECT 1) UNION (SELECT 2)`
+            inner = _balanced_group(rest, 0) if rest.startswith("(") else None
+            if inner is not None and len(inner) + 2 == len(rest):
+                rest = inner
+            src = self.spark.sql(rewrite(rest, session=self.session)).toDF(*cols)
         # align to target schema: missing columns → DEFAULT expr (falling
         # back to NULL), computed columns recomputed, order normalized
         cons = self.catalog.constraints.get(name, TableConstraints())

@@ -122,7 +122,6 @@ def merge_by_key(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
-    broadcast_source: bool = False,
 ) -> DataFrame:
     """MERGE INTO target KEY(k...) — upsert (Merge.java:35,146-230).
 
@@ -138,8 +137,9 @@ def merge_by_key(
     gets NULL. It must not carry a column the target lacks.
 
     Implemented as a single full-outer join on the key with an explicit
-    source-presence marker — one shuffle, or zero when the source
-    broadcasts.
+    source-presence marker. Spark cannot broadcast either side of a full
+    outer join, so it plans a sort-merge join that shuffles both the
+    source and the whole target, however small the source.
     """
     extra = [c for c in source.columns if c not in target.columns]
     missing = [k for k in keys if k not in source.columns]
@@ -157,8 +157,7 @@ def merge_by_key(
             f"MERGE source has NULL in key column(s) {list(keys)} "
             "(reference: COLUMN_CONTAINS_NULL_VALUES)"
         )
-    src = F.broadcast(source) if broadcast_source else source
-    s = src.select(
+    s = source.select(
         [F.col(c).alias(f"__s_{c}") for c in source.columns]
         + [F.lit(True).alias("__s_present")]
     )

@@ -47,6 +47,10 @@ def _default_offheap() -> str:
     return f"{max(1, min(8, int(total_gib // 8)))}g"
 
 
+LOCALFS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "localfs.jar")
+_LOCALFS_PKG = "etl_lealone_spark.localfs"
+
+
 def build_spark(
     app_name: str = "etl_lealone_spark",
     cores: Optional[int] = None,
@@ -67,6 +71,25 @@ def build_spark(
     - Arrow enabled so any Pandas-UDF path is vectorized batch transfer.
     - Session timezone pinned to UTC for cross-engine (DuckDB oracle)
       determinism.
+
+    Always, whatever ``extra_conf`` says: the ``file:`` scheme is served
+    by the java.nio filesystem in ``jvm/localfs.jar`` (source beside it,
+    rebuilt by ``scripts/build_localfs_jar.py``), for both the
+    FileSystem and the FileContext API. Without libhadoop, Hadoop's
+    local filesystem starts a ``chmod`` process for every file and
+    directory it creates and a ``readlink`` process for every link
+    lookup, and a FileContext rename makes two: 2.2 ms for a
+    ``setPermission`` and 1.9 ms for a ``getFileLinkStatus``, against
+    0.04 ms for an ``exists`` (timed through py4j, 4-core host).
+    Snapshot commits, streaming checkpoints and state-store commits are
+    made of those calls: a whole run of the ``ingest_mutate`` benchmark
+    workload started 1268 processes, 8 with the shim (Spark's and
+    PySpark's own ``rm``, ``setsid``, ``getconf`` and worker daemon).
+    The shim's ``setPermission`` and link-status calls use java.nio and
+    return what the stock ones return; the ``.crc`` checksum files and
+    the permission modes written stay the same. The jar is appended to
+    any caller-given ``spark.driver.extraClassPath`` and
+    ``spark.executor.extraClassPath``; a missing jar or class fails here.
     """
     n = cores or default_parallelism()
     conf = {
@@ -126,12 +149,33 @@ def build_spark(
         "spark.sql.streaming.minBatchesToRetain": "2",
     }
     conf.update(extra_conf or {})
+    conf = localfs_conf(conf)
     existing = SparkSession.getActiveSession() is not None
     spark = SparkSession.builder.config(map=conf).getOrCreate()
     if existing:
         _warn_unapplied_confs(spark, conf)
     spark.sparkContext.setLogLevel("WARN")
+    # instantiate the file: filesystem now, so a class the JVM cannot
+    # load fails at session start rather than at the first write
+    spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
     return spark
+
+
+def localfs_conf(conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` with the java.nio local filesystem registered for the
+    ``file:`` scheme (see ``build_spark``): the jar appended to the
+    driver and executor class paths, both Hadoop filesystem APIs
+    pointed at its classes."""
+    if not os.path.isfile(LOCALFS_JAR):
+        raise FileNotFoundError(
+            f"{LOCALFS_JAR} is missing; rebuild it with scripts/build_localfs_jar.py"
+        )
+    out = dict(conf)
+    for key in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+        out[key] = os.pathsep.join(p for p in (conf.get(key), LOCALFS_JAR) if p)
+    out["spark.hadoop.fs.file.impl"] = f"{_LOCALFS_PKG}.NioLocalFileSystem"
+    out["spark.hadoop.fs.AbstractFileSystem.file.impl"] = f"{_LOCALFS_PKG}.NioLocalFs"
+    return out
 
 
 def _warn_unapplied_confs(spark: SparkSession, requested: dict[str, str]) -> None:

@@ -274,7 +274,7 @@ def upsert_sink(
         # collapse in-batch duplicates per key (keep max by all non-key
         # cols is arbitrary; use last-wins on a deterministic order)
         src = batch_df.dropDuplicates(key_cols)
-        merged = merge_by_key(table.read(), src, key_cols, broadcast_source=True)
+        merged = merge_by_key(table.read(), src, key_cols)
         table.write(merged, mode="overwrite")
 
     return (
@@ -303,17 +303,19 @@ def drain_to_batch(
     state store hash-partitions by key at any setting, so the emitted
     rows are identical (pinned by test at two settings). Sizing
     guidance: at oracle/bench scale small wins (32 partitions measured
-    ~3x the wall of 8; 4 is ~20% under 8 again; the stream_dedup_hashes
-    drain at sf0.01, local[2] on a 4-core host, median of 5: 1.27 s at
-    4, 1.08 s at 2 and at 1 — identical rows at every setting; the
-    RocksDB state store provider, with or without changelog
-    checkpointing, was slower at 1.37/1.23 s); on a
-    cluster size it to state-key cardinality / executor count like any
-    shuffle — a query whose state keys outgrow the setting serializes
-    state work, so this is the first knob to raise when stateful stages
-    lag. The session conf is held for the WHOLE drain and restored
-    after: the first micro-batch is planned asynchronously after
-    ``start()``, so restoring immediately would still be racy.
+    ~3x the wall of 8). The warm stream_dedup_hashes build at sf0.01,
+    ``local[2]`` on a 4-core host, median of 7 runs in one session:
+    0.25 s at 1, 0.26 s at 2 and 0.29 s at 4, identical rows at every
+    setting. Before the local filesystem ``build_spark`` registers, the
+    same build took 0.51/0.57/0.67 s, most of it ``chmod`` and
+    ``readlink`` processes; the RocksDB state store provider, measured
+    before that change, was slower than the default one. On a cluster
+    size it to state-key cardinality / executor count like any shuffle
+    — a query whose state keys outgrow the setting serializes state
+    work, so this is the first knob to raise when stateful stages lag.
+    The session conf is held for the WHOLE drain and restored after: the
+    first micro-batch is planned asynchronously after ``start()``, so
+    restoring immediately would still be racy.
     """
     import os
 

@@ -578,20 +578,20 @@ def _flush_sentinel(ev, uid: int = -1):
 
 
 def _ckpt_tmp(prefix: str) -> str:
-    """Per-run streaming-checkpoint scratch dir, on tmpfs when the host
-    has one. The checkpoint (offset WAL, commit log, state-store
-    deltas) is fsync-per-trigger traffic that lives only for the
-    drain — on ext4 those fsyncs measured ~120ms of every ~500ms
-    micro-batch, pure per-trigger overhead at oracle/bench scale. On a
-    real cluster the checkpoint goes to reliable shared storage
-    instead (it IS the recovery contract there); a memory-backed
-    checkpoint is only sound because these drains are
-    run-to-completion-then-discard."""
-    import os
+    """Per-run streaming-checkpoint scratch dir under the system temp
+    dir. The checkpoint (offset log, commit log, state-store deltas)
+    lives only for the drain: these drains run to completion and are
+    discarded. Checkpoints on tmpfs bought nothing measurable: the warm
+    stream_dedup_hashes build (sf0.01, ``local[2]``, 4-core host, median
+    of 7) took 0.265 s with them on tmpfs and 0.263 s on disk, and 0.586
+    vs 0.572 s before ``build_spark`` registered the java.nio local
+    filesystem — the per-trigger file cost was ``chmod``/``readlink``
+    processes, not I/O. On a real cluster the checkpoint goes to
+    reliable shared storage instead (it IS the recovery contract
+    there)."""
     import tempfile
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    return tempfile.mkdtemp(prefix=prefix)
 
 
 def _drain_stream(spark, sdf, tmp: str, qname: str, state_partitions: int = 2):

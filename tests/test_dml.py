@@ -322,6 +322,25 @@ def test_sql_version_as_of(spark, tmp_path):
     assert n == 1
 
 
+@pytest.mark.parametrize(
+    "query, want",
+    [
+        ("SELECT CAST(id AS INT), CAST(id * 2 AS INT) FROM range(3)", {0: 0, 1: 2, 2: 4}),
+        ("(SELECT 1, 10) UNION (SELECT 2, 20)", {1: 10, 2: 20}),
+        ("(SELECT CAST(id AS INT), 7 FROM range(2))", {0: 7, 1: 7}),
+    ],
+    ids=["ends_in_call", "parenthesized_union", "parenthesized_whole"],
+)
+def test_insert_select_keeps_inner_parentheses(spark, tmp_path, query, want):
+    """Only a pair of parentheses around the whole query is dropped."""
+    from etl_lealone_spark.session import EngineSession
+
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    es.sql("CREATE TABLE ins (id int, v int)")
+    es.sql(f"INSERT INTO ins {query}")
+    assert {r["id"]: r["v"] for r in es.sql("SELECT * FROM ins").collect()} == want
+
+
 def test_snapshot_diff_cdc(spark, tmp_path):
     """snapshot_diff: CDC between two retained snapshot versions."""
     from etl_lealone_spark.operators.dml import SnapshotTable, snapshot_diff
