@@ -33,5 +33,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per query (omitted for non-SQL-expressible ops)."""
+    """DuckDB oracle SQL per query; every query has one."""
     return _workloads.oracle_sql()

@@ -43,7 +43,7 @@ ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
 from etl_lealone_spark.session import build_spark, quiet_bounded_window_warnings  # noqa: E402
-from etl_lealone_spark.workloads import all_workloads  # noqa: E402
+from etl_lealone_spark.workloads import all_workloads, duck_con  # noqa: E402
 from perfbench.layers import Tracer  # noqa: E402
 from perfbench.ops import Op  # noqa: E402
 
@@ -385,17 +385,8 @@ EXT_DUAL = [
 def extension_dual_run(spark, data_dir: str, reps: int = 2) -> dict[str, float]:
     """Interleaved Spark-vs-DuckDB timings for oracle-backed extension
     workloads at ``data_dir``; returns {ext_NAME_spark: s, ext_NAME_duckdb: s}."""
-    import duckdb
-
-    from etl_lealone_spark.tables import TABLE_NAMES
-
     registry = all_workloads()
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{data_dir}/{t}.parquet')"
-        )
+    con = duck_con(data_dir)
     out: dict[str, float] = {}
     for name in EXT_DUAL:
         w = registry[name]

@@ -20,7 +20,7 @@ Rules (the failures that only surface as a cluster bill at 100 TB):
   refactor that lost the limit while keeping an interposed node could
   slip through as a false-negative.
 
-``scripts/plan_lint.py`` sweeps every registered workload through these
+tests/test_registry.py runs every registered workload through these
 rules; tests/test_plans.py unit-tests the rules on planted plans.
 """
 
@@ -234,6 +234,14 @@ def lint_plan(plan: str) -> list[str]:
     mode) — the ``formatted`` mode splits operator attributes away from
     the tree, which defeats the scalar-broadcast shape check. Use
     :func:`lint_df` to lint a DataFrame with the canonical mode.
+
+    Lint the plan taken BEFORE execution, not the final AQE plan
+    (``isFinalPlan=true``): there the build side under a
+    BroadcastNestedLoopJoin is a ``BroadcastQueryStage``, not a
+    ``BroadcastExchange``, so the ``bnl-join`` shape check flags scalar
+    broadcasts it accepts before execution: 20 registry workloads at
+    sf0.001, ``tpch_q22``, ``bm25_topk`` and ``nb_lang_confusion`` among
+    them.
     """
     hits = []
     for rule, pat in RULES:

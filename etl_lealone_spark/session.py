@@ -209,7 +209,7 @@ def _warn_unapplied_confs(spark: SparkSession, requested: dict[str, str]) -> Non
 
 def quiet_bounded_window_warnings(spark: SparkSession) -> None:
     """Silence ONLY the WindowExec "No Partition Defined" WARN line —
-    for plan lint/audit sweeps (r7 verdict task 7): there the
+    for registry sweeps (bench.py, tests/test_registry.py): there the
     structural ``global_window_unbounded`` rule is the authoritative
     check (it recognizes WindowGroupLimit-bounded rank-filter shapes
     the blanket JVM warning cannot), so every firing during a sweep is

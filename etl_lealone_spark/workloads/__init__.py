@@ -1,9 +1,10 @@
 """Driver-facing workload inventory.
 
-Each workload pairs a Spark DataFrame builder with (where expressible) an
-equivalent ANSI-SQL oracle string for DuckDB. The driver runs both at
-sf=0.01 and compares row-count + schema + order-insensitive value hash
-(see repo root ``__spark_entry__.py``).
+Each workload pairs a Spark DataFrame builder with an equivalent ANSI-SQL
+oracle string for DuckDB. ``tests/test_registry.py`` runs both and
+compares row count, column set and the order-insensitive ``canonical``
+frame (the driver contract in the repo root ``__spark_entry__.py``
+exposes the same pairs).
 
 Cross-engine determinism rules every workload in this package follows:
 
@@ -27,24 +28,29 @@ Cross-engine determinism rules every workload in this package follows:
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import duckdb
+    import pandas as pd
 
 
 @dataclass(frozen=True)
 class Workload:
     name: str
     build: Callable[[SparkSession, str], DataFrame]
-    oracle: Optional[str]  # DuckDB SQL; None → driver does rows-only check
+    oracle: str  # DuckDB SQL over the same tables
     doc: str = ""
 
 
 _REGISTRY: dict[str, Workload] = {}
 
 
-def workload(name: str, oracle: Optional[str], doc: str = ""):
+def workload(name: str, oracle: str, doc: str = ""):
     """Decorator registering a (spark, sf_dir) -> DataFrame builder."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
@@ -52,256 +58,6 @@ def workload(name: str, oracle: Optional[str], doc: str = ""):
         return fn
 
     return deco
-
-
-# The driver's correctness gate checks the FIRST 50 entries of
-# ``queries()`` only, so registration order decides which workloads get
-# fresh driver evidence. The window is GENERATED by
-# ``scripts/evidence_ledger.py priority`` from
-# the CORRECTNESS_r0*.json ledger — oldest-driver-evidence-first
-# (never-checked new workloads lead, then ascending last-green round;
-# MODULE_CHANGED workloads sort as stratum 0 — their evidence certifies
-# code that no longer exists — and PROMOTED workloads as stratum 1; see
-# evidence_ledger.py for both sets). Round-12 window (r11 verdict task
-# 2): pure staleness rotation — MODULE_CHANGED is EMPTY (all 19 r11
-# entries got fully-green CORRECTNESS_r11 rows under the changed code),
-# so the window is the three new quantile_sketch_* workloads (never
-# checked) + minhash_band_skew (PROMOTED: the round's one perf-weak
-# grade needs a fresh correctness row) + the full 41-workload
-# r07 stratum (stalest, 4 rounds old: dedup/cluster family, tpch_q3-q10
-# /q18/q21, events_*, kmv, pack/split/mix samplers, text corpus stats)
-# + the first 5 of the r08 stratum alphabetically. The tail keeps
-# ledger order so the NEXT rotation continues draining (remaining r08,
-# then r09). Verify with ``evidence_ledger.py check``.
-_PRIORITY: tuple[str, ...] = (
-    "quantile_sketch_by_flag",
-    "quantile_sketch_merged",
-    "quantile_sketch_price",
-    "minhash_band_skew",
-    "cluster_balanced_sample",
-    "corpus_stats_report",
-    "dedup_canonical",
-    "dedup_clusters",
-    "dedup_minhash_pairs",
-    "dq_audit_orders",
-    "dup_span_doc_stats",
-    "embedding_l2_normalize",
-    "embedding_near_dup",
-    "embedding_quantize_int8",
-    "events_cohort_retention",
-    "events_transition_matrix",
-    "graph_triangle_count",
-    "hybrid_rrf_topk",
-    "interval_overlap_orders",
-    "json_variant_agg",
-    "kmv_distinct_by_source",
-    "kmv_distinct_events",
-    "mix_sampling_weights",
-    "pack_sequence_bins",
-    "phrase_search_postings",
-    "pii_redaction",
-    "quantile_hash_sample",
-    "scd2_stream_compacted",
-    "semantic_dedup_survivors",
-    "split_train_val_test",
-    "text_repetition_signals",
-    "text_unigram_logprob",
-    "tpch_q10",
-    "tpch_q18",
-    "tpch_q21",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q9",
-    "train_order_shards",
-    "unpivot_measures",
-    "url_extract_normalize",
-    "vocab_top_terms",
-    "winnow_fingerprints",
-    "ann_bruteforce_topk",
-    "ann_ivf_stream_build",
-    "asof_join_events",
-    "bigram_pmi_top",
-    "bloom_join_prune",
-    # ---- window boundary (slot 50) ----
-    "bucketed_colocated_join",
-    "dedup_clusters_lp",
-    "filter_clause_agg",
-    "graph_degree_topk",
-    "graph_pagerank",
-    "group_by_all",
-    "hard_negative_mining",
-    "kmv_join_overlap",
-    "lateral_topn_per_nation",
-    "merge_ansi",
-    "mix_resample",
-    "ngram_containment_blocked",
-    "pretrain_pipeline_e2e",
-    "priority_sample_topk",
-    "range_join_events",
-    "rolling_window_time",
-    "salted_join_skewed",
-    "shard_balance_stats",
-    "skew_diagnose_orders",
-    "snapshot_time_travel",
-    "source_overlap_matrix",
-    "text_model_quality",
-    "tpch_q1",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q19",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q22",
-    "tpch_q7",
-    "tpch_q8",
-    "try_functions",
-    "udf_alias_agg",
-    "window_distribution",
-    "window_share_of_total",
-    "zipf_slope_top100",
-    "zorder_curve_keys",
-    "bool_bit_agg",
-    "case_coalesce_nullif",
-    "chi2_term_class_top",
-    "correlated_scalar_subquery",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "distinct_aggregates",
-    "distinct_multi",
-    "embedding_near_dup_blocked",
-    "events_sessionize",
-    "expr_arithmetic",
-    "filter_predicates",
-    "group_concat",
-    "group_concat_distinct",
-    "hard_negative_mining_batch",
-    "histogram_agg",
-    "join_cross",
-    "join_left_outer",
-    "join_natural",
-    "join_right_outer",
-    "join_theta_bands",
-    "knn_label_vote",
-    "like_escape_regexp",
-    "merge_upsert",
-    "multimodal_metadata",
-    "nb_en_auc_binned",
-    "nb_lang_confusion",
-    "nb_score_calibration",
-    "ngram_jaccard_blocked",
-    "null_safe_equal",
-    "numeric_corr_matrix",
-    "orderby_limit_offset",
-    "orderby_limit_threshold",
-    "orderby_nulls",
-    "pivot_agg",
-    "snapshot_clone_restore",
-    "snapshot_diff_cdc",
-    "tfidf_doc_keywords",
-    "agg_groupby_having",
-    "ann_lsh_topk",
-    "ann_lsh_topk_mp2",
-    "anti_join_not_exists",
-    "array_functions",
-    "array_higher_order",
-    "cast_conversion",
-    "chunk_token_windows",
-    "cms_term_frequency",
-    "collation_orderby",
-    "corpus_kl_drift",
-    "cosine_float_topk",
-    "cube_agg",
-    "date_functions",
-    "decontaminate_ngrams",
-    "dedup_minhash_survivors",
-    "dedup_simhash_pairs",
-    "delete_filter",
-    "dup_ngram_spans",
-    "events_funnel_steps",
-    "events_lag_delta",
-    "events_resample_hourly",
-    "events_tumbling_agg",
-    "fuzzy_name_pairs",
-    "grouping_sets_agg",
-    "join_full_outer",
-    "quantified_all_any",
-    "quick_aggregates",
-    "rollup_agg",
-    "rownum_row_number",
-    "sample_hash_stratified",
-    "sample_size_input",
-    "scalar_subquery",
-    "selectivity_agg",
-    "setop_all_variants",
-    "setop_except",
-    "setop_intersect",
-    "setop_union",
-    "setop_union_all",
-    "stddev_var_agg",
-    "streaming_corpus_build",
-    "system_range",
-    "tuple_in_subquery",
-    "update_projection",
-    "values_table",
-    "window_running_sum",
-    "ann_ivf_recall",
-    "ann_ivf_topk",
-    "ann_ivf_topk_batch",
-    "ann_ivfpq_topk_batch",
-    "ann_lsh_recall",
-    "array_posexplode",
-    "bm25_topk",
-    "bpe_encode_stats",
-    "bpe_pair_counts",
-    "ccnet_fluency_buckets",
-    "dsir_importance_weights",
-    "join_inner_agg",
-    "join_seven_tables",
-    "json_extract_agg",
-    "json_schema_projection",
-    "kmeans_cluster_profile",
-    "kmeans_separation_audit",
-    "logreg_label_probe",
-    "math_functions",
-    "ols_price_model",
-    "pca_label_projection",
-    "percentile_agg",
-    "pq_adc_topk",
-    "recursive_series",
-    "recursive_tree_depth",
-    "ridge_price_model",
-    "scd2_dim_update",
-    "semi_join_in_subquery",
-    "stream_dedup_hashes",
-    "stream_enrich_agg",
-    "stream_interval_join",
-    "stream_interval_join_left",
-    "stream_late_data_drop",
-    "stream_session_agg",
-    "stream_sliding_agg",
-    "stream_stateful_totals",
-    "stream_tumbling_agg",
-    "stream_upsert_sink",
-    "string_functions",
-    "text_fingerprint",
-    "text_language_id",
-    "text_quality_filter",
-    "text_quality_score",
-    "text_token_count",
-    "unigram_seed_pieces",
-    "update_with_limit",
-    "view_predicate_pushdown",
-    "window_range_frame",
-    "window_rank_family",
-    "window_topk_per_group",
-)
 
 
 def all_workloads() -> dict[str, Workload]:
@@ -331,14 +87,7 @@ def all_workloads() -> dict[str, Workload]:
     from . import pretrain_q  # noqa: F401
     from . import ml_q  # noqa: F401
 
-    ordered: dict[str, Workload] = {}
-    for name in _PRIORITY:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
-    for name, w in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = w
-    return ordered
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -346,4 +95,54 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: w.oracle for name, w in all_workloads().items() if w.oracle}
+    return {name: w.oracle for name, w in all_workloads().items()}
+
+
+def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    import duckdb
+
+    from etl_lealone_spark.tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+class NonScalarCell(ValueError):
+    """A result cell holds a list/array/dict — the driver comparator
+    crashes on these (round-3 postmortem: embedding_quantize_int8), so
+    the local gate must reject them too. md5/array_join such columns in
+    BOTH engines instead (see operators/xhash.py conventions)."""
+
+
+def canonical(df: pd.DataFrame) -> pd.DataFrame:
+    """Sort columns by name, normalize cell values, sort rows.
+
+    Bit-compatible with the driver's comparator (round-3 postmortem):
+    - floats are NEVER int-ified — a DuckDB HUGEINT surfacing as
+      float64 ``0.0`` must mismatch Spark's int ``0`` here exactly as
+      it does in the driver's hash (fix the oracle with an explicit
+      ``CAST(... AS BIGINT)``, not the comparator);
+    - list/array/dict cells raise ``NonScalarCell`` — the driver's
+      hasher dies on them (``unhashable type: 'list'``).
+    """
+    df = df[sorted(df.columns)].copy()
+
+    def norm(v):
+        if v is None or (isinstance(v, float) and math.isnan(v)):
+            return "<null>"
+        if isinstance(v, float):
+            return repr(float(v))
+        if isinstance(v, (list, tuple, dict)) or type(v).__name__ == "ndarray":
+            raise NonScalarCell(
+                f"non-scalar result cell {type(v).__name__}: md5/array_join "
+                "it in both engines (xhash rule)"
+            )
+        return str(v)
+
+    for c in df.columns:
+        df[c] = df[c].map(norm)
+    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)

@@ -1,8 +1,8 @@
-"""Sensitivity of the correctness gate's comparator (scripts/
-check_oracles.canonical): the whole verification story rests on this
-comparison actually DETECTING divergence. These tests corrupt known-
-equal frames one way at a time and assert the gate flags each — a
-comparator that silently normalizes differences away would make every
+"""Sensitivity of the correctness gate's comparator
+(``workloads.canonical``, which tests/test_registry.py applies to every
+workload): the whole verification story rests on this comparison
+actually DETECTING divergence. These tests corrupt known-equal frames
+one way at a time and assert the gate flags each — a comparator that silently normalizes differences away would make every
 green sweep meaningless.
 
 Round-4 hardening: the round-3 postmortem found the local gate was MORE
@@ -19,15 +19,11 @@ driver. The contract pinned here is now driver-strict:
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, ".")
-
-from scripts.check_oracles import NonScalarCell, canonical  # noqa: E402
+from etl_lealone_spark.workloads import NonScalarCell, canonical
 
 
 def _eq(a: pd.DataFrame, b: pd.DataFrame) -> bool:

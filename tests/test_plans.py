@@ -318,8 +318,8 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
 
 
 def test_plan_lint_rules(spark, tables):
-    """The lint (scripts/plan_lint.py sweeps all registered workloads
-    with it) must flag planted anti-patterns and pass the legitimate
+    """The lint (tests/test_registry.py applies it to every registered
+    workload) must flag planted anti-patterns and pass the legitimate
     scalar-broadcast shape."""
     from etl_lealone_spark.plans.lint import lint_df
 

@@ -1,7 +1,7 @@
 """TPC-H-adapted suite: result sanity + 100TB plan-shape pins.
 
 Value-level correctness is enforced by the DuckDB oracle gate
-(scripts/check_oracles.py — every tpch_q* carries an oracle); these
+(tests/test_registry.py — every tpch_q* carries an oracle); these
 tests pin the structural properties that would silently regress into
 cluster-scale cost: dimension joins staying broadcast, filters reaching
 the scan, correlated-subquery rewrites staying semi/anti joins, and
