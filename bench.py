@@ -3,6 +3,7 @@ registry workloads, timed by ``perfbench/layers.Tracer``.
 
     python bench.py                      # headline suite, then the dual-runs
     python bench.py [--reps N] NAME...   # per-layer profile of each NAME
+    python bench.py --scale 1,3,10 [--reps N] NAME...   # scale exponents
 
 The data dir is ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
 
@@ -27,6 +28,13 @@ NAME mode runs one cold rep, then N warm reps (default 3), of each NAME
 and prints one JSON line per rep. After the reps the frame is built and
 collected once more, outside the timing, and its final plan
 (``isFinalPlan=true``) is written to ``.profile/NAME.txt``.
+
+Scale mode first writes the data dir grown K× for every K
+(:func:`write_scaled`, under a temp dir removed at exit), then runs the
+NAME-mode reps over each K's dir. Per NAME it prints one JSON line per K
+(the median of the warm reps) and then the exponents of warm ``wall_s``
+and of ``exec.shuffle_write_bytes`` against the measured
+``exec.input_records`` ratio (:func:`scale_exponents`).
 """
 
 from __future__ import annotations
@@ -34,8 +42,12 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import math
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
 from types import SimpleNamespace
 
@@ -43,6 +55,7 @@ ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
 from etl_lealone_spark.session import build_spark, quiet_bounded_window_warnings  # noqa: E402
+from etl_lealone_spark.tables import TABLE_NAMES  # noqa: E402
 from etl_lealone_spark.workloads import all_workloads, duck_con  # noqa: E402
 from perfbench.layers import Tracer  # noqa: E402
 from perfbench.ops import Op  # noqa: E402
@@ -114,12 +127,10 @@ HEADLINE = [
     "stream_session_agg",      # session-window streaming agg (cross-batch merge)
     "stream_dedup_hashes",     # cross-batch stateful exact dedup
     "stream_upsert_sink",      # foreachBatch MERGE upsert into a snapshot table
-    "stream_enrich_agg",       # stream-static enrich join + agg (r11: last
-                               # oracled workload with no bench row)
+    "stream_enrich_agg",       # stream-static enrich join + agg
     "stream_interval_join_left",  # outer stream-stream join (r10)
     "stream_late_data_drop",   # dual-watermark late-data semantics (r10)
-    "quantile_sketch_price",   # stride-quantile sketch (r12 — benched
-                               # from birth, same rule as ridge)
+    "quantile_sketch_price",   # stride-quantile sketch
     "quantile_sketch_by_flag",  # grouped stride-quantile twin (r12)
     "quantile_sketch_merged",  # sharded-build merge path (r12)
     # ---- ML / corpus-statistics family ----
@@ -136,11 +147,21 @@ HEADLINE = [
     "bpe_encode_stats",        # BPE train->encode->token budgets per source
     "logreg_label_probe",      # fixed-point logistic regression probe (r10)
     "ols_price_model",         # closed-form grouped OLS (r10)
-    "ridge_price_model",       # closed-form grouped ridge (r11 — benched
-                               # from birth; the r10 verdict flagged
-                               # stream_enrich_agg for landing without a
-                               # bench row)
+    "ridge_price_model",       # closed-form grouped ridge (r11)
 ]
+
+def _interleaved(s_run, d_run, reps: int) -> tuple[float, float]:
+    """One untimed run of each engine, then ``reps`` timed runs with the
+    engines interleaved; the minimum of each, in seconds."""
+    s_run(), d_run()
+    times: tuple[list, list] = ([], [])
+    for _ in range(reps):
+        for fn, ts in zip((s_run, d_run), times):
+            t0 = time.time()
+            fn()
+            ts.append(time.time() - t0)
+    return round(min(times[0]), 3), round(min(times[1]), 3)
+
 
 def baseline_workloads(spark, n: int = 50_000_000, reps: int = 3) -> dict[str, float]:
     """BASELINE.md W1-W5 batch shapes at n rows (the reference's own
@@ -158,9 +179,6 @@ def baseline_workloads(spark, n: int = 50_000_000, reps: int = 3) -> dict[str, f
     absolute times are not. Fresh DataFrames per rep (re-using one would
     replay materialized AQE query stages and time nothing).
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     out: dict[str, float] = {}
@@ -339,23 +357,13 @@ def baseline_workloads(spark, n: int = 50_000_000, reps: int = 3) -> dict[str, f
             "w5": ("w5_topk_offset", w5),
         }
         for key, (out_key, fn) in spark_keys.items():
-            fn()  # warm spark
-            duck_run(key)  # warm duckdb
-            s_times, d_times = [], []
-            for _ in range(reps):
-                t0 = time.time()
-                fn()
-                s_times.append(time.time() - t0)
-                t0 = time.time()
-                duck_run(key)
-                d_times.append(time.time() - t0)
-            out[out_key] = round(min(s_times), 3)
+            out[out_key], out[f"{key}_duckdb"] = _interleaved(
+                fn, lambda: duck_run(key), reps)
             if key == "w5":  # transparency: the un-pruned plan alongside
                 w5_plain()
                 t0 = time.time()
                 w5_plain()
                 out["w5_plain_sort"] = round(time.time() - t0, 3)
-            out[f"{key}_duckdb"] = round(min(d_times), 3)
         con.close()
     finally:
         for k, v in _saved.items():
@@ -397,17 +405,7 @@ def extension_dual_run(spark, data_dir: str, reps: int = 2) -> dict[str, float]:
         def d_run():
             con.execute(w.oracle).fetchall()
 
-        s_run(), d_run()  # warm both engines
-        st, dt = [], []
-        for _ in range(reps):
-            t0 = time.time()
-            s_run()
-            st.append(time.time() - t0)
-            t0 = time.time()
-            d_run()
-            dt.append(time.time() - t0)
-        out[f"ext_{name}_spark"] = round(min(st), 3)
-        out[f"ext_{name}_duckdb"] = round(min(dt), 3)
+        out[f"ext_{name}_spark"], out[f"ext_{name}_duckdb"] = _interleaved(s_run, d_run, reps)
     con.close()
     return out
 
@@ -469,6 +467,151 @@ def traced_reps(spark, names, reps: int, data_dir: str, plan_dir: str | None = N
             jsqm.removeListener(lst)
 
 
+# the tables write_scaled grows K×; it links every other table
+SCALED = ("documents", "embeddings", "lineitem")
+
+
+def _scaled_copy(name: str, t, i: int):
+    """Copy ``i`` of the arrow table ``t`` of ``name`` (one of SCALED)."""
+    import random
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def put(t, col, values):
+        return t.set_column(t.schema.get_field_index(col), t.schema.field(col), values)
+
+    if name == "lineitem":
+        return t
+    id_col = "doc_id" if name == "documents" else "vec_id"
+    ids = t[id_col]
+    stride = 10 ** len(str(pc.max(ids).as_py()))
+    t = put(t, id_col, pc.add(ids, pa.scalar(i * stride, ids.type)))
+    if name == "documents":
+        return put(t, "text", pc.replace_substring_regex(
+            t["text"], pattern=r"(^|\s)(\S)", replacement=rf"\1c{i}q\2"))
+    emb = t["embedding"].combine_chunks()
+    lengths = np.diff(emb.offsets.to_numpy())
+    dim = int(lengths[0]) if len(lengths) else 0
+    if emb.null_count or (lengths != dim).any():
+        raise ValueError("embeddings: every vector must be non-null and of one length")
+    rng = random.Random(9000 + i)
+    perm = list(range(dim))
+    rng.shuffle(perm)
+    signs = np.array([rng.choice((-1.0, 1.0)) for _ in range(dim)], dtype=np.float32)
+    moved = emb.flatten().to_numpy().reshape(-1, dim)[:, perm] * signs
+    return put(t, "embedding", pa.ListArray.from_arrays(
+        emb.offsets, pa.array(moved.ravel()), type=emb.type))
+
+
+def write_scaled(src: str, dst: str, k: int) -> None:
+    """Write the data dir ``src`` grown ``k``× into ``dst``: each table in
+    SCALED is one parquet file of ``k`` copies, one row group per copy,
+    and every other table is a link to its source file. K=1 goes through
+    the same writer, so every K has the same file layout.
+
+    The copies hold each workload's DENSITY constant, so a scale exponent
+    measures the algorithm, not the growth of its output:
+
+    - documents: every word of copy i carries the tag ``c{i}q``. A copy
+      keeps the source's within-copy near-dup structure (the same
+      transformation hits every document), while copies of one document
+      share no shingle. Appending a trailing salt per copy instead leaves
+      copies ~98% shingle-identical: the true near-dup pair count grows
+      K², and MinHash shuffle bytes measured 103× for 30× the data — the
+      output size, not the algorithm.
+    - embeddings: copy i permutes the coordinates and flips their signs,
+      both drawn from ``Random(9000 + i)``. That keeps every distance
+      within a copy, but a copy of a vector points elsewhere: a query's
+      true neighbours stay in its own copy, and every added copy is
+      distractor mass, the regime a growing real corpus presents.
+      Nudging every component by +0.003·i instead made a query's own
+      replicas its whole top-10 and pinned measured recall at 1.0.
+    - lineitem: plain copies.
+
+    Copy i adds ``i * 10**d`` to ``doc_id`` and ``vec_id``, ``d`` being the
+    digit count of the largest id: ids stay unique, and copy 0 keeps the
+    source ids, so a workload's ``vec_id < n`` query set is the same at
+    every K.
+    """
+    import pyarrow.parquet as pq
+
+    os.makedirs(dst)
+    for name in TABLE_NAMES:
+        path, out = (os.path.join(d, f"{name}.parquet") for d in (src, dst))
+        if name not in SCALED:
+            os.symlink(os.path.realpath(path), out)
+            continue
+        t = pq.read_table(path)
+        with pq.ParquetWriter(out, t.schema) as w:
+            for i in range(k):
+                w.write_table(_scaled_copy(name, t, i))
+
+
+def scale_exponents(name: str, per_k: dict[int, dict]) -> dict:
+    """The exponents e of warm ``wall_s`` ~ input^e and of
+    ``exec.shuffle_write_bytes`` ~ input^e, for every K against the
+    smallest, where input is the measured ``exec.input_records``. An
+    exponent is null when either side is 0 (the per-K lines carry the
+    values). Raises ValueError when ``exec.input_records`` does not grow
+    with K: then ``name`` reads none of the scaled tables, and an exponent
+    would describe nothing."""
+    ks = sorted(per_k)
+    inputs = [per_k[k]["exec.input_records"] for k in ks]
+    if any(b <= a for a, b in zip(inputs, inputs[1:])):
+        raise ValueError(
+            f"{name}: exec.input_records does not grow with K "
+            f"({dict(zip(ks, inputs))}); it reads none of {', '.join(SCALED)}"
+        )
+    base, ratios = per_k[ks[0]], [n / inputs[0] for n in inputs[1:]]
+
+    def exponents(key):
+        return [
+            round(math.log(per_k[k][key] / base[key]) / math.log(r), 3)
+            if base[key] > 0 and per_k[k][key] > 0 else None
+            for k, r in zip(ks[1:], ratios)
+        ]
+
+    return {"name": name, "base_k": ks[0], "k": ks[1:],
+            "input_ratio": [round(r, 3) for r in ratios],
+            "wall_exp": exponents("wall_s"),
+            "shuffle_exp": exponents("exec.shuffle_write_bytes")}
+
+
+def scale(spark, names, ks, reps: int, data_dir: str):
+    """Scale mode: write ``data_dir`` grown K× for every K in ``ks`` under
+    one temp dir, trace ``reps`` warm reps of every name over each, and
+    remove the temp dir. Then yield, per name, one record per K (the
+    median of its warm reps) and its :func:`scale_exponents`."""
+    root = tempfile.mkdtemp(prefix="bench_scale_")
+    saved = tempfile.tempdir
+    warm: dict[str, dict[int, list]] = {n: {k: [] for k in ks} for n in names}
+    try:
+        dirs = {k: os.path.join(root, f"k{k}") for k in ks}
+        for k, d in dirs.items():
+            write_scaled(data_dir, d, k)
+        # workloads persist state (IVF indexes, snapshot roots) under the
+        # temp dir, keyed by their data dir: keep it in root, which goes
+        tempfile.tempdir = root
+        for k, d in dirs.items():
+            for rec in traced_reps(spark, names, reps, d):
+                if rec["rep"]:
+                    warm[rec["name"]][k].append(rec)
+    finally:
+        tempfile.tempdir = saved
+        shutil.rmtree(root, ignore_errors=True)
+    for name in names:
+        per_k = {
+            k: {key: statistics.median(r[key] for r in recs)
+                for key in recs[0] if key not in ("name", "rep")}
+            for k, recs in warm[name].items()
+        }
+        for k in ks:
+            yield {"name": name, "k": k, "reps": reps, **per_k[k]}
+        yield scale_exponents(name, per_k)
+
+
 def suite(spark, names, data_dir: str, base_rows: int, out_dir: str) -> str:
     """Run the headline suite over ``names`` and the dual-runs, write
     ``out_dir/BENCH_DETAIL.json`` and return the final stdout line."""
@@ -522,16 +665,32 @@ def final_line(payload: dict) -> str:
     }, separators=(",", ":"))
 
 
+def _scale_factors(text: str) -> list[int]:
+    try:
+        ks = sorted({int(k) for k in text.split(",")})
+    except ValueError:
+        ks = []
+    if len(ks) < 2 or ks[0] < 1:
+        raise argparse.ArgumentTypeError(f"{text!r}: needs two or more distinct integers K >= 1")
+    return ks
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--reps", type=int, help="NAME mode: warm reps after the cold one (default 3)")
+    ap.add_argument("--scale", type=_scale_factors, metavar="K,K[,K...]",
+                    help="trace each NAME over the data grown K× for each K")
     ap.add_argument("names", nargs="*", metavar="NAME")
     args = ap.parse_args(argv)
     unknown = sorted(set(args.names) - set(all_workloads()))
     if unknown:
         ap.error(f"unknown workload(s): {', '.join(unknown)}")
-    if args.reps is not None and not args.names:
-        ap.error("--reps needs at least one NAME")
+    for flag in ("reps", "scale"):
+        if getattr(args, flag) is not None and not args.names:
+            ap.error(f"--{flag} needs at least one NAME")
+    reps = 3 if args.reps is None else args.reps
+    if args.scale and reps < 1:
+        ap.error("--scale needs --reps >= 1: its exponents are of warm reps")
     # Python workers are processes of their own: they find the package
     # through PYTHONPATH, whatever the working directory
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -542,8 +701,10 @@ def main(argv=None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     quiet_bounded_window_warnings(spark)
     try:
-        if args.names:
-            reps = 3 if args.reps is None else args.reps
+        if args.scale:
+            for rec in scale(spark, args.names, args.scale, reps, SF_DIR):
+                print(json.dumps(rec), flush=True)
+        elif args.names:
             for rec in traced_reps(spark, args.names, reps, SF_DIR,
                                    os.path.join(ROOT, ".profile")):
                 print(json.dumps(rec), flush=True)

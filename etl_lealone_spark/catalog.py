@@ -45,6 +45,7 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from .dialect import _mask_nested, _split_top_level, _sub_outside_literals, rewrite
 from .operators.dml import SnapshotTable, merge_by_key
 from .services import ServiceMeta, generate_model_code, generate_service_code, parse_methods
 
@@ -338,33 +339,9 @@ def _parse_columns(cols_sql: str) -> tuple[str, list[str], "TableConstraints"]:
     The top-level splitter tracks string literals as well as paren
     depth: a comma inside a quoted DEFAULT/CHECK literal (``DEFAULT
     'a,b'``) is literal content, not a column separator."""
-    parts: list[str] = []
-    depth = 0
-    in_quote = False
-    cur = []
-    for ch in cols_sql:
-        if ch == "'":
-            in_quote = not in_quote
-            cur.append(ch)
-        elif in_quote:
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-
     fields, pks = [], []
     cons = TableConstraints()
-    for p in parts:
+    for p in _split_top_level(cols_sql):
         is_constraint = re.match(
             r"(CONSTRAINT|FOREIGN|UNIQUE|KEY|PRIMARY|CHECK)\b",
             p.strip(),
@@ -571,8 +548,6 @@ class StatementRouter:
                 self.session.invalidate_cache()
             return result
         # SELECT / WITH / VALUES / FROM-first → dialect → Spark SQL
-        from .dialect import rewrite
-
         s = self._rewrite_info_schema(s)
         s = self._rewrite_time_travel(s)
         s = self._rewrite_table_diff(s)
@@ -949,8 +924,6 @@ class StatementRouter:
         if m:
             # CREATE TABLE … AS query (CTAS — Parser.java:5777
             # setQuery(parseSelect()); optional column list renames)
-            from .dialect import rewrite
-
             name = m.group("name").lower()
             if name in self.catalog.tables:
                 if re.search(r"IF\s+NOT\s+EXISTS", s, re.IGNORECASE):
@@ -984,8 +957,6 @@ class StatementRouter:
             # virtual views, TableView.java): the defining query runs
             # once into a snapshot table; reads scan the stored result;
             # REFRESH re-runs the query into a new snapshot.
-            from .dialect import rewrite
-
             name = m.group("name").lower()
             if name in self.catalog.mat_views:
                 if re.search(r"IF\s+NOT\s+EXISTS", s, re.IGNORECASE):
@@ -1015,8 +986,6 @@ class StatementRouter:
             re.IGNORECASE | re.DOTALL,
         )
         if m:
-            from .dialect import rewrite
-
             name = m.group("name").lower()
             if name in self.catalog.views and not m.group("or_replace"):
                 raise ValueError(f"view already exists: {name}")
@@ -1293,8 +1262,6 @@ class StatementRouter:
         )
         if m:
             # AlterView.java: recompile (re-resolve) or redefine
-            from .dialect import rewrite
-
             name = m.group("name").lower()
             if name not in self.catalog.views:
                 raise KeyError(f"view not found: {name}")
@@ -1503,8 +1470,6 @@ class StatementRouter:
         computed expressions (outside string literals). A write checks
         only the constraints it can break, by column name, so a stale
         name would silently skip the renamed column's checks."""
-        from .dialect import _sub_outside_literals
-
         st = self.catalog.table(name)
         st.write(st.read().withColumnRenamed(old, new))
         ident = rf"\b{re.escape(old)}\b(?!\s*\()"
@@ -1583,7 +1548,7 @@ class StatementRouter:
                 raise KeyError(f"service not found: {name}")
             args = [
                 self._coerce(a.strip().strip("'"))
-                for a in self._split_top_level(m.group("args"))
+                for a in _split_top_level(m.group("args"))
                 if a.strip()
             ]
             result = self.session.call_service(name, m.group("method"), *args)
@@ -1804,8 +1769,6 @@ class StatementRouter:
             if m.group("cols")
             else target_cols
         )
-        from .dialect import rewrite
-
         if rest.upper().startswith("DIRECT"):
             # INSERT … DIRECT query (Parser.java:1030 setInsertFromSelect):
             # a single-node buffering hint — snapshot inserts already
@@ -1818,7 +1781,7 @@ class StatementRouter:
             src = self.spark.sql("SELECT * FROM VALUES (1) AS t(__dummy)")
         elif rest.upper().startswith("SET"):
             # MySQL-style INSERT … SET a = 1, b = 'x' (Parser.java:1053)
-            pairs = self._split_top_level(rest[len("SET"):])
+            pairs = _split_top_level(rest[len("SET"):])
             cols, vals = [], []
             for pr in pairs:
                 k, v = pr.split("=", 1)
@@ -2036,29 +1999,33 @@ class StatementRouter:
         self._check_unique(name, keys, cols)
 
     def _update(self, s: str) -> DataFrame:
+        # matched over the mask, so a WHERE or LIMIT inside a literal or a
+        # subquery does not end the SET list; the groups are read from s
         m = re.match(
             rf"UPDATE\s+(?P<name>{_IDENT})\s+SET\s+(?P<sets>.+?)"
             rf"(?:\s+WHERE\s+(?P<where>.+?))?(?:\s+LIMIT\s+(?P<limit>\d+))?\s*$",
-            s,
+            _mask_nested(s),
             re.IGNORECASE | re.DOTALL,
         )
         if not m:
             raise ValueError(f"cannot parse UPDATE: {s[:80]}")
-        name = m.group("name").lower()
+        name, sets, where, limit = (
+            s[m.start(g):m.end(g)] if m.group(g) is not None else None
+            for g in ("name", "sets", "where", "limit")
+        )
+        name = name.lower()
         st = self.catalog.table(name)
         assignments = {}
-        for part in self._split_top_level(m.group("sets")):
+        for part in _split_top_level(sets):
             k, v = part.split("=", 1)
             assignments[k.strip().lower()] = F.expr(v.strip())
-        cond = F.expr(m.group("where")) if m.group("where") else F.lit(True)
+        cond = F.expr(where) if where else F.lit(True)
         df = st.read()
-        if m.group("limit"):
+        if limit:
             from .operators.dml import apply_update_limit
 
             pk = self._pk_of(name)
-            new_df = apply_update_limit(
-                df, cond, assignments, int(m.group("limit")), pk
-            )
+            new_df = apply_update_limit(df, cond, assignments, int(limit), pk)
             # LIMIT picks among the matching rows: check every row after
             self._validate_write(
                 name, new_df, assigned={c: F.col(c) for c in assignments}, after=new_df
@@ -2122,8 +2089,6 @@ class StatementRouter:
         )
         keys = [k.strip().lower() for k in m.group("keys").split(",")]
         rest = m.group("rest").strip()
-        from .dialect import rewrite
-
         if rest.upper().startswith("VALUES"):
             src = self.spark.sql(
                 f"SELECT * FROM ({rewrite(rest, session=self.session)}) "
@@ -2179,7 +2144,6 @@ class StatementRouter:
         ta = (m.group("ta") or name).lower()
         sa = (m.group("sa") or "__merge_src").lower()
         src_sql = m.group("src")
-        from .dialect import rewrite
         from .operators.dml import ANSI_MERGE_DUP_MSG, merge_ansi
 
         if src_sql.startswith("("):
@@ -2189,11 +2153,11 @@ class StatementRouter:
 
         def rw(txt: str) -> str:
             # resolve alias-qualified refs into the kernel's joined
-            # namespace: sa.x -> __s_x, ta.x -> x
-            e = re.sub(
+            # namespace: sa.x -> __s_x, ta.x -> x; literals stay as written
+            e = _sub_outside_literals(
                 rf"\b{re.escape(sa)}\s*\.\s*(\w+)", r"__s_\1", txt, flags=re.IGNORECASE
             )
-            return re.sub(
+            return _sub_outside_literals(
                 rf"\b{re.escape(ta)}\s*\.\s*(\w+)", r"\1", e, flags=re.IGNORECASE
             )
 
@@ -2205,7 +2169,7 @@ class StatementRouter:
         update_set = None
         if matched and not delete_matched:
             update_set = {}
-            for assign in re.split(r",(?![^()]*\))", matched[len("UPDATE SET"):]):
+            for assign in _split_top_level(matched[len("UPDATE SET"):]):
                 col, expr = assign.split("=", 1)
                 key = col.strip().lower().removeprefix(f"{ta}.")
                 update_set[key] = F.expr(rw(expr.strip()))
@@ -2216,7 +2180,7 @@ class StatementRouter:
                 if m.group("icols")
                 else target_cols
             )
-            ivals = [v.strip() for v in re.split(r",(?![^()]*\))", m.group("ivals"))]
+            ivals = _split_top_level(m.group("ivals"))
             if len(icols) != len(ivals):
                 raise ValueError("ANSI MERGE: INSERT column/value count mismatch")
             insert_values = {c: F.expr(rw(v)) for c, v in zip(icols, ivals)}
@@ -2250,8 +2214,6 @@ class StatementRouter:
 
     # -- utility ---------------------------------------------------------
     def _explain(self, s: str) -> DataFrame:
-        from .dialect import rewrite
-
         body = s.split(None, 1)[1]
         if body.upper().startswith("ANALYZE"):
             body = body.split(None, 1)[1]
@@ -2316,8 +2278,6 @@ class StatementRouter:
         return self._ok(f"set {name}")
 
     def _call(self, s: str) -> DataFrame:
-        from .dialect import rewrite
-
         expr = s.split(None, 1)[1]
         m = re.match(
             r"EXECUTE_SERVICE_(?P<kind>NO_RETURN_VALUE|WITH_RETURN_VALUE)"
@@ -2517,8 +2477,6 @@ class StatementRouter:
         )
         if not m:
             raise ValueError(f"cannot parse REFRESH: {s[:80]}")
-        from .dialect import rewrite
-
         name = m.group("name").lower()
         if name not in self.catalog.mat_views:
             raise KeyError(f"materialized view not found: {name}")
@@ -2537,8 +2495,6 @@ class StatementRouter:
 
     def _refresh_incremental(self, name: str) -> DataFrame:
         from pyspark.sql import functions as F
-
-        from .dialect import rewrite
 
         query = self.catalog.mat_views[name]
         if name not in self.catalog.mv_base:
@@ -2823,26 +2779,6 @@ class StatementRouter:
         if val.upper() in ("TRUE", "FALSE"):
             return val.upper() == "TRUE"
         return val
-
-    @staticmethod
-    def _split_top_level(s: str) -> list[str]:
-        parts, depth, cur, in_str = [], 0, [], False
-        for ch in s:
-            if ch == "'":
-                in_str = not in_str
-            if not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    parts.append("".join(cur))
-                    cur = []
-                    continue
-            cur.append(ch)
-        if cur:
-            parts.append("".join(cur))
-        return [p.strip() for p in parts if p.strip()]
 
     def _pk_of(self, name: str) -> list[str]:
         meta = self.catalog.indexes.get(f"__pk_{name}")

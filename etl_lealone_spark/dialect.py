@@ -356,6 +356,33 @@ def _sub_outside_literals(pattern: str, repl, sql: str, flags: int = 0) -> str:
     return "".join(out)
 
 
+def _mask_nested(s: str) -> str:
+    """``s`` with every character of a string literal or of a
+    parenthesized group, delimiters included, replaced by NUL. A regex
+    over the mask sees only top-level keywords and commas, and its spans
+    index ``s``."""
+    out, depth, in_str = [], 0, False
+    for ch in s:
+        if ch == "'":
+            in_str = not in_str
+            nested = True
+        elif in_str:
+            nested = True
+        else:
+            depth += (ch == "(") - (ch == ")")
+            nested = depth > 0 or ch == ")"
+        out.append("\0" if nested else ch)
+    return "".join(out)
+
+
+def _split_top_level(s: str) -> list[str]:
+    """The non-empty, stripped pieces of ``s`` between its top-level
+    commas (see :func:`_mask_nested`)."""
+    cuts = [i for i, ch in enumerate(_mask_nested(s)) if ch == ","]
+    parts = [s[a + 1:b] for a, b in zip([-1, *cuts], [*cuts, len(s)])]
+    return [p.strip() for p in parts if p.strip()]
+
+
 def _rewrite_nullary_system_fns(sql: str) -> str:
     def repl(m: re.Match) -> str:
         name = m.group(1).upper()

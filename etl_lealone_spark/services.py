@@ -29,6 +29,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from .dialect import _split_top_level
+
 
 @dataclass
 class ServiceMeta:
@@ -46,20 +48,7 @@ class ServiceMeta:
 def parse_methods(body: str) -> dict[str, tuple[list[tuple[str, str]], str]]:
     """``add(user varchar) long, say_hello() void`` → method dict."""
     out: dict[str, tuple[list[tuple[str, str]], str]] = {}
-    depth, cur, parts = 0, [], []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    for p in parts:
+    for p in _split_top_level(body):
         m = re.match(
             r"\s*(?P<name>\w+)\s*\((?P<args>[^)]*)\)\s*(?P<ret>.*?)\s*$", p
         )

@@ -1,14 +1,22 @@
-"""bench.py's suite entry: a layer record per headline query in
-BENCH_DETAIL.json, and a final stdout line that fits the last-2000-chars
-window a record keeper parses, whatever the timings."""
+"""bench.py's three modes: the suite writes a layer record per headline
+query to BENCH_DETAIL.json and a final stdout line that fits the
+last-2000-chars window a record keeper parses, whatever the timings; NAME
+mode traces each rep and writes the final AQE plan; scale mode grows the
+data K× and reports exponents against the measured input growth."""
 
 from __future__ import annotations
 
 import json
+import os
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 import bench
+from bench import traced_reps
+from etl_lealone_spark.tables import TABLE_NAMES
+from etl_lealone_spark.workloads import all_workloads
 
 # the dual-run keys of baseline_workloads and extension_dual_run
 DUAL_KEYS = [
@@ -57,3 +65,62 @@ def test_suite_records_layers_per_query(spark, sf_dir, tmp_path):
     assert parsed["metric"] == "headline_suite_wall_clock" and parsed["unit"] == "sec"
     assert parsed["value"] == detail["value"] and parsed["roster"] == 2
     assert sorted(parsed["queries"]) == sorted(DUAL_KEYS)
+
+
+NAMES = ["agg_groupby_having", "stream_tumbling_agg"]
+
+
+def test_profile_records_layers_and_final_plan(spark, sf_dir, tmp_path):
+    jsqm = spark.streams._jsqm
+    n_listeners = len(jsqm.listListeners())
+    recs = list(traced_reps(spark, NAMES, 1, sf_dir, str(tmp_path)))
+
+    assert [(r["name"], r["rep"]) for r in recs] == [(n, rep) for n in NAMES for rep in (0, 1)]
+    for r in recs:
+        for key in ("wall_s", "exec.cpu_s", "catalyst.planning_ms", "plan.exchanges"):
+            assert key in r, (r["name"], key)
+        assert r["exec.jobs"] > 0 and r["exec.cpu_s"] > 0
+    by_name = {n: [r for r in recs if r["name"] == n] for n in NAMES}
+    assert all(r["plan.exchanges"] >= 1 for r in by_name["agg_groupby_having"])
+    assert all(r["streaming.triggers"] > 0 for r in by_name["stream_tumbling_agg"])
+    assert all(r["streaming.state_commit_ms"] > 0 for r in by_name["stream_tumbling_agg"])
+
+    assert "isFinalPlan=true" in (tmp_path / "agg_groupby_having.txt").read_text()
+    assert (tmp_path / "stream_tumbling_agg.txt").read_text().startswith("== Physical Plan ==")
+    # the tracer's streaming listener does not outlive the loop
+    assert len(jsqm.listListeners()) == n_listeners
+
+
+def test_scale_doubles_the_scaled_tables_and_reports_exponents(spark, sf_dir, tmp_path):
+    dirs = {k: str(tmp_path / f"k{k}") for k in (1, 2)}
+    for k, d in dirs.items():
+        bench.write_scaled(sf_dir, d, k)
+    for name in TABLE_NAMES:
+        path = os.path.join(dirs[2], f"{name}.parquet")
+        if name not in bench.SCALED:
+            assert os.path.islink(path), name
+            continue
+        t = pq.read_table(path)
+        assert t.num_rows == 2 * pq.read_metadata(os.path.join(sf_dir, f"{name}.parquet")).num_rows
+        assert t.num_rows == 2 * pq.read_metadata(os.path.join(dirs[1], f"{name}.parquet")).num_rows
+        id_col = {"documents": "doc_id", "embeddings": "vec_id"}.get(name)
+        if id_col:
+            assert pc.count_distinct(t[id_col]).as_py() == t.num_rows, name
+    dedup = all_workloads()["dedup_exact"]
+    survivors = {k: dedup.build(spark, d).count() for k, d in dirs.items()}
+    assert survivors[1] > 0 and survivors[2] == 2 * survivors[1]
+
+    # events_sessionize reads only events, which is linked, not grown
+    recs = []
+    with pytest.raises(ValueError, match="events_sessionize: exec.input_records does not grow"):
+        for rec in bench.scale(spark, ["dedup_exact", "events_sessionize"], [1, 2], 1, sf_dir):
+            recs.append(rec)
+    assert [(r["name"], r.get("k")) for r in recs] == [
+        ("dedup_exact", 1), ("dedup_exact", 2), ("dedup_exact", [2]),
+        ("events_sessionize", 1), ("events_sessionize", 2),
+    ]
+    per_k, report = recs[:2], recs[2]
+    assert per_k[1]["exec.input_records"] > per_k[0]["exec.input_records"]
+    assert report["input_ratio"][0] > 1
+    assert isinstance(report["wall_exp"][0], float)
+    assert isinstance(report["shuffle_exp"][0], float)

@@ -278,6 +278,36 @@ def test_merge_ansi_matched_guard(spark, tmp_path):
     assert got == {1: 100, 2: 50, 3: 300}
 
 
+def test_merge_ansi_literal_with_comma_and_alias_prefix(spark, tmp_path):
+    from etl_lealone_spark.session import EngineSession
+
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    es.sql("CREATE TABLE ml (id int PRIMARY KEY, v int, tag varchar(20))")
+    es.sql("INSERT INTO ml VALUES (1, 10, 'a')")
+    # a comma or an alias-qualified name inside a literal is text: it
+    # neither splits the SET/VALUES list nor gets rewritten
+    es.sql(
+        "MERGE INTO ml USING (SELECT * FROM VALUES (1, 100), (2, 200) "
+        "AS x(id, nv)) AS s ON ml.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET tag = 'p,q s.v', v = s.nv "
+        "WHEN NOT MATCHED THEN INSERT (id, v, tag) VALUES (s.id, s.nv, 'x, ml.v')"
+    )
+    got = {r["id"]: (r["v"], r["tag"]) for r in es.sql("SELECT * FROM ml").collect()}
+    assert got == {1: (100, "p,q s.v"), 2: (200, "x, ml.v")}
+
+
+def test_update_literal_holding_where(spark, tmp_path):
+    from etl_lealone_spark.session import EngineSession
+
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    es.sql("CREATE TABLE uw (id int PRIMARY KEY, s varchar(20))")
+    es.sql("INSERT INTO uw VALUES (2, 'a'), (3, 'b'), (4, 'c')")
+    es.sql("UPDATE uw SET s = 'x WHERE y' WHERE id = 3")
+    es.sql("UPDATE uw SET s = concat(s, ' LIMIT 1') WHERE id IN (2, 4) LIMIT 1")
+    got = {r["id"]: r["s"] for r in es.sql("SELECT * FROM uw").collect()}
+    assert got == {2: "a LIMIT 1", 3: "x WHERE y", 4: "c"}
+
+
 def test_snapshot_time_travel_read(spark, tmp_path):
     from pyspark.sql import Row
 

@@ -1,6 +1,6 @@
 """Every bare ``scripts/<name>.py`` named in the README, BASELINE.md,
-SCALE.md, the verify skill notes or the package's code must exist on
-disk. A script that was deleted is cited as
+SCALE.md, COVERAGE.md, docs/BENCHLOG.md, the verify skill notes or the
+package's code must exist on disk. A script that was deleted is cited as
 ``git show <rev>:scripts/<name>.py``, which this check exempts. No script may shadow a standard-library module."""
 
 from __future__ import annotations
@@ -20,6 +20,8 @@ def _sources() -> list[str]:
         os.path.join(ROOT, "README.md"),
         os.path.join(ROOT, "BASELINE.md"),
         os.path.join(ROOT, "SCALE.md"),
+        os.path.join(ROOT, "COVERAGE.md"),
+        os.path.join(ROOT, "docs", "BENCHLOG.md"),
         os.path.join(ROOT, ".claude", "skills", "verify", "SKILL.md"),
         *glob.glob(os.path.join(ROOT, "etl_lealone_spark", "**", "*.py"), recursive=True),
     ]
