@@ -45,6 +45,7 @@ import json
 import math
 import os
 import shutil
+import signal
 import statistics
 import sys
 import tempfile
@@ -675,6 +676,12 @@ def _scale_factors(text: str) -> list[int]:
     return ks
 
 
+def _exit_on_sigterm(signum, frame):
+    # SIGTERM unwinds like an exception: every ``finally`` runs, so the
+    # scale and W1 temp dirs are removed and the session stops
+    raise SystemExit(128 + signum)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--reps", type=int, help="NAME mode: warm reps after the cold one (default 3)")
@@ -696,6 +703,7 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
+    prev_handler = signal.signal(signal.SIGTERM, _exit_on_sigterm)
     spark = build_spark(app_name="etl_lealone_spark_bench",
                         extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
@@ -718,6 +726,7 @@ def main(argv=None) -> int:
         # a session left running when the interpreter exits makes the
         # JVM shut down under py4j, which then prints listener errors
         spark.stop()
+        signal.signal(signal.SIGTERM, prev_handler)
     return 0
 
 

@@ -4,7 +4,9 @@ The reference executes ~50 DDL statement types plus INSERT/UPDATE/DELETE/
 MERGE through its parser (lealone-sql/.../ddl/, dml/); this module is the
 Spark-native statement surface: a :class:`Catalog` of snapshot-versioned
 parquet tables plus a router that turns statement text into DataFrame
-operations. SELECT text goes through the dialect rewriter to Spark SQL.
+operations. Any statement that is not a Lealone-only command goes
+through the dialect rewriter and is parsed once by Spark's parser; DML
+plan nodes become snapshot writes, any other plan the DataFrame.
 
 Supported statements (reference file cites):
 - CREATE TABLE / DROP TABLE / TRUNCATE TABLE (CreateTable.java,
@@ -489,25 +491,135 @@ def _parse_columns(cols_sql: str) -> tuple[str, list[str], "TableConstraints"]:
     return ", ".join(fields), pks, cons
 
 
+# leading whitespace and comments: the head keyword comes after them
+_LEADING_COMMENTS = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*", re.DOTALL)
+
+# Lealone's DML forms that Spark's grammar lacks, matched over the
+# top-level mask (see _ansi_dml)
+_LEALONE_DML = re.compile(
+    r"(?:UPDATE|DELETE)\b.*?(?P<limit>\s+LIMIT\s+(?P<n>\d+))\s*$"
+    r"|INSERT\s+INTO\s+[^\s\0]+\s*\0*\s*"
+    r"(?:(?P<direct>DIRECT)\s|(?P<set>SET)\s|(?P<default>DEFAULT\s+VALUES)\s*$)"
+    r"|(?P<merge>MERGE)\s+INTO\s+[^\s\0]+\s*\0*\s*(?P<key>KEY\s*(?P<keys>\0+))",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+def _ansi_dml(s: str) -> tuple[str, dict]:
+    """Lealone's DML extensions as ANSI text that Spark parses, plus what
+    the text no longer says: ``UPDATE/DELETE … LIMIT n`` (the limit),
+    ``INSERT … DIRECT`` (a buffering hint, dropped), ``INSERT … SET a =
+    x`` (as ``(a) VALUES (x)``), ``DEFAULT VALUES`` (a one-row VALUES,
+    flagged) and ``MERGE INTO t [(cols)] KEY(k) src`` (as ``INSERT INTO
+    t [(cols)] src``, with the keys). One match over the top-level mask
+    (Parser.java:1014-1070)."""
+    m = _LEALONE_DML.match(_mask_nested(s), _LEADING_COMMENTS.match(s).end())
+    if m is None:
+        return s, {}
+    if m.group("n"):
+        return s[: m.start("limit")], {"limit": int(m.group("n"))}
+    if m.group("direct"):
+        return s[: m.start("direct")] + s[m.end("direct"):], {}
+    if m.group("set"):
+        pairs = [p.split("=", 1) for p in _split_top_level(s[m.end("set"):])]
+        cols, vals = (", ".join(x.strip() for x in side) for side in zip(*pairs))
+        return f"{s[: m.start('set')]}({cols}) VALUES ({vals})", {}
+    if m.group("default"):
+        return s[: m.start("default")] + "VALUES (1)", {"default": True}
+    keys = s[m.start("keys") + 1 : m.end("keys") - 1].split(",")
+    text = s[: m.start("merge")] + "INSERT" + s[m.end("merge"): m.start("key")]
+    return text + s[m.end("key"):], {"keys": [k.strip().lower() for k in keys]}
+
+
+# the parsed plans of a VALUES list: its rows are in the statement text
+_VALUES_PLANS = ("LocalRelation", "UnresolvedInlineTable")
+
+# parsed DML plan class -> StatementRouter handler
+_DML_HANDLERS = {
+    "InsertIntoStatement": "_insert",
+    "UpdateTable": "_update",
+    "DeleteFromTable": "_delete",
+    "MergeIntoTable": "_merge",
+}
+
+
+def _head(s: str) -> tuple[str, str]:
+    """``s`` without its leading comments, and its head keyword."""
+    body = s[_LEADING_COMMENTS.match(s).end():]
+    return body, (body.split(None, 1)[0].upper() if body else "")
+
+
+def _seq(s) -> list:
+    """The items of a Scala Seq."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _span(e, text: str) -> str:
+    """The text of parsed expression ``e``: its origin's character span in
+    ``text``, widened over its leftmost children (a predicate such as
+    ``x IN (…)`` has its origin start at IN)."""
+    o = e.origin()
+    start, stop = o.startIndex(), o.stopIndex()
+    if start.isEmpty() or stop.isEmpty():
+        raise ValueError(f"no source position for {e.toString()}")
+    start = start.get()
+    while e.children().nonEmpty():
+        e = e.children().head()
+        at = e.origin().startIndex()
+        if at.isDefined():
+            start = min(start, at.get())
+    return text[start : stop.get() + 1]
+
+
+def _target(rel) -> tuple[str, str]:
+    """(table name, alias) of a parsed ``t`` or ``t [AS] alias``; the
+    alias defaults to the name."""
+    alias = None
+    if rel.getClass().getSimpleName() == "SubqueryAlias":
+        alias, rel = rel.alias(), rel.child()
+    name = ".".join(_seq(rel.multipartIdentifier())).lower()
+    return name, (alias or name).lower()
+
+
+def _column(key, name: str, alias: str, columns: Sequence[str]) -> str:
+    """The column an assignment sets: ``c``, or ``q.c`` where ``q`` is the
+    table or its alias. Anything else raises."""
+    parts = [p.lower() for p in _seq(key.nameParts())]
+    if len(parts) == 2 and parts[0] in (name, alias):
+        parts = parts[1:]
+    if len(parts) != 1 or parts[0] not in columns:
+        raise ValueError(f"table {name} has no column {'.'.join(parts)}")
+    return parts[0]
+
+
 class StatementRouter:
-    """Routes a SQL statement to catalog DDL, snapshot DML, or Spark SQL."""
+    """Routes a SQL statement to catalog DDL, snapshot DML, or Spark SQL.
+
+    The head keyword, read after any leading comments, picks the handler
+    of a Lealone-only command. Every other statement passes the dialect
+    rewrites and is then parsed once by Spark's own parser, and the class
+    of the plan node decides: INSERT (also behind WITH), UPDATE, DELETE
+    and MERGE run as snapshot writes, any other plan becomes the
+    DataFrame. Lealone's DML forms that Spark's grammar lacks are turned
+    into ANSI text before the parse (:func:`_ansi_dml`). A DML plan never
+    reaches ``spark.sql``: a form the handlers do not implement, and DML
+    with parameters, raise ValueError.
+    """
 
     def __init__(self, session: "EngineSession", catalog: Catalog):
         self.session = session
         self.catalog = catalog
         self.spark = session.spark
+        self._parser = self.spark._jsparkSession.sessionState().sqlParser()
+        self._dataset = self.spark._jvm.org.apache.spark.sql.classic.Dataset
 
     # -- entry ----------------------------------------------------------
-    def execute(self, sql: str) -> DataFrame:
+    def execute(self, sql: str, args=None) -> DataFrame:
         s = sql.strip().rstrip(";").strip()
-        head = s.split(None, 1)[0].upper() if s else ""
-        handler = {
+        body, head = _head(s)
+        handler = None if args is not None else {
             "CREATE": self._create,
             "DROP": self._drop,
-            "INSERT": self._insert,
-            "UPDATE": self._update,
-            "DELETE": self._delete,
-            "MERGE": self._merge,
             "TRUNCATE": self._truncate,
             "EXPLAIN": self._explain,
             "SET": self._set,
@@ -540,18 +652,49 @@ class StatementRouter:
             ),
         }.get(head)
         if handler:
-            result = handler(s)
-            if head in (
-                "CREATE", "DECLARE", "DROP", "INSERT", "UPDATE", "DELETE",
-                "MERGE", "TRUNCATE", "ALTER", "RUNSCRIPT",
-            ):
+            result = handler(body)
+            if head in ("CREATE", "DECLARE", "DROP", "TRUNCATE", "ALTER", "RUNSCRIPT"):
                 self.session.invalidate_cache()
             return result
-        # SELECT / WITH / VALUES / FROM-first → dialect → Spark SQL
+        plan, kind, s, extra = self._parse(s)
+        if kind not in _DML_HANDLERS:
+            if args is not None:
+                return self.spark.sql(s, args=args)
+            return self._frame(plan)
+        if args is not None:
+            raise ValueError(
+                f"DML with parameters is not supported; write the values "
+                f"into the statement: {s[:80]}"
+            )
+        result = getattr(self, _DML_HANDLERS[kind])(plan, s, extra)
+        self.session.invalidate_cache()
+        return result
+
+    def _parse(self, s: str) -> tuple:
+        """(plan, plan class, text, extra) of a statement that is not a
+        Lealone-only command: the dialect rewrites, then one parse. A CTE
+        ahead of an INSERT is moved into its query."""
         s = self._rewrite_info_schema(s)
         s = self._rewrite_time_travel(s)
         s = self._rewrite_table_diff(s)
-        return self.spark.sql(rewrite(s, session=self.session))
+        s = rewrite(s, session=self.session)
+        extra = {}
+        if _head(s)[1] in ("INSERT", "UPDATE", "DELETE", "MERGE"):
+            s, extra = _ansi_dml(s)
+        plan = self._parser.parsePlan(s)
+        kind = plan.getClass().getSimpleName()
+        if kind == "UnresolvedWith":
+            inner = plan.child()
+            kind = inner.getClass().getSimpleName()
+            if kind == "InsertIntoStatement":
+                # the CTEs ahead of an INSERT belong to its query
+                seq = self.spark._jvm.PythonUtils.toSeq
+                plan = inner.withNewChildren(
+                    seq([plan.withNewChildren(seq([inner.query()]))])
+                )
+            elif kind in _DML_HANDLERS:
+                raise ValueError(f"WITH is supported only ahead of INSERT: {s[:80]}")
+        return plan, kind, s, extra
 
     def _rewrite_time_travel(self, s: str) -> str:
         """``FROM t VERSION AS OF n`` / ``FROM t TIMESTAMP AS OF 'ts'``
@@ -585,7 +728,7 @@ class StatementRouter:
             st.read(version=ver).createOrReplaceTempView(view)
             return view
 
-        s = pat_ts.sub(sub_ts, s)
+        s = _sub_outside_literals(pat_ts, sub_ts, s)
         pat = re.compile(
             r"\b([A-Za-z_][A-Za-z0-9_]*)\s+VERSION\s+AS\s+OF\s+(\d+)",
             re.IGNORECASE,
@@ -599,7 +742,7 @@ class StatementRouter:
             )
             return view
 
-        return pat.sub(sub, s)
+        return _sub_outside_literals(pat, sub, s)
 
     def _rewrite_table_diff(self, s: str) -> str:
         """``FROM DIFF(t, v1, v2)`` — CDC read between two retained
@@ -627,7 +770,7 @@ class StatementRouter:
             )
             return view
 
-        return pat.sub(sub, s)
+        return _sub_outside_literals(pat, sub, s)
 
     def _rewrite_info_schema(self, s: str) -> str:
         """Support the reference's dotted ``INFORMATION_SCHEMA.X`` table
@@ -1748,62 +1891,46 @@ class StatementRouter:
         return self._ok(f"dropped {kind.lower()} {name}")
 
     # -- DML -------------------------------------------------------------
-    def _insert(self, s: str) -> DataFrame:
-        m = re.match(
-            rf"INSERT\s+INTO\s+(?P<name>{_IDENT})\s*"
-            rf"(?:\((?P<cols>[^)]*)\)\s*)?"
-            rf"(?P<rest>(?:DIRECT\s+)?(?:VALUES\s*.+|SELECT\s+.+|WITH\s+.+"
-            rf"|\(\s*SELECT\s+.+)|DEFAULT\s+VALUES|SET\s+.+)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse INSERT: {s[:80]}")
-        name = m.group("name").lower()
+    def _frame(self, plan) -> DataFrame:
+        """The DataFrame of a parsed plan: analyzed, never parsed again."""
+        return DataFrame(self._dataset.ofRows(self.spark._jsparkSession, plan), self.spark)
+
+    def _insert(self, ins, text: str, extra: dict) -> DataFrame:
+        """INSERT, and ``MERGE … KEY`` parsed as one (``extra["keys"]``):
+        the query's rows named by the column list, then aligned to the
+        target schema."""
+        if any((ins.overwrite(), ins.partitionSpec().nonEmpty(), ins.byName(),
+                ins.ifPartitionNotExists())):
+            raise ValueError(
+                f"INSERT OVERWRITE/PARTITION/BY NAME/IF NOT EXISTS not supported: {text[:80]}"
+            )
+        name = _target(ins.table())[0]
         st = self.catalog.table(name)
         target_schema = dict(st.read().dtypes)
         target_cols = list(target_schema)
-        rest = m.group("rest").strip()
-        cols = (
-            [c.strip().lower() for c in m.group("cols").split(",")]
-            if m.group("cols")
-            else target_cols
-        )
-        if rest.upper().startswith("DIRECT"):
-            # INSERT … DIRECT query (Parser.java:1030 setInsertFromSelect):
-            # a single-node buffering hint — snapshot inserts already
-            # stream straight from the source plan
-            rest = rest[len("DIRECT"):].strip()
-        if re.match(r"DEFAULT\s+VALUES$", rest, re.IGNORECASE):
-            # INSERT INTO t DEFAULT VALUES (Parser.java:1033): one row,
+        cols = [c.lower() for c in _seq(ins.userSpecifiedCols())] or target_cols
+        unknown = [c for c in cols if c not in target_schema]
+        if unknown:
+            raise ValueError(f"table {name} has no column(s) {', '.join(unknown)}")
+        query = ins.query()
+        src = self._frame(query)
+        if extra.get("default"):
             # every column from its DEFAULT/IDENTITY (the alignment step
             # below fills all of them — the source carries no columns)
-            src = self.spark.sql("SELECT * FROM VALUES (1) AS t(__dummy)")
-        elif rest.upper().startswith("SET"):
-            # MySQL-style INSERT … SET a = 1, b = 'x' (Parser.java:1053)
-            pairs = _split_top_level(rest[len("SET"):])
-            cols, vals = [], []
-            for pr in pairs:
-                k, v = pr.split("=", 1)
-                cols.append(k.strip().lower())
-                vals.append(v.strip())
-            src = self.spark.sql(
-                f"SELECT * FROM (VALUES ({', '.join(vals)})) "
-                f"AS t({', '.join(cols)})"
+            src, cols = src.select(), []
+        elif len(src.columns) != len(cols):
+            raise ValueError(
+                f"{name}: {len(cols)} column(s) but {len(src.columns)} value(s) per row"
             )
-        elif rest.upper().startswith("VALUES"):
-            src = self.spark.sql(
-                f"SELECT * FROM ({rewrite(rest, session=self.session)}) "
-                f"AS t({', '.join(cols)})"
-            )
-        else:
-            # INSERT INTO t (SELECT …): drop one pair of parentheses, and
-            # only when it encloses the whole query — not the ones of
-            # `… FROM range(50)` or `(SELECT 1) UNION (SELECT 2)`
-            inner = _balanced_group(rest, 0) if rest.startswith("(") else None
-            if inner is not None and len(inner) + 2 == len(rest):
-                rest = inner
-            src = self.spark.sql(rewrite(rest, session=self.session)).toDF(*cols)
+        src = src.toDF(*cols)
+        if "keys" in extra:
+            # a column the statement leaves out keeps its target value
+            rows = src.select(*[F.col(c).cast(target_schema[c]).alias(c) for c in cols])
+            merged = merge_by_key(st.read(), rows, extra["keys"])
+            self._validate_write(name, merged)
+            st.write(merged)
+            self.catalog.refresh_view(name)
+            return self._ok(f"merged into {name}")
         # align to target schema: missing columns → DEFAULT expr (falling
         # back to NULL), computed columns recomputed, order normalized
         cons = self.catalog.constraints.get(name, TableConstraints())
@@ -1833,7 +1960,7 @@ class StatementRouter:
         # VALUES / SET / DEFAULT VALUES carry their rows in the statement
         # text: the plan folds to a LocalRelation, so the rows are on the
         # driver and reading them back runs no Spark job
-        local = bool(re.match(r"(VALUES|SET|DEFAULT)\b", rest, re.IGNORECASE))
+        local = query.getClass().getSimpleName() in _VALUES_PLANS
         self._validate_write(name, aligned, insert=True, local=local)
         st.insert(aligned)
         self.catalog.refresh_view(name)
@@ -1998,34 +2125,23 @@ class StatementRouter:
             keys = keys.unionByName(hits)
         self._check_unique(name, keys, cols)
 
-    def _update(self, s: str) -> DataFrame:
-        # matched over the mask, so a WHERE or LIMIT inside a literal or a
-        # subquery does not end the SET list; the groups are read from s
-        m = re.match(
-            rf"UPDATE\s+(?P<name>{_IDENT})\s+SET\s+(?P<sets>.+?)"
-            rf"(?:\s+WHERE\s+(?P<where>.+?))?(?:\s+LIMIT\s+(?P<limit>\d+))?\s*$",
-            _mask_nested(s),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse UPDATE: {s[:80]}")
-        name, sets, where, limit = (
-            s[m.start(g):m.end(g)] if m.group(g) is not None else None
-            for g in ("name", "sets", "where", "limit")
-        )
-        name = name.lower()
+    def _update(self, plan, text: str, extra: dict) -> DataFrame:
+        name, alias = _target(plan.table())
         st = self.catalog.table(name)
-        assignments = {}
-        for part in _split_top_level(sets):
-            k, v = part.split("=", 1)
-            assignments[k.strip().lower()] = F.expr(v.strip())
-        cond = F.expr(where) if where else F.lit(True)
-        df = st.read()
-        if limit:
+        # SET and WHERE are read over the aliased table, so a qualified or
+        # correlated reference resolves
+        df = st.read().alias(alias)
+        assignments = {
+            _column(a.key(), name, alias, df.columns): F.expr(_span(a.value(), text))
+            for a in _seq(plan.assignments())
+        }
+        where = plan.condition()
+        cond = F.expr(_span(where.get(), text)) if where.isDefined() else F.lit(True)
+        if "limit" in extra:
             from .operators.dml import apply_update_limit
 
             pk = self._pk_of(name)
-            new_df = apply_update_limit(df, cond, assignments, int(limit), pk)
+            new_df = apply_update_limit(df, cond, assignments, extra["limit"], pk)
             # LIMIT picks among the matching rows: check every row after
             self._validate_write(
                 name, new_df, assigned={c: F.col(c) for c in assignments}, after=new_df
@@ -2042,156 +2158,82 @@ class StatementRouter:
         self.catalog.refresh_view(name)
         return self._ok(f"updated {name}")
 
-    def _delete(self, s: str) -> DataFrame:
-        m = re.match(
-            rf"DELETE\s+FROM\s+(?P<name>{_IDENT})"
-            rf"(?:\s+WHERE\s+(?P<where>.+?))?(?:\s+LIMIT\s+(?P<limit>\d+))?\s*$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse DELETE: {s[:80]}")
-        name = m.group("name").lower()
-        st = self.catalog.table(name)
-        cond = F.expr(m.group("where")) if m.group("where") else F.lit(True)
-        if m.group("limit"):
-            from .operators.dml import apply_delete_limit
+    def _delete(self, plan, text: str, extra: dict) -> DataFrame:
+        from .operators.dml import apply_delete, apply_delete_limit
 
-            st.write(
-                apply_delete_limit(
-                    st.read(), cond, int(m.group("limit")), self._pk_of(name)
-                )
-            )
+        name, alias = _target(plan.table())
+        st = self.catalog.table(name)
+        df = st.read().alias(alias)
+        where = plan.condition()  # without WHERE, the literal true
+        cond = F.lit(True) if where.toString() == "true" else F.expr(_span(where, text))
+        if "limit" in extra:
+            st.write(apply_delete_limit(df, cond, extra["limit"], self._pk_of(name)))
         else:
-            st.delete(cond)
+            st.write(apply_delete(df, cond))
         self.catalog.refresh_view(name)
         return self._ok(f"deleted from {name}")
 
-    def _merge(self, s: str) -> DataFrame:
-        m = re.match(
-            rf"MERGE\s+INTO\s+(?P<name>{_IDENT})\s*"
-            rf"(?:\((?P<cols>[^)]*)\)\s*)?KEY\s*\((?P<keys>[^)]*)\)\s*"
-            rf"(?P<rest>VALUES\s*.+|SELECT\s+.+)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            if re.search(r"\bUSING\b", s, re.IGNORECASE):
-                return self._merge_ansi(s)
-            raise ValueError(f"cannot parse MERGE (expected KEY(...) form): {s[:80]}")
-        name = m.group("name").lower()
-        st = self.catalog.table(name)
-        target_cols = [f.name for f in st.read().schema.fields]
-        cols = (
-            [c.strip().lower() for c in m.group("cols").split(",")]
-            if m.group("cols")
-            else target_cols
-        )
-        keys = [k.strip().lower() for k in m.group("keys").split(",")]
-        rest = m.group("rest").strip()
-        if rest.upper().startswith("VALUES"):
-            src = self.spark.sql(
-                f"SELECT * FROM ({rewrite(rest, session=self.session)}) "
-                f"AS t({', '.join(cols)})"
-            )
-        else:
-            src = self.spark.sql(rewrite(rest, session=self.session)).toDF(*cols)
-        # a column the statement leaves out keeps its target value
-        target_schema = dict(st.read().dtypes)
-        aligned = src.select(
-            *[
-                (F.col(c).cast(target_schema[c]) if c in target_schema else F.col(c))
-                .alias(c)
-                for c in cols
-            ]
-        )
-        merged = merge_by_key(st.read(), aligned, keys)
-        self._validate_write(name, merged)
-        st.write(merged)
-        self.catalog.refresh_view(name)
-        return self._ok(f"merged into {name}")
-
-    def _merge_ansi(self, s: str) -> DataFrame:
+    def _merge(self, plan, text: str, extra: dict) -> DataFrame:
         """ANSI MERGE extension (beyond the reference's KEY form):
 
-        ``MERGE INTO t [AS ta] USING <table | (subquery)> [AS sa]
+        ``MERGE INTO t [[AS] ta] USING <table | (query)> [[AS] sa]
         ON <cond> [WHEN MATCHED [AND guard] THEN {UPDATE SET ... | DELETE}]
-        [WHEN NOT MATCHED THEN INSERT [(cols)] VALUES (exprs)]``
+        [WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)]``
 
         Either WHEN clause may be omitted (insert-only MERGE is ANSI-legal).
         Execution delegates to :func:`operators.dml.merge_ansi` — ONE
         full-outer join with all branches (including the ANSI
-        duplicate-match guard) derived from its presence flags.
+        duplicate-match guard) derived from its presence flags. A second
+        WHEN MATCHED, a NOT MATCHED guard, NOT MATCHED BY SOURCE, ``SET *``
+        and ``INSERT *`` raise.
         """
-        m = re.match(
-            rf"MERGE\s+INTO\s+(?P<name>{_IDENT})(?:\s+AS\s+(?P<ta>{_IDENT}))?\s+"
-            rf"USING\s+(?P<src>\((?:[^()]|\([^()]*\))*\)|{_IDENT})"
-            rf"(?:\s+AS\s+(?P<sa>{_IDENT}))?\s+"
-            rf"ON\s+(?P<cond>.+?)"
-            rf"(?:\s+WHEN\s+MATCHED\s*(?:AND\s+(?P<mguard>.+?)\s+)?"
-            rf"THEN\s+(?P<matched>UPDATE\s+SET\s+.+?|DELETE))?"
-            rf"(?:\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*"
-            rf"(?:\((?P<icols>[^)]*)\)\s*)?VALUES\s*\((?P<ivals>.+)\))?\s*$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m or (m.group("matched") is None and m.group("ivals") is None):
-            raise ValueError(f"cannot parse ANSI MERGE: {s[:120]}")
-        name = m.group("name").lower()
-        st = self.catalog.table(name)
-        target = st.read()
-        target_cols = [f.name for f in target.schema.fields]
-        ta = (m.group("ta") or name).lower()
-        sa = (m.group("sa") or "__merge_src").lower()
-        src_sql = m.group("src")
         from .operators.dml import ANSI_MERGE_DUP_MSG, merge_ansi
 
-        if src_sql.startswith("("):
-            src = self.spark.sql(rewrite(src_sql[1:-1], session=self.session))
-        else:
-            src = self.spark.table(src_sql.lower())
+        name, ta = _target(plan.targetTable())
+        source = plan.sourceTable()
+        sa = (
+            source.alias().lower()
+            if source.getClass().getSimpleName() == "SubqueryAlias"
+            else _target(source)[1]
+        )
+        matched, inserted = _seq(plan.matchedActions()), _seq(plan.notMatchedActions())
+        kinds = {a.getClass().getSimpleName() for a in matched + inserted}
+        if (
+            len(matched) > 1
+            or len(inserted) > 1
+            or plan.notMatchedBySourceActions().nonEmpty()
+            or not kinds <= {"UpdateAction", "DeleteAction", "InsertAction"}
+            or any(a.condition().isDefined() for a in inserted)
+        ):
+            raise ValueError(f"unsupported MERGE form: {text[:120]}")
+        st = self.catalog.table(name)
+        target = st.read()
+        qualified = re.compile(rf"(?i)\b({re.escape(sa)}|{re.escape(ta)})\s*\.\s*(\w+)")
 
-        def rw(txt: str) -> str:
-            # resolve alias-qualified refs into the kernel's joined
-            # namespace: sa.x -> __s_x, ta.x -> x; literals stay as written
-            e = _sub_outside_literals(
-                rf"\b{re.escape(sa)}\s*\.\s*(\w+)", r"__s_\1", txt, flags=re.IGNORECASE
-            )
-            return _sub_outside_literals(
-                rf"\b{re.escape(ta)}\s*\.\s*(\w+)", r"\1", e, flags=re.IGNORECASE
-            )
+        def expr(e) -> Column:
+            # alias-qualified refs into the kernel's joined namespace:
+            # sa.x -> __s_x, ta.x -> x; literals stay as written
+            return F.expr(_sub_outside_literals(
+                qualified,
+                lambda m: ("__s_" if m.group(1).lower() == sa else "") + m.group(2),
+                _span(e, text),
+            ))
 
-        on = F.expr(rw(m.group("cond")))
-        guard = m.group("mguard")
-        guard_col = F.expr(rw(guard)) if guard else None
-        matched = (m.group("matched") or "").strip()
-        delete_matched = matched.upper() == "DELETE"
-        update_set = None
-        if matched and not delete_matched:
-            update_set = {}
-            for assign in _split_top_level(matched[len("UPDATE SET"):]):
-                col, expr = assign.split("=", 1)
-                key = col.strip().lower().removeprefix(f"{ta}.")
-                update_set[key] = F.expr(rw(expr.strip()))
-        insert_values = None
-        if m.group("ivals"):
-            icols = (
-                [c.strip().lower() for c in m.group("icols").split(",")]
-                if m.group("icols")
-                else target_cols
-            )
-            ivals = _split_top_level(m.group("ivals"))
-            if len(icols) != len(ivals):
-                raise ValueError("ANSI MERGE: INSERT column/value count mismatch")
-            insert_values = {c: F.expr(rw(v)) for c, v in zip(icols, ivals)}
+        def assigned(action) -> dict:
+            return {
+                _column(a.key(), name, ta, target.columns): expr(a.value())
+                for a in _seq(action.assignments())
+            }
+
+        guard = matched[0].condition() if matched else None
         merged = merge_ansi(
             target,
-            src,
-            on,
-            update_set=update_set,
-            delete_matched=delete_matched,
-            matched_guard=guard_col,
-            insert_values=insert_values,
+            self._frame(source),
+            expr(plan.mergeCondition()),
+            update_set=assigned(matched[0]) if "UpdateAction" in kinds else None,
+            delete_matched="DeleteAction" in kinds,
+            matched_guard=expr(guard.get()) if guard is not None and guard.isDefined() else None,
+            insert_values=assigned(inserted[0]) if inserted else None,
         )
         try:
             self._validate_write(name, merged)
@@ -2217,8 +2259,10 @@ class StatementRouter:
         body = s.split(None, 1)[1]
         if body.upper().startswith("ANALYZE"):
             body = body.split(None, 1)[1]
-        df = self.spark.sql(rewrite(body, session=self.session))
-        plan = df._jdf.queryExecution().explainString(
+        plan, kind, text, _ = self._parse(body)
+        if kind in _DML_HANDLERS:
+            raise ValueError(f"EXPLAIN of DML is not supported: {text[:80]}")
+        plan = self._frame(plan)._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )

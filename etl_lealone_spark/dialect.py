@@ -20,10 +20,15 @@ this module normalizes them to Spark SQL text before handing to Catalyst:
 
 Rewrites are token-aware regex transforms — enough for the reference's
 test-suite grammar; genuinely ambiguous SQL should use the DataFrame API.
+Every pass matches over a same-length copy of the text whose string
+literals, quoted names and comments are masked (:func:`_mask_literals`)
+and splices its replacement into the original: a literal is never
+rewritten.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import TYPE_CHECKING, Optional
 
@@ -47,40 +52,42 @@ NOOP_STATEMENTS = re.compile(
 
 
 def _strip_line_comments(sql: str) -> str:
-    return re.sub(r"//[^\n]*", "", sql)
+    return _sub_outside_literals(r"//[^\n]*", "", sql)
 
 
 def _rewrite_from_first(sql: str) -> str:
     """``FROM t SELECT cols ...`` → ``SELECT cols FROM t ...``."""
-    m = re.match(
+
+    def repl(m) -> str:
+        select_part = m.group("select")
+        # split projection from trailing clauses (WHERE/GROUP/ORDER/LIMIT/...)
+        tail_match = re.search(
+            r"\b(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET|UNION|EXCEPT|INTERSECT)\b",
+            _mask_literals(select_part),
+            re.IGNORECASE,
+        )
+        if tail_match:
+            proj = select_part[: tail_match.start()].rstrip()
+            tail = select_part[tail_match.start() :]
+            return f"SELECT {proj} FROM {m.group('from')} {tail}"
+        return f"SELECT {select_part} FROM {m.group('from')}"
+
+    return _sub_outside_literals(
         r"^\s*FROM\s+(?P<from>.+?)\s+SELECT\s+(?P<select>.+)$",
+        repl,
         sql,
         re.IGNORECASE | re.DOTALL,
     )
-    if not m:
-        return sql
-    select_part = m.group("select")
-    # split projection from trailing clauses (WHERE/GROUP/ORDER/LIMIT/...)
-    tail_match = re.search(
-        r"\b(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET|UNION|EXCEPT|INTERSECT)\b",
-        select_part,
-        re.IGNORECASE,
-    )
-    if tail_match:
-        proj = select_part[: tail_match.start()].rstrip()
-        tail = select_part[tail_match.start() :]
-        return f"SELECT {proj} FROM {m.group('from')} {tail}"
-    return f"SELECT {select_part} FROM {m.group('from')}"
 
 
 def _rewrite_top(sql: str) -> str:
     """``SELECT TOP n ...`` → ``SELECT ... LIMIT n`` (Parser.java:1596)."""
-    m = re.match(
-        r"^(\s*SELECT)\s+TOP\s+(\d+)\s+(.*)$", sql, re.IGNORECASE | re.DOTALL
+    return _sub_outside_literals(
+        r"^(\s*SELECT)\s+TOP\s+(\d+)\s+(.*)$",
+        lambda m: f"{m.group(1)} {m.group(3)} LIMIT {m.group(2)}",
+        sql,
+        re.IGNORECASE | re.DOTALL,
     )
-    if not m:
-        return sql
-    return f"{m.group(1)} {m.group(3)} LIMIT {m.group(2)}"
 
 
 def _rewrite_system_range(sql: str) -> str:
@@ -100,7 +107,7 @@ def _rewrite_system_range(sql: str) -> str:
             )
         return f"(SELECT id AS X FROM range({a}, ({b}) + 1))"
 
-    return re.sub(
+    return _sub_outside_literals(
         r"SYSTEM_RANGE\s*\(\s*([^,()]+)\s*,\s*([^,()]+?)\s*(?:,\s*([^,()]+?)\s*)?\)",
         repl,
         sql,
@@ -122,7 +129,7 @@ def _rewrite_group_concat(sql: str) -> str:
             inner = f"array_sort({inner})"
         return f"array_join({inner}, {sep})"
 
-    return re.sub(
+    return _sub_outside_literals(
         r"GROUP_CONCAT\s*\(\s*(?P<distinct>DISTINCT\s+)?(?P<expr>[^()]+?)"
         r"(?:\s+ORDER\s+BY\s+(?P<order>[^()]+?))?"
         r"(?:\s+SEPARATOR\s+(?P<sep>'[^']*'))?\s*\)",
@@ -137,7 +144,7 @@ def _rewrite_minus(sql: str) -> str:
     two as synonyms). Only the set-op position (followed by SELECT, an
     opening paren, or ALL) is rewritten, so identifiers containing the
     word are untouched."""
-    return re.sub(
+    return _sub_outside_literals(
         r"\bMINUS\s+(?=(?:ALL\s+)?(?:SELECT|\())",
         "EXCEPT ",
         sql,
@@ -149,7 +156,7 @@ def _rewrite_string_agg(sql: str) -> str:
     """``STRING_AGG(expr, 'sep')`` → GROUP_CONCAT-equivalent
     (Parser.java:2164: PostgreSQL-compat alias with mandatory
     delimiter)."""
-    return re.sub(
+    return _sub_outside_literals(
         r"STRING_AGG\s*\(\s*(?P<distinct>DISTINCT\s+)?(?P<expr>[^(),]+?)\s*,"
         r"\s*(?P<sep>'[^']*')\s*\)",
         lambda m: (
@@ -165,15 +172,17 @@ def _rewrite_datetime_keywords(sql: str) -> str:
     """Bare SYSDATE / SYSTIMESTAMP / SYSTIME / TODAY keyword tokens
     (Parser.java:3632-3643). SYSTIME maps through the engine's TIME
     convention ('HH:mm:ss' string — Spark has no TimeType)."""
-    sql = re.sub(
+    sql = _sub_outside_literals(
         r"\b(SYSDATE|SYSTIMESTAMP)\b(?!\s*\()", "CURRENT_TIMESTAMP", sql,
         flags=re.IGNORECASE,
     )
-    sql = re.sub(
+    sql = _sub_outside_literals(
         r"\bSYSTIME\b(?!\s*\()",
         "date_format(current_timestamp(), 'HH:mm:ss')", sql, flags=re.IGNORECASE,
     )
-    sql = re.sub(r"\bTODAY\b(?!\s*\()", "CURRENT_DATE", sql, flags=re.IGNORECASE)
+    sql = _sub_outside_literals(
+        r"\bTODAY\b(?!\s*\()", "CURRENT_DATE", sql, flags=re.IGNORECASE
+    )
     return sql
 
 
@@ -197,7 +206,9 @@ def _rewrite_csvread(sql: str, session: Optional["EngineSession"]) -> str:
             return view
         return f"csv.`{path}`"
 
-    return re.sub(r"CSVREAD\s*\(\s*'([^']+)'\s*\)", repl, sql, flags=re.IGNORECASE)
+    return _sub_outside_literals(
+        r"CSVREAD\s*\(\s*'([^']+)'\s*\)", repl, sql, flags=re.IGNORECASE
+    )
 
 
 def _rewrite_table_constructor(sql: str) -> str:
@@ -229,7 +240,7 @@ def _rewrite_table_constructor(sql: str) -> str:
             f"(SELECT explode(arrays_zip({zipped})) AS z))"
         )
 
-    return re.sub(
+    return _sub_outside_literals(
         r"TABLE(_DISTINCT)?\s*\(((?:[^()]|\([^()]*\))*)\)",
         repl,
         sql,
@@ -247,7 +258,7 @@ def _rewrite_rownum(sql: str) -> str:
     StatementBase.getCurrentRowNumber); our documented semantics pin
     monotonically-increasing order of the underlying scan.
     """
-    return re.sub(
+    return _sub_outside_literals(
         r"\bROWNUM\s*(\(\s*\))?",
         "(row_number() OVER (ORDER BY monotonically_increasing_id()))",
         sql,
@@ -269,7 +280,7 @@ def _substitute_variables(sql: str, session: Optional["EngineSession"]) -> str:
             return f"'{escaped}'"
         return str(val)
 
-    return re.sub(r"@(\w+)", repl, sql)
+    return _sub_outside_literals(r"@(\w+)", repl, sql)
 
 
 def _substitute_constants(sql: str, session: Optional["EngineSession"]) -> str:
@@ -291,7 +302,7 @@ def _substitute_constants(sql: str, session: Optional["EngineSession"]) -> str:
         return f"({expr})" if expr is not None else m.group(0)
 
     pattern = r"\b(" + "|".join(re.escape(k) for k in consts) + r")\b"
-    return re.sub(pattern, repl, sql, flags=re.IGNORECASE)
+    return _sub_outside_literals(pattern, repl, sql, flags=re.IGNORECASE)
 
 
 def _rewrite_sequence_calls(sql: str, session: Optional["EngineSession"]) -> str:
@@ -312,14 +323,20 @@ def _rewrite_sequence_calls(sql: str, session: Optional["EngineSession"]) -> str
         seq = session.sequence(m.group(1))
         return str(seq._next - seq.increment)
 
-    sql = re.sub(r"NEXTVAL\s*\(\s*'(\w+)'\s*\)", next_repl, sql, flags=re.IGNORECASE)
-    sql = re.sub(r"CURRVAL\s*\(\s*'(\w+)'\s*\)", curr_repl, sql, flags=re.IGNORECASE)
+    sql = _sub_outside_literals(
+        r"NEXTVAL\s*\(\s*'([^']+)'\s*\)", next_repl, sql, flags=re.IGNORECASE
+    )
+    sql = _sub_outside_literals(
+        r"CURRVAL\s*\(\s*'([^']+)'\s*\)", curr_repl, sql, flags=re.IGNORECASE
+    )
     return sql
 
 
 def _strip_for_update(sql: str) -> str:
     """FOR UPDATE is a lock hint — meaningless on snapshots; strip it."""
-    return re.sub(r"\s+FOR\s+UPDATE\s*$", "", sql, flags=re.IGNORECASE)
+    return _sub_outside_literals(
+        r"\s+FOR\s+UPDATE\s*$", "", sql, flags=re.IGNORECASE
+    )
 
 
 # engine-shell nullary functions (reference Function.java system group):
@@ -339,39 +356,73 @@ _NULLARY_LITERALS = {
 }
 
 
-_SQL_STRING_SPAN = re.compile(r"'(?:[^']|'')*'")
+# a string literal (''-escaped), a double-quoted or backquoted name, or a
+# comment: text that no rewrite reads into or edits
+_OPAQUE_SPAN = re.compile(
+    r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`|--[^\n]*|/\*.*?\*/",
+    re.DOTALL,
+)
 
 
-def _sub_outside_literals(pattern: str, repl, sql: str, flags: int = 0) -> str:
-    """re.sub applied only OUTSIDE single-quoted SQL string literals
-    (''-escaping respected): names like DATABASE() appearing inside a
-    quoted string must never be rewritten — the replacement's own
-    quotes would terminate the literal and corrupt the statement."""
+def _blank(m: re.Match) -> str:
+    t = m.group(0)
+    if t[0] in "'\"`":
+        return t[0] + "\0" * (len(t) - 2) + t[-1]
+    return "\0" * len(t)
+
+
+@functools.lru_cache(maxsize=4)
+def _mask_literals(sql: str) -> str:
+    """``sql`` with the inside of every string literal, quoted name and
+    comment replaced by NUL. Same length, so a match over the mask
+    indexes ``sql``; a literal keeps its quotes, so a pattern that holds
+    one (``CSVREAD('f')``) still matches."""
+    return _OPAQUE_SPAN.sub(_blank, sql)
+
+
+class _Spliced:
+    """A match over the mask whose groups read the original text."""
+
+    __slots__ = ("m", "sql")
+
+    def __init__(self, m: re.Match, sql: str):
+        self.m, self.sql = m, sql
+
+    def group(self, g=0):
+        a, b = self.m.span(g)
+        return None if a < 0 else self.sql[a:b]
+
+
+def _sub_outside_literals(pattern, repl, sql: str, flags: int = 0) -> str:
+    """``re.sub`` that never matches into a string literal, quoted name
+    or comment: ``pattern`` runs over :func:`_mask_literals` and every
+    replacement is spliced into ``sql``. A callable ``repl`` gets a match
+    whose groups read ``sql``; a string ``repl`` is inserted as is."""
     out, pos = [], 0
-    for m in _SQL_STRING_SPAN.finditer(sql):
-        out.append(re.sub(pattern, repl, sql[pos : m.start()], flags=flags))
-        out.append(m.group(0))
+    for m in re.compile(pattern, flags).finditer(_mask_literals(sql)):
+        out.append(sql[pos:m.start()])
+        out.append(repl if isinstance(repl, str) else repl(_Spliced(m, sql)))
         pos = m.end()
-    out.append(re.sub(pattern, repl, sql[pos:], flags=flags))
+    if not out:
+        return sql
+    out.append(sql[pos:])
     return "".join(out)
 
 
 def _mask_nested(s: str) -> str:
-    """``s`` with every character of a string literal or of a
-    parenthesized group, delimiters included, replaced by NUL. A regex
-    over the mask sees only top-level keywords and commas, and its spans
-    index ``s``."""
-    out, depth, in_str = [], 0, False
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-            nested = True
-        elif in_str:
-            nested = True
-        else:
-            depth += (ch == "(") - (ch == ")")
-            nested = depth > 0 or ch == ")"
-        out.append("\0" if nested else ch)
+    """``s`` with every character of a string literal, quoted name,
+    comment or parenthesized group, delimiters included, replaced by NUL.
+    A regex over the mask sees only top-level keywords and commas, and
+    its spans index ``s``."""
+    flat = _OPAQUE_SPAN.sub(lambda m: "\0" * len(m.group(0)), s)
+    out, depth, pos = [], 0, 0
+    for m in re.finditer(r"[()]", flat):
+        i = m.start()
+        out.append("\0" * (i - pos) if depth > 0 else flat[pos:i])
+        out.append("\0")
+        depth += 1 if flat[i] == "(" else -1
+        pos = i + 1
+    out.append("\0" * (len(flat) - pos) if depth > 0 else flat[pos:])
     return "".join(out)
 
 
@@ -414,7 +465,7 @@ def _rewrite_fn_aliases(sql: str, session: Optional["EngineSession"]) -> str:
     pattern = (
         r"\b(" + "|".join(re.escape(k) for k in aliases) + r")\s*\("
     )
-    return re.sub(pattern, repl, sql, flags=re.IGNORECASE)
+    return _sub_outside_literals(pattern, repl, sql, flags=re.IGNORECASE)
 
 
 def rewrite(sql: str, session: Optional["EngineSession"] = None) -> str:
@@ -458,10 +509,9 @@ def _rewrite_pipeline_tvf(sql: str, session: Optional["EngineSession"]) -> str:
         return sql
 
     import hashlib as _hashlib
-    import re as _re
 
     def _clean(name: str) -> str:
-        return _re.sub(r"[^A-Za-z0-9]", "_", name).strip("_").lower()
+        return re.sub(r"[^A-Za-z0-9]", "_", name).strip("_").lower()
 
     def _view(prefix: str, *args) -> str:
         # readable prefix + md5 of the RAW arguments: distinct calls can
@@ -473,7 +523,7 @@ def _rewrite_pipeline_tvf(sql: str, session: Optional["EngineSession"]) -> str:
     def _tbl(name: str):
         return session.spark.table(name)
 
-    def r_dedup(m: _re.Match) -> str:
+    def r_dedup(m: re.Match) -> str:
         from .operators.dedup import minhash_lsh_pairs
 
         t, thr = m.group(1), float(m.group(2) or 0.7)
@@ -481,7 +531,7 @@ def _rewrite_pipeline_tvf(sql: str, session: Optional["EngineSession"]) -> str:
         minhash_lsh_pairs(_tbl(t), threshold=thr).createOrReplaceTempView(view)
         return view
 
-    def r_phrase(m: _re.Match) -> str:
+    def r_phrase(m: re.Match) -> str:
         from .operators.ranking import phrase_search
 
         t, phrase = m.group(1), m.group(2)
@@ -489,7 +539,7 @@ def _rewrite_pipeline_tvf(sql: str, session: Optional["EngineSession"]) -> str:
         phrase_search(_tbl(t), phrase.split()).createOrReplaceTempView(view)
         return view
 
-    def r_quality(m: _re.Match) -> str:
+    def r_quality(m: re.Match) -> str:
         from .operators.textops import quality_filter
 
         t = m.group(1)
@@ -497,7 +547,7 @@ def _rewrite_pipeline_tvf(sql: str, session: Optional["EngineSession"]) -> str:
         quality_filter(_tbl(t)).createOrReplaceTempView(view)
         return view
 
-    def r_pagerank(m: _re.Match) -> str:
+    def r_pagerank(m: re.Match) -> str:
         from .operators.graph import pagerank
 
         t, src, dst = m.group(1), m.group(2), m.group(3)
@@ -508,29 +558,29 @@ def _rewrite_pipeline_tvf(sql: str, session: Optional["EngineSession"]) -> str:
         )
         return view
 
-    sql = _re.sub(
+    sql = _sub_outside_literals(
         r"DEDUP_PAIRS\s*\(\s*'([^']+)'\s*(?:,\s*([0-9.]+)\s*)?\)",
         r_dedup,
         sql,
-        flags=_re.IGNORECASE,
+        flags=re.IGNORECASE,
     )
-    sql = _re.sub(
+    sql = _sub_outside_literals(
         r"PHRASE_SEARCH\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)",
         r_phrase,
         sql,
-        flags=_re.IGNORECASE,
+        flags=re.IGNORECASE,
     )
-    sql = _re.sub(
+    sql = _sub_outside_literals(
         r"QUALITY_FILTER\s*\(\s*'([^']+)'\s*\)",
         r_quality,
         sql,
-        flags=_re.IGNORECASE,
+        flags=re.IGNORECASE,
     )
-    sql = _re.sub(
+    sql = _sub_outside_literals(
         r"PAGERANK\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*'([^']+)'\s*"
         r"(?:,\s*([0-9]+)\s*)?\)",
         r_pagerank,
         sql,
-        flags=_re.IGNORECASE,
+        flags=re.IGNORECASE,
     )
     return sql

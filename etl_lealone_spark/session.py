@@ -370,34 +370,23 @@ class EngineSession:
         """Run a statement: DDL/DML route to the catalog + snapshot
         tables; queries go through the dialect normalizer to Spark SQL.
 
-        ``args`` supports both named parameters (dict, Spark-native) and
-        the reference's positional ``?`` placeholders (list/tuple —
-        Parameter.java:24), which are rewritten to named params.
+        ``args`` supports both named parameters (dict) and the reference's
+        positional ``?`` placeholders (list/tuple — Parameter.java:24);
+        Spark binds both, and skips a ``?`` inside a literal. A statement
+        with ``args`` is a query: DML with ``args`` raises ValueError.
         """
-        if args is not None:
-            from .dialect import rewrite
+        if isinstance(args, (list, tuple)):
+            from .dialect import _mask_literals
 
-            if isinstance(args, (list, tuple)):
-                named: dict[str, Any] = {}
-                parts = sql.split("?")
-                if len(parts) - 1 != len(args):
-                    raise ValueError(
-                        f"statement has {len(parts) - 1} '?' placeholders "
-                        f"but {len(args)} arguments were given"
-                    )
-                out = []
-                for i, part in enumerate(parts[:-1]):
-                    out.append(part)
-                    out.append(f":p{i}")
-                    named[f"p{i}"] = args[i]
-                out.append(parts[-1])
-                sql, args = "".join(out), named
-            t0 = _time.time()
-            out = self.spark.sql(rewrite(sql, session=self), args=args)
-            self._record_stat(sql, _time.time() - t0)
-            return out
+            n = _mask_literals(sql).count("?")
+            if n != len(args):
+                raise ValueError(
+                    f"statement has {n} '?' placeholders "
+                    f"but {len(args)} arguments were given"
+                )
+            args = list(args)
         t0 = _time.time()
-        out = self._router.execute(sql)
+        out = self._router.execute(sql, args)
         self._record_stat(sql, _time.time() - t0)
         return out
 
@@ -422,7 +411,10 @@ class EngineSession:
             self._result_cache.move_to_end(key)
             rows, schema = self._result_cache[key]
             return self.spark.createDataFrame(rows, schema)
+        generation = self._cache_generation
         df = self.sql(key)
+        if self._cache_generation != generation:
+            return df  # it wrote (e.g. WITH … INSERT): never replay a write
         rows = df.limit(self.result_cache_max_rows + 1).collect()
         if len(rows) <= self.result_cache_max_rows:
             self._result_cache[key] = (rows, df.schema)

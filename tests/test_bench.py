@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import json
 import os
+import signal
+import subprocess
+import sys
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -124,3 +127,45 @@ def test_scale_doubles_the_scaled_tables_and_reports_exponents(spark, sf_dir, tm
     assert report["input_ratio"][0] > 1
     assert isinstance(report["wall_exp"][0], float)
     assert isinstance(report["shuffle_exp"][0], float)
+
+
+_SIGTERM_SCALE = """
+import os, signal, sys
+sys.path.insert(0, {root!r})
+import bench
+
+
+class Spark:
+    class sparkContext:
+        @staticmethod
+        def setLogLevel(level):
+            pass
+
+    def stop(self):
+        print("stopped", flush=True)
+
+
+def write_scaled(src, dst, k):
+    os.makedirs(dst)
+    os.kill(os.getpid(), signal.SIGTERM)
+
+
+bench.build_spark = lambda **kw: Spark()
+bench.quiet_bounded_window_warnings = lambda spark: None
+bench.write_scaled = write_scaled
+bench.main(["--scale", "1,2", "dedup_exact"])
+"""
+
+
+def test_sigterm_removes_the_scale_dir_and_stops_the_session(tmp_path):
+    """A SIGTERM during a scale run (no JVM: the session is a stub and the
+    data writer signals itself) still removes the scale temp dir and
+    stops the session."""
+    out = subprocess.run(
+        [sys.executable, "-c", _SIGTERM_SCALE.format(root=os.path.dirname(bench.__file__))],
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 128 + signal.SIGTERM, out.stderr[-2000:]
+    assert out.stdout.split() == ["stopped"]
+    assert not list(tmp_path.glob("bench_scale_*"))

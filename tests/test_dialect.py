@@ -227,3 +227,42 @@ def test_nullary_rewrite_skips_string_literals():
     sql2 = "SELECT 'it''s SCHEMA() here', SCHEMA()"
     out2 = _rewrite_nullary_system_fns(sql2)
     assert "'it''s SCHEMA() here'" in out2 and not out2.rstrip().endswith("SCHEMA()")
+
+
+@pytest.fixture(scope="module")
+def quoting_es(spark):
+    s = EngineSession(spark)
+    s.set_variable("v", 7)
+    s.sql("CREATE CONSTANT k_one VALUE 1")
+    s.sql('CREATE ALIAS MABS FOR "java.lang.Math.abs"')
+    s.sql("CREATE SEQUENCE s")
+    return s
+
+
+# per rewrite pass, a text that it would rewrite outside a literal
+_IN_LITERAL = {
+    "variables": "user@example.com",
+    "line_comments": "see http://x.org",
+    "rownum": "ROWNUM",
+    "datetime_keywords": "SYSDATE SYSTIMESTAMP TODAY SYSTIME",
+    "constants": "k_one",
+    "fn_aliases": "MABS(-1)",
+    "group_concat": "GROUP_CONCAT(x)",
+    "string_agg": "STRING_AGG(x, ',')",
+    "system_range": "SYSTEM_RANGE(1, 2)",
+    "table_constructor": "TABLE(x INT=ARRAY[1])",
+    "minus": "a MINUS SELECT b",
+    "sequence_calls": "NEXTVAL('s')",
+    "csvread": "CSVREAD('f.csv')",
+    "pipeline_tvf": "QUALITY_FILTER('docs')",
+    "nullary_system_fns": "DATABASE()",
+}
+
+
+@pytest.mark.parametrize("rewrite_pass", list(_IN_LITERAL))
+def test_rewrites_leave_literals_alone(quoting_es, rewrite_pass):
+    text = _IN_LITERAL[rewrite_pass]
+    quoted = "'" + text.replace("'", "''") + "'"
+    assert quoted in rewrite(f"SELECT {quoted} AS e", session=quoting_es)
+    got = quoting_es.sql(f"SELECT {quoted} AS e, 1 AS n // trailing").collect()[0]
+    assert (got["e"], got["n"]) == (text, 1)

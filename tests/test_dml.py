@@ -436,3 +436,97 @@ def test_snapshot_diff_null_values_and_keys(spark):
     got = [tuple(r) for r in snapshot_diff(old, new, ["k"]).collect()]
     assert got == [(1, None, 10, "update")]
     assert snapshot_diff(new, new, ["k", "s", "v"]).count() == 0
+
+
+def _insert_prepared(es):
+    es.prepare("ins", "INSERT INTO t VALUES (:id, :a)")
+    return es.execute_prepared("ins", id=3, a=4)
+
+
+# Each case runs against t (id INT PRIMARY KEY, a INT CHECK (a > 0))
+# holding {1: 10, 2: 20}, with u(k, x) = (1, 7), (1, 9), (2, 4) and the
+# session variable @v = 7. ``want`` is t after the statement, as
+# {id: a}, or the exception the statement raises.
+_ROUTED = {
+    "comment_insert": ("/* c */ INSERT INTO t VALUES (3, 5)", {1: 10, 2: 20, 3: 5}),
+    "comment_insert_dup_key": ("/* c */ INSERT INTO t VALUES (1, 5)", ValueError),
+    "line_comment_insert": ("-- c\nINSERT INTO t VALUES (3, 5)", {1: 10, 2: 20, 3: 5}),
+    "line_comment_insert_check": ("-- c\nINSERT INTO t VALUES (3, -5)", ValueError),
+    "cte_insert": (
+        "WITH x AS (SELECT 3 AS id, 5 AS a) INSERT INTO t SELECT * FROM x",
+        {1: 10, 2: 20, 3: 5},
+    ),
+    "cte_insert_dup_key": (
+        "WITH x AS (SELECT 1 AS id, 5 AS a) INSERT INTO t SELECT * FROM x",
+        ValueError,
+    ),
+    "positional_args": (
+        lambda es: es.sql("INSERT INTO t VALUES (?, ?)", args=[3, 4]), ValueError
+    ),
+    "prepared_args": (_insert_prepared, ValueError),
+    "qualified_set": ("UPDATE t SET t.a = 3 WHERE id = 2", {1: 10, 2: 3}),
+    "backticked_set": ("UPDATE t SET `a` = 5 WHERE id = 2", {1: 10, 2: 5}),
+    "unknown_set": ("UPDATE t SET nosuch = 3 WHERE id = 2", ValueError),
+    "unknown_insert_col": ("INSERT INTO t (id, a, nosuch) VALUES (5, 1, 2)", ValueError),
+    "correlated_set": (
+        "UPDATE t SET a = (SELECT max(x) FROM u WHERE u.k = t.id) WHERE id <= 2",
+        {1: 9, 2: 4},
+    ),
+    "var_update": ("UPDATE t SET a = @v WHERE id = 1", {1: 7, 2: 20}),
+    "var_delete": ("DELETE FROM t WHERE id = @v - 6", {2: 20}),
+    "sysdate_update": (
+        "UPDATE t SET a = CASE WHEN SYSDATE > TIMESTAMP '2000-01-01' THEN 8 END "
+        "WHERE id = 1",
+        {1: 8, 2: 20},
+    ),
+    "sysdate_delete": (
+        "DELETE FROM t WHERE SYSDATE > TIMESTAMP '2000-01-01' AND id = 2", {1: 10}
+    ),
+    "merge_alias_without_as": (
+        "MERGE INTO t USING (SELECT 2 AS id, 30 AS a) s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET a = s.a",
+        {1: 10, 2: 30},
+    ),
+    "merge_three_deep_using": (
+        "MERGE INTO t USING (SELECT * FROM (SELECT * FROM (SELECT k AS id, x AS a "
+        "FROM u WHERE x <> 9))) AS s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET a = s.a "
+        "WHEN NOT MATCHED THEN INSERT (id, a) VALUES (s.id + 2, s.a)",
+        {1: 7, 2: 4},
+    ),
+    "comment_update": ("/* c */ UPDATE t SET a = 11 WHERE id = 1", {1: 11, 2: 20}),
+    "comment_delete": ("/* c */ DELETE FROM t WHERE id = 1", {2: 20}),
+}
+
+
+@pytest.mark.parametrize("case", list(_ROUTED))
+def test_dml_routed_by_parse_tree(spark, tmp_path, case):
+    """Every INSERT/UPDATE/DELETE/MERGE goes through the snapshot path,
+    whatever precedes it: a write commits exactly one version and keeps
+    the constraints; a statement that cannot run raises and commits
+    none; the version before it reads unchanged either way."""
+    from etl_lealone_spark.session import EngineSession
+
+    stmt, want = _ROUTED[case]
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    es.sql("CREATE TABLE t (id INT PRIMARY KEY, a INT CHECK (a > 0))")
+    es.sql("INSERT INTO t VALUES (1, 10), (2, 20)")
+    es.sql("CREATE TABLE u (k INT, x INT)")
+    es.sql("INSERT INTO u VALUES (1, 7), (1, 9), (2, 4)")
+    es.set_variable("v", 7)
+    st = es.catalog.table("t")
+    before = st.versions()
+    run = stmt if callable(stmt) else (lambda s: s.sql(stmt))
+
+    def rows(sql):
+        return {r["id"]: r["a"] for r in es.sql(sql).collect()}
+
+    if isinstance(want, dict):
+        run(es)
+        assert rows("SELECT * FROM t") == want
+        assert st.versions() == before + [before[-1] + 1]
+    else:
+        with pytest.raises(want):
+            run(es)
+        assert st.versions() == before
+    assert rows(f"SELECT * FROM t VERSION AS OF {before[-1]}") == {1: 10, 2: 20}

@@ -76,6 +76,16 @@ def test_result_cache(spark, tmp_path):
     assert es.get_setting("FOO") == 1
 
 
+def test_result_cache_never_replays_a_write(spark, tmp_path):
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    es.sql("CREATE TABLE rw (id int, v int)")
+    q = "WITH x AS (SELECT 1 AS id, 5 AS v) INSERT INTO rw SELECT * FROM x"
+    es.sql_cached(q)
+    es.sql_cached(q)
+    assert es.sql("SELECT count(*) AS n FROM rw").collect()[0]["n"] == 2
+    assert not es._result_cache
+
+
 def test_result_cache_eviction(spark, tmp_path):
     es = EngineSession(spark, warehouse=str(tmp_path))
     es.result_cache_size = 2

@@ -109,6 +109,13 @@ def test_positional_params_count_mismatch(es):
         es.sql("SELECT ? AS a, ? AS b", args=[1])
 
 
+def test_positional_params_skip_literals(es):
+    row = es.sql("SELECT ? AS a, 'why?' AS b", args=[1]).collect()[0]
+    assert (row["a"], row["b"]) == (1, "why?")
+    with pytest.raises(ValueError, match="placeholders"):
+        es.sql("SELECT ? AS a, 'why?' AS b", args=[1, 2])
+
+
 def test_named_params(es):
     rows = es.sql(
         "SELECT count(*) AS n FROM customer WHERE bal >= :minbal",
