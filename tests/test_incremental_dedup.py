@@ -86,6 +86,20 @@ def test_result_cache_never_replays_a_write(spark, tmp_path):
     assert not es._result_cache
 
 
+def test_result_cache_runs_the_exact_text(spark, tmp_path):
+    es = EngineSession(spark, warehouse=str(tmp_path))
+    assert es.sql_cached("SELECT 'a  b' AS s").collect()[0]["s"] == "a  b"
+    assert es.sql_cached("SELECT 'a b' AS s").collect()[0]["s"] == "a b"
+    q = "SELECT 1 AS x -- note\n, 2 AS y"
+    assert es.sql_cached(q).columns == ["x", "y"]
+    assert es.sql_cached(q).collect()[0].asDict() == {"x": 1, "y": 2}
+    # a leading comment does not make a query uncacheable
+    es.sql_cached("-- lead\nSELECT 3 AS v")
+    assert list(es._result_cache) == [
+        "SELECT 'a  b' AS s", "SELECT 'a b' AS s", q, "-- lead\nSELECT 3 AS v"
+    ]
+
+
 def test_result_cache_eviction(spark, tmp_path):
     es = EngineSession(spark, warehouse=str(tmp_path))
     es.result_cache_size = 2
