@@ -7,6 +7,12 @@ parquet tables plus a router that turns statement text into DataFrame
 operations. Any statement that is not a Lealone-only command goes
 through the dialect rewriter and is parsed once by Spark's parser; DML
 plan nodes become snapshot writes, any other plan the DataFrame.
+CREATE TABLE is parsed by Spark too: its Lealone-only forms (type
+names, IDENTITY, ``AS (expr)``, COLLATE, the prefixes and trailing
+clauses) are turned into ANSI text first, and the columns and
+constraints are read from the CreateTable node. The query of a CTAS,
+view, materialized view, CALL or REFRESH takes the same rewrites and
+the same one parse.
 
 Supported statements (reference file cites):
 - CREATE TABLE / DROP TABLE / TRUNCATE TABLE (CreateTable.java,
@@ -36,6 +42,8 @@ import re
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Mapping, Optional, Sequence
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,9 +53,18 @@ from pyspark.sql.types import (
     DecimalType,
     IntegralType,
     StringType,
+    StructField,
+    StructType,
+    _parse_datatype_json_string,
 )
 
-from .dialect import _mask_nested, _split_top_level, _sub_outside_literals, rewrite
+from .dialect import (
+    _mask_literals,
+    _mask_nested,
+    _split_top_level,
+    _sub_outside_literals,
+    rewrite,
+)
 from .operators.dml import SnapshotTable, merge_by_key
 from .services import ServiceMeta, generate_model_code, generate_service_code, parse_methods
 
@@ -235,14 +252,6 @@ class Catalog:
             self.spark.sql(vquery).createOrReplaceTempView(vname)
 
 
-def _parse_codegen_extras(extras: str) -> tuple[str, str]:
-    """(package, code_path) from the trailing PACKAGE / GENERATE CODE
-    clauses (empty strings when absent)."""
-    pkg = re.search(r"PACKAGE\s+'([^']*)'", extras, re.IGNORECASE)
-    path = re.search(r"GENERATE\s+CODE\s+'([^']*)'", extras, re.IGNORECASE)
-    return (pkg.group(1) if pkg else "", path.group(1) if path else "")
-
-
 # Named-collation mapping (reference: lealone-common/.../db/value/
 # CompareMode.java + CompareModeIcu4J.java; dml/Set.java COLLATION).
 # Language names map to ICU locales; STRENGTH PRIMARY ignores
@@ -313,183 +322,64 @@ def collation_to_spark(name: str, strength: str | None = None) -> str | None:
     return f"{base}{suffix}"
 
 
-def _balanced_group(s: str, open_idx: int) -> str | None:
-    """Content of the quote-aware balanced parenthesized group whose
-    '(' sits at ``s[open_idx]`` — the extraction CHECK/DEFAULT need,
-    since a ``[^)]*`` regex truncates at the first ')' of any nested
-    call like COALESCE(x, 0). None if unbalanced."""
-    depth, i, in_q = 0, open_idx, False
-    while i < len(s):
-        c = s[i]
-        if c == "'":
-            in_q = not in_q
-        elif not in_q:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    return s[open_idx + 1 : i]
-        i += 1
-    return None
+def _spark_type(typ: str, args: str, domains: Mapping[str, str]) -> str:
+    """The Spark type of Lealone type name ``typ`` with its ``(p[,s])``
+    ``args`` (which only the decimal family keeps), or of a CREATE
+    DOMAIN name. An unknown name raises."""
+    t = typ.lower()
+    if t in ("decimal", "numeric", "dec", "number") and args:
+        return "decimal" + re.sub(r"\s+", "", args)
+    spark_type = TYPE_MAP.get(t) or domains.get(t)
+    if spark_type is None:
+        raise ValueError(f"unknown type: {typ}")
+    return spark_type
 
 
-def _parse_columns(cols_sql: str) -> tuple[str, list[str], "TableConstraints"]:
-    """'(a int primary key, b varchar(10) not null default 5, ...)' →
-    (spark schema DDL, primary-key column list, constraints).
+def _names(s) -> list[str]:
+    """The lowercased names of a Scala Seq of column names."""
+    return [c.lower() for c in _seq(s)]
 
-    The top-level splitter tracks string literals as well as paren
-    depth: a comma inside a quoted DEFAULT/CHECK literal (``DEFAULT
-    'a,b'``) is literal content, not a column separator."""
-    fields, pks = [], []
-    cons = TableConstraints()
-    for p in _split_top_level(cols_sql):
-        is_constraint = re.match(
-            r"(CONSTRAINT|FOREIGN|UNIQUE|KEY|PRIMARY|CHECK)\b",
-            p.strip(),
-            re.IGNORECASE,
-        )
-        m = None if is_constraint else re.match(
-            rf"({_IDENT})\s+({_IDENT})(\s*\(\s*\d+(\s*,\s*\d+)?\s*\))?(?P<rest>.*)$",
-            p.strip(),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            # table-level PRIMARY KEY (...) constraint
-            pk = re.match(
-                r"PRIMARY\s+KEY\s*\(([^)]*)\)", p.strip(), re.IGNORECASE
-            )
-            if pk:
-                pks.extend(c.strip().lower() for c in pk.group(1).split(","))
-                continue
-            chk = re.match(r"CHECK\s*\((.*)\)\s*$", p.strip(), re.IGNORECASE | re.DOTALL)
-            if chk:
-                cons.checks.append(chk.group(1))
-                continue
-            fk = re.match(
-                rf"(?:CONSTRAINT\s+(?P<fkname>{_IDENT})\s+)?FOREIGN\s+KEY\s*"
-                rf"\((?P<cols>[^)]*)\)\s*REFERENCES\s+(?P<ref>{_IDENT})"
-                rf"\s*(?:\((?P<refcols>[^)]*)\))?",
-                p.strip(),
-                re.IGNORECASE,
-            )
-            if fk:
-                cons.foreign_keys.append(
-                    (
-                        (fk.group("fkname") or "").lower(),
-                        [c.strip().lower() for c in fk.group("cols").split(",")],
-                        fk.group("ref").lower(),
-                        [
-                            c.strip().lower()
-                            for c in (fk.group("refcols") or "").split(",")
-                            if c.strip()
-                        ],
-                    )
-                )
-                continue
-            if re.match(r"(CONSTRAINT|FOREIGN|UNIQUE|KEY)\b", p.strip(), re.IGNORECASE):
-                continue  # unique-constraint syntax: metadata-only
-            raise ValueError(f"cannot parse column definition: {p!r}")
-        name, typ = m.group(1), m.group(2).lower()
-        lname = name.lower()
-        args = (m.group(3) or "").strip()
-        rest = m.group("rest") or ""
-        if typ in ("decimal", "numeric", "dec", "number") and args:
-            spark_type = f"decimal{args}"
-        else:
-            spark_type = TYPE_MAP.get(typ, "string")
-        # per-column named collation: ``w VARCHAR(20) COLLATE GERMAN
-        # [STRENGTH SECONDARY]`` → ``w string collate de_CI`` (Spark 4
-        # native collation — ordering and equality are then JVM-side at
-        # every compare site; reference CompareMode.java semantics).
-        # Keyword clauses are recognized on STRIPPED text so tokens
-        # inside a DEFAULT string literal ('COLLATE GERMAN', 'NOT
-        # NULL', 'PRIMARY KEY', …) or a CHECK expression can never be
-        # misparsed as clauses of the column (r6 advice finding + the
-        # follow-up review: the whole keyword family had the bug, not
-        # just COLLATE) — while real clauses anywhere in the definition
-        # (e.g. COLLATE after NOT NULL) are still honored.
-        # ``masked`` blanks literal CONTENT but preserves every position,
-        # so a clause found in masked can slice its expression out of
-        # the raw text; ``bare`` additionally drops parenthesized groups
-        # for pure presence checks.
-        masked = re.sub(
-            r"'(?:[^']|'')*'",
-            lambda mm: "'" + "x" * (len(mm.group(0)) - 2) + "'",
-            rest,
-        )
-        bare = masked
-        while True:
-            stripped = re.sub(r"\([^()]*\)", "", bare)
-            if stripped == bare:
-                break
-            bare = stripped
-        cm = re.search(
-            rf"\bCOLLATE\s+(?P<cname>{_IDENT})(?:\s+STRENGTH\s+(?P<cstr>\w+))?",
-            bare,
-            re.IGNORECASE,
-        )
-        if cm and spark_type == "string":
-            sc = collation_to_spark(cm.group("cname"), cm.group("cstr"))
-            if sc is not None:
-                spark_type = f"string collate {sc}"
-        fields.append(f"{name} {spark_type}")
-        if typ in ("identity", "serial") or re.search(
-            r"AUTO_INCREMENT|IDENTITY", bare, re.IGNORECASE
-        ):
-            cons.identity.append(lname)
-        if re.search(r"PRIMARY\s+KEY", bare, re.IGNORECASE):
-            pks.append(lname)
-            cons.not_null.append(lname)
-        if re.search(r"NOT\s+NULL", bare, re.IGNORECASE):
-            if lname not in cons.not_null:
-                cons.not_null.append(lname)
-        # DEFAULT / CHECK expressions: locate the clause on the masked
-        # text (so literal content can't fake a keyword), then extract
-        # the payload from the RAW text with quote-aware balanced-paren
-        # scanning — a [^)]* regex truncates nested calls like
-        # COALESCE(x, 0) at the first ')' (3rd-pass review finding).
-        dm = re.search(r"\bDEFAULT\s+", masked, re.IGNORECASE)
-        if dm:
-            pos = dm.end()
-            if pos < len(rest) and rest[pos] == "(":
-                grp = _balanced_group(rest, pos)
-                if grp is not None:
-                    cons.defaults[lname] = f"({grp})"
-            elif pos < len(rest) and rest[pos] == "'":
-                lit = re.match(r"'(?:[^']|'')*'", rest[pos:])
-                if lit:
-                    cons.defaults[lname] = lit.group(0)
-            else:
-                # Bare token — but an unparenthesized FUNCTION default
-                # (``DEFAULT COALESCE(a, 0)``) must extend through the
-                # balanced call group: \S+ alone stops at the first
-                # whitespace, storing ``COALESCE(a,`` (r7 advisor
-                # finding — the '(' branch above only engages when the
-                # payload STARTS with '(').
-                tok = re.match(r"[A-Za-z_][\w.$]*", rest[pos:]) or re.match(
-                    r"\S+", rest[pos:]
-                )
-                if tok:
-                    val = tok.group(0)
-                    after = pos + len(val)
-                    if after < len(rest) and rest[after] == "(":
-                        grp = _balanced_group(rest, after)
-                        if grp is not None:
-                            val = f"{val}({grp})"
-                    cons.defaults[lname] = val
-        cm = re.search(
-            r"\bAS\s*\((?P<expr>.*)\)\s*$", masked, re.IGNORECASE | re.DOTALL
-        )
-        if cm:
-            cons.computed[lname] = rest[cm.start("expr") : cm.end("expr")]
-        km = re.search(r"\bCHECK\s*\(", masked, re.IGNORECASE)
-        if km:
-            grp = _balanced_group(rest, km.end() - 1)
-            if grp is not None:
-                cons.checks.append(grp)
-    return ", ".join(fields), pks, cons
 
+# CREATE TABLE's head up to its element list, matched over the top-level
+# mask: the element list is one run of NULs there
+_CREATE_TABLE = re.compile(
+    r"CREATE\s+(?P<prefix>(?:CACHED|MEMORY|(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?)\s+)?"
+    r"TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[^\s\0]+\s*(?P<elems>\0*)",
+    re.IGNORECASE,
+)
+# a column's name, type and (p[,s]), over the column's mask
+_COLUMN_HEAD = re.compile(r"\s*(?:[^\s\0]+|\0+)\s+(?P<type>[A-Za-z_]\w*)(?P<args>\s*\0+)?")
+_TYPE_ARGS = re.compile(r"\(\s*\d+\s*(?:,\s*\d+\s*)?\)")
+# the Lealone clauses of a column or table constraint; the first
+# alternative is Spark's own text that the others must not touch
+_LEALONE_CLAUSE = re.compile(
+    r"\b(?P<keep>(?:NOT|DEFAULT|SET|IS)\s+NULL"
+    r"|GENERATED\s+(?:ALWAYS|BY\s+DEFAULT)\s+AS\s+(?:IDENTITY\b|\0+))"
+    r"|\bNULL\b|\bSELECTIVITY\s+\d+"
+    r"|\b(?P<identity>AUTO_INCREMENT|IDENTITY)\b"
+    r"|\b(?P<computed>AS)(?=\s*\0)"
+    r"|\bCOLLATE\s+(?P<collation>[A-Za-z_]\w*)(?:\s+STRENGTH\s+(?P<strength>[A-Za-z]+))?"
+    r"|\bREFERENCES\s+(?P<ref>[A-Za-z_][\w.]*)\b(?!\s*\0)",
+    re.IGNORECASE,
+)
+# one clause after the element list of CREATE TABLE / CREATE SERVICE
+# (Parser.java:4271-4293), over the top-level mask
+_CREATE_TAIL = re.compile(
+    r"\s*(?:PACKAGE\s+(?P<package>\0+)|GENERATE\s+CODE\s+(?P<code>\0+)"
+    r"|IMPLEMENT\s+BY\s+(?P<implement>\0+)|ENGINE\s*=?\s*\w+|HIDDEN\b)",
+    re.IGNORECASE,
+)
+
+
+def _create_tail(s: str, mask: str, pos: int) -> tuple[dict, int]:
+    """The literals of the PACKAGE, GENERATE CODE and IMPLEMENT BY
+    clauses of ``s`` from ``pos`` on, by key, and where the clauses end;
+    ENGINE and HIDDEN are accepted and dropped."""
+    out = {}
+    while m := _CREATE_TAIL.match(mask, pos):
+        out.update({k: s[m.start(k) + 1 : m.end(k) - 1] for k, v in m.groupdict().items() if v})
+        pos = m.end()
+    return out, pos
 
 # leading whitespace and comments: the head keyword comes after them
 _LEADING_COMMENTS = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*", re.DOTALL)
@@ -673,12 +563,16 @@ class StatementRouter:
     def _parse(self, s: str) -> tuple:
         """(plan, plan class, text, extra) of a statement that is not a
         Lealone-only command: the dialect rewrites, then one parse. A CTE
-        ahead of an INSERT is moved into its query."""
+        ahead of an INSERT is moved into its query. CREATE TABLE's forms
+        are read before the rewrites, which would run a sequence call in
+        a column definition once, at CREATE."""
+        extra = {}
+        if _head(s)[1] == "CREATE":
+            s, extra = self._ansi_create(s)
         s = self._rewrite_info_schema(s)
         s = self._rewrite_time_travel(s)
         s = self._rewrite_table_diff(s)
         s = rewrite(s, session=self.session)
-        extra = {}
         if _head(s)[1] in ("INSERT", "UPDATE", "DELETE", "MERGE"):
             s, extra = _ansi_dml(s)
         plan = self._parser.parsePlan(s)
@@ -695,6 +589,96 @@ class StatementRouter:
             elif kind in _DML_HANDLERS:
                 raise ValueError(f"WITH is supported only ahead of INSERT: {s[:80]}")
         return plan, kind, s, extra
+
+    def _query(self, q: str) -> tuple[DataFrame, str]:
+        """The DataFrame of the query text inside a DDL statement, and
+        that text after the dialect rewrites: the one parse of
+        :meth:`_parse`, never ``spark.sql``. DML raises."""
+        plan, kind, text, _ = self._parse(q)
+        if kind in _DML_HANDLERS:
+            raise ValueError(f"a query is expected, not DML: {text[:80]}")
+        return self._frame(plan), text
+
+    def _ansi_create(self, s: str) -> tuple[str, dict]:
+        """CREATE TABLE's Lealone forms as ANSI text that Spark parses,
+        plus what the text no longer says (Parser.java:5700-5800). The
+        CACHED/MEMORY/TEMPORARY prefix goes; the names of a CTAS column
+        list go to ``extra["columns"]``. Each element of a column list
+        passes :meth:`_ansi_element`; the clauses after the list go, and
+        their literals to ``extra`` (:func:`_create_tail`)."""
+        mask = _mask_nested(s)
+        m = _CREATE_TABLE.match(mask, _LEADING_COMMENTS.match(s).end())
+        if m is None:
+            return s, {}
+        a, end = m.span("elems")
+        extra, elems = {}, None
+        if a < end and re.match(r"\s*AS\b", mask[end:], re.IGNORECASE):
+            names = _split_top_level(s[a + 1 : end - 1])
+            if all(re.fullmatch(_IDENT, n) for n in names):
+                extra["columns"], elems = [n.lower() for n in names], ""
+        elif a < end:
+            parts = _split_top_level(s[a + 1 : end - 1])
+            elems = f"({', '.join(self._ansi_element(e) for e in parts)})"
+            extra, end = _create_tail(s, mask, end)
+        if elems is not None:
+            s = s[:a] + elems + s[end:]
+        if m.group("prefix"):
+            s = s[: m.start("prefix")] + s[m.end("prefix"):]
+        return s, extra
+
+    def _ansi_element(self, e: str) -> str:
+        """One column definition or table constraint of CREATE TABLE as
+        ANSI text, by one match over its top-level mask. A column's type
+        name and ``(p[,s])`` become its Spark type (:func:`_spark_type`);
+        a COLLATE anywhere in the column moves next to it (else the
+        session's SET COLLATION applies to a string); IDENTITY/SERIAL and
+        AUTO_INCREMENT become GENERATED BY DEFAULT AS IDENTITY; ``AS
+        (expr)`` becomes GENERATED ALWAYS AS (expr); SELECTIVITY and a
+        bare NULL go; REFERENCES t without columns names t's primary
+        key. A NEXTVAL/CURRVAL call raises: the dialect runs it once per
+        statement, not once per row."""
+        if re.search(r"\b(?:NEXTVAL|CURRVAL)\s*\(", _mask_literals(e), re.IGNORECASE):
+            raise ValueError(f"a sequence call runs once per statement, not per row: {e!r}")
+        mask = _mask_nested(e)
+        head = None
+        if not re.match(r"(?:CONSTRAINT|PRIMARY|UNIQUE|CHECK|FOREIGN)\b", mask, re.IGNORECASE):
+            head = _COLUMN_HEAD.match(mask)
+            if head is None:
+                raise ValueError(f"cannot parse column definition: {e!r}")
+        out, pos = [], head.end() if head else 0
+        identity, collation = False, None
+        for c in _LEALONE_CLAUSE.finditer(mask, pos):
+            if c.group("keep"):
+                continue
+            out.append(e[pos : c.start()])
+            pos = c.end()
+            if c.group("identity"):
+                identity = True
+            elif c.group("computed"):
+                out.append("GENERATED ALWAYS AS")
+            elif c.group("collation"):
+                collation = collation_to_spark(c.group("collation"), c.group("strength"))
+                collation = collation or "UTF8_BINARY"
+            elif c.group("ref"):
+                pk = self.catalog.indexes.get(f"__pk_{c.group('ref').lower()}")
+                if pk is None:
+                    raise ValueError(f"REFERENCES {c.group('ref')}: no primary key")
+                out.append(f"{e[c.start() : c.end()]} ({', '.join(pk.columns)})")
+        out.append(e[pos:])
+        if head is None:
+            return "".join(out)
+        typ = head.group("type")
+        args = e[head.start("args") : head.end("args")].strip()  # "" when absent
+        if args and not _TYPE_ARGS.fullmatch(args):
+            raise ValueError(f"cannot parse column type: {e!r}")
+        spark_type = _spark_type(typ, args, self.catalog.domains)
+        if collation is None and spark_type == "string":
+            collation = self.session.collation
+        if collation:
+            spark_type += f" collate {collation}"
+        if identity or typ.lower() in ("identity", "serial"):
+            spark_type += " GENERATED BY DEFAULT AS IDENTITY"
+        return e[: head.start("type")] + spark_type + "".join(out)
 
     def _rewrite_time_travel(self, s: str) -> str:
         """``FROM t VERSION AS OF n`` / ``FROM t TIMESTAMP AS OF 'ts'``
@@ -966,128 +950,36 @@ class StatementRouter:
             self.catalog.refresh_view(name)
             return self._ok(f"created table {name} as clone of {src_name}")
 
-        # trailing clauses shared by CREATE TABLE / CREATE SERVICE
-        # (Parser.java:4271-4293: ENGINE, PACKAGE, IMPLEMENT BY,
-        # GENERATE CODE, HIDDEN)
-        _EXTRAS = (
-            r"(?P<extras>(?:\s*(?:PACKAGE\s+'[^']*'|IMPLEMENT\s+BY\s+'[^']*'"
-            r"|GENERATE\s+CODE\s+'[^']*'|ENGINE\s*=?\s*\w+|HIDDEN))*)"
-        )
-        m = re.match(
-            rf"CREATE\s+(?:CACHED\s+|MEMORY\s+|(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+)?TABLE\s+"
-            rf"(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})\s*\((?P<cols>.*)\){_EXTRAS}\s*$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            name = m.group("name").lower()
-            if name in self.catalog.tables:
-                if re.search(r"IF\s+NOT\s+EXISTS", s, re.IGNORECASE):
-                    return self._ok("exists")
-                raise ValueError(f"table already exists: {name}")
-            schema_ddl, pks, cons = _parse_columns(m.group("cols"))
-            if self.session.collation:
-                # database collation (SET COLLATION) applies to every
-                # un-collated string column of newly created tables
-                schema_ddl = re.sub(
-                    r"\bstring\b(?!\s+collate)",
-                    f"string collate {self.session.collation}",
-                    schema_ddl,
-                )
-            st = SnapshotTable(self.spark, self.catalog.warehouse, name)
-            try:
-                empty = self.spark.createDataFrame([], schema_ddl)
-            except Exception as exc:
-                # unknown ICU locale in a per-column COLLATE fails here;
-                # reject typed like SET COLLATION does (DbException
-                # INVALID_VALUE in the reference)
-                if "collat" in str(exc).lower():
-                    raise ValueError(
-                        f"unknown collation in column DDL: {exc}"
-                    ) from exc
-                raise
-            st.create_empty(empty.schema)
-            self.catalog.tables[name] = st
-            self.catalog.table_ddl[name] = s
-            self.catalog.constraints[name] = cons
-            if pks:
-                self.catalog.indexes[f"__pk_{name}"] = IndexMeta(
-                    f"__pk_{name}", name, pks, unique=True
-                )
-            self.catalog.refresh_view(name)
-            pkg, code_path = _parse_codegen_extras(m.group("extras") or "")
-            if code_path:
-                # GENERATE CODE (SqlScript.java:56-58): emit the typed
-                # Python model class for this table
-                cols_typed = [
-                    (f.name, f.dataType.simpleString())
-                    for f in empty.schema.fields
-                ]
-                generate_model_code(name, cols_typed, pkg, code_path)
-            return self._ok(f"created table {name}")
+        if _CREATE_TABLE.match(_mask_nested(s)):
+            return self._create_table(s)
 
+        mask = _mask_nested(s)
         m = re.match(
-            rf"CREATE\s+SERVICE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})"
-            rf"\s*(?:\((?P<methods>.*)\))?{_EXTRAS}\s*$",
-            s,
-            re.IGNORECASE | re.DOTALL,
+            rf"CREATE\s+SERVICE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})"
+            r"\s*(?P<methods>\0*)",
+            mask,
+            re.IGNORECASE,
         )
-        if m:
+        tail, end = _create_tail(s, mask, m.end()) if m else ({}, 0)
+        if m and not s[end:].strip():
             # CREATE SERVICE (Parser.java:4252; services.py)
             name = m.group("name").lower()
             if name in self.catalog.services:
-                if re.search(r"IF\s+NOT\s+EXISTS", s, re.IGNORECASE):
+                if m.group("ine"):
                     return self._ok("exists")
                 raise ValueError(f"service already exists: {name}")
-            extras = m.group("extras") or ""
-            pkg, code_path = _parse_codegen_extras(extras)
-            impl = re.search(
-                r"IMPLEMENT\s+BY\s+'([^']*)'", extras, re.IGNORECASE
-            )
             meta = ServiceMeta(
                 name=name,
-                methods=parse_methods(m.group("methods") or ""),
-                package=pkg,
-                implement_by=impl.group(1) if impl else "",
-                code_path=code_path,
+                methods=parse_methods(s[m.start("methods") + 1 : m.end("methods") - 1]),
+                package=tail.get("package", ""),
+                implement_by=tail.get("implement", ""),
+                code_path=tail.get("code", ""),
                 ddl=s,
             )
             self.catalog.services[name] = meta
-            if code_path:
+            if meta.code_path:
                 generate_service_code(meta)
             return self._ok(f"created service {name}")
-
-        m = re.match(
-            rf"CREATE\s+(?:CACHED\s+|MEMORY\s+|(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+)?TABLE\s+"
-            rf"(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})"
-            rf"\s*(?:\((?P<cols>[^()]*)\)\s*)?AS\s+(?P<query>(?:SELECT|WITH|VALUES|FROM)\b.+)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # CREATE TABLE … AS query (CTAS — Parser.java:5777
-            # setQuery(parseSelect()); optional column list renames)
-            name = m.group("name").lower()
-            if name in self.catalog.tables:
-                if re.search(r"IF\s+NOT\s+EXISTS", s, re.IGNORECASE):
-                    return self._ok("exists")
-                raise ValueError(f"table already exists: {name}")
-            df = self.spark.sql(rewrite(m.group("query"), session=self.session))
-            if m.group("cols"):
-                new_names = [c.strip().lower() for c in m.group("cols").split(",")]
-                if len(new_names) != len(df.columns):
-                    raise ValueError(
-                        f"CTAS column list has {len(new_names)} names for "
-                        f"{len(df.columns)} query columns"
-                    )
-                df = df.toDF(*new_names)
-            st = SnapshotTable(self.spark, self.catalog.warehouse, name)
-            st.create(df)
-            self.catalog.tables[name] = st
-            self.catalog.table_ddl[name] = s
-            self.catalog.constraints[name] = TableConstraints()
-            self.catalog.refresh_view(name)
-            return self._ok(f"created table {name} as select")
 
         m = re.match(
             rf"CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -1106,7 +998,7 @@ class StatementRouter:
                     return self._ok("exists")
                 raise ValueError(f"materialized view already exists: {name}")
             q = m.group("query").strip()
-            df = self.spark.sql(rewrite(q, session=self.session))
+            df, _ = self._query(q)
             st = SnapshotTable(self.spark, self.catalog.warehouse, name)
             st.create(df)
             self.catalog.tables[name] = st
@@ -1132,9 +1024,8 @@ class StatementRouter:
             name = m.group("name").lower()
             if name in self.catalog.views and not m.group("or_replace"):
                 raise ValueError(f"view already exists: {name}")
-            q = rewrite(m.group("query"), session=self.session)
-            self.spark.sql(q).createOrReplaceTempView(name)
-            self.catalog.views[name] = q
+            df, self.catalog.views[name] = self._query(m.group("query"))
+            df.createOrReplaceTempView(name)
             return self._ok(f"created view {name}")
 
         m = re.match(
@@ -1180,14 +1071,17 @@ class StatementRouter:
             return self._ok(f"created sequence {m.group('name').lower()}")
 
         m = re.match(
-            rf"CREATE\s+DOMAIN\s+(?P<name>{_IDENT})\s+AS\s+(?P<base>.+)$",
+            rf"CREATE\s+DOMAIN\s+(?P<name>{_IDENT})\s+AS\s+(?P<base>{_IDENT})"
+            r"(?P<args>\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?",
             s,
             re.IGNORECASE,
         )
         if m:
-            # CREATE DOMAIN (UserDataType.java): alias for a base type
-            base = m.group("base").strip().split()[0].lower()
-            self.catalog.domains[m.group("name").lower()] = TYPE_MAP.get(base, "string")
+            # CREATE DOMAIN (UserDataType.java): alias for a base type;
+            # its constraints are not kept
+            self.catalog.domains[m.group("name").lower()] = _spark_type(
+                m.group("base"), (m.group("args") or "").strip(), self.catalog.domains
+            )
             return self._ok(f"created domain {m.group('name').lower()}")
 
         m = re.match(
@@ -1288,6 +1182,109 @@ class StatementRouter:
             return self._ok(f"created aggregate {name}")
 
         raise ValueError(f"unsupported CREATE statement: {s[:80]}")
+
+    def _create_table(self, s: str) -> DataFrame:
+        """CREATE TABLE with a column list (CreateTable.java) or ``AS
+        query`` (Parser.java:5777), read from the plan node of the one
+        parse: the columns and constraints (:meth:`_columns`), or the
+        query's DataFrame. A parse error or a storage clause (USING,
+        LOCATION, PARTITIONED BY, …) raises ValueError."""
+        try:
+            plan, kind, _, extra = self._parse(s)
+        except (Py4JJavaError, ParseException) as exc:
+            msg = exc.java_exception.getMessage() if isinstance(exc, Py4JJavaError) else exc
+            raise ValueError(f"cannot parse CREATE TABLE: {str(msg).strip()}") from exc
+        if kind not in ("CreateTable", "CreateTableAsSelect"):
+            raise ValueError(f"unsupported CREATE TABLE: {s[:80]}")
+        spec, parts = plan.tableSpec(), _names(plan.name().nameParts())
+        if (
+            len(parts) != 1
+            or any(o.isDefined() for o in (spec.provider(), spec.location(),
+                                           spec.collation(), spec.serde()))
+            or spec.external()
+            or not spec.properties().isEmpty()
+            or spec.optionExpression().options().nonEmpty()
+            or plan.partitioning().nonEmpty()
+        ):
+            raise ValueError(f"unsupported CREATE TABLE clause: {s[:80]}")
+        name = parts[0]
+        if name in self.catalog.tables:
+            if plan.ignoreIfExists():
+                return self._ok("exists")
+            raise ValueError(f"table already exists: {name}")
+        st = SnapshotTable(self.spark, self.catalog.warehouse, name)
+        if kind == "CreateTable":
+            schema, pk, uniques, cons = self._columns(plan)
+            st.create_empty(schema)
+        else:
+            df = self._frame(plan.query())
+            if "columns" in extra:
+                if len(extra["columns"]) != len(df.columns):
+                    raise ValueError(
+                        f"CTAS column list has {len(extra['columns'])} names for "
+                        f"{len(df.columns)} query columns"
+                    )
+                df = df.toDF(*extra["columns"])
+            st.create(df)
+            schema, pk, uniques, cons = df.schema, [], {}, TableConstraints()
+        self.catalog.tables[name] = st
+        self.catalog.table_ddl[name] = s
+        self.catalog.constraints[name] = cons
+        if pk:
+            self.catalog.indexes[f"__pk_{name}"] = IndexMeta(
+                f"__pk_{name}", name, pk, unique=True
+            )
+        for uq, cols in uniques.items():
+            index = f"__uq_{name}_{uq}"
+            self.catalog.indexes[index] = IndexMeta(index, name, cols, unique=True)
+        self.catalog.refresh_view(name)
+        if "code" in extra:
+            # GENERATE CODE (SqlScript.java:56-58): emit the typed Python
+            # model class for this table
+            cols_typed = [(f.name, f.dataType.simpleString()) for f in schema.fields]
+            generate_model_code(name, cols_typed, extra.get("package", ""), extra["code"])
+        return self._ok(f"created table {name}" + ("" if kind == "CreateTable" else " as select"))
+
+    @staticmethod
+    def _columns(plan) -> tuple[StructType, list[str], dict, TableConstraints]:
+        """(schema, primary key, unique column lists by constraint name,
+        constraints) of a parsed CreateTable: each column's type, NOT
+        NULL (a primary key's columns too), DEFAULT, generation
+        expression and IDENTITY, and the PRIMARY KEY, UNIQUE, CHECK and
+        FOREIGN KEY constraints, column-level or not. The schema is
+        nullable: the constraints are checked at write time."""
+        fields, cons = [], TableConstraints()
+        for c in _seq(plan.columns()):
+            col = c.name().lower()
+            fields.append(StructField(c.name(), _parse_datatype_json_string(c.dataType().json())))
+            if not c.nullable():
+                cons.not_null.append(col)
+            if c.defaultValue().isDefined():
+                cons.defaults[col] = c.defaultValue().get().originalSQL()
+            if c.generationExpression().isDefined():
+                cons.computed[col] = c.generationExpression().get()
+            if c.identityColumnSpec().isDefined():
+                cons.identity.append(col)
+        pk, uniques = [], {}
+        for k in _seq(plan.tableSpec().constraints()):
+            kind = k.getClass().getSimpleName()
+            if kind == "PrimaryKeyConstraint":
+                pk = _names(k.columns())
+            elif kind == "UniqueConstraint":
+                cols = _names(k.columns())
+                uniques[(k.userProvidedName() or "_".join(cols)).lower()] = cols
+            elif kind == "CheckConstraint":
+                cons.checks.append(k.condition())
+            elif kind == "ForeignKeyConstraint":
+                cons.foreign_keys.append((
+                    (k.userProvidedName() or "").lower(),
+                    _names(k.childColumns()),
+                    ".".join(_names(k.parentTableId())),
+                    _names(k.parentColumns()),
+                ))
+            else:
+                raise ValueError(f"unsupported constraint: {k.toString()}")
+        return StructType(fields), pk, uniques, cons
 
     # java.lang.Math/StrictMath methods → the Spark builtin with matching
     # semantics (the reference's own test aliases are Math methods, e.g.
@@ -1409,9 +1406,10 @@ class StatementRouter:
             if name not in self.catalog.views:
                 raise KeyError(f"view not found: {name}")
             if m.group("query"):
-                q = rewrite(m.group("query"), session=self.session)
-                self.catalog.views[name] = q
-            self.spark.sql(self.catalog.views[name]).createOrReplaceTempView(name)
+                df, self.catalog.views[name] = self._query(m.group("query"))
+            else:
+                df = self.spark.sql(self.catalog.views[name])
+            df.createOrReplaceTempView(name)
             return self._ok(f"altered view {name}")
 
         m = re.match(
@@ -1504,14 +1502,8 @@ class StatementRouter:
                 rest,
                 re.IGNORECASE,
             )
-            col, typ = cm.group(1), cm.group(2).lower()
-            args = (cm.group(3) or "").strip()
-            spark_type = (
-                f"decimal{args}"
-                if typ in ("decimal", "numeric") and args
-                else TYPE_MAP.get(typ, "string")
-            )
-            st.write(df.withColumn(col.lower(), F.lit(None).cast(spark_type)))
+            spark_type = _spark_type(cm.group(2), (cm.group(3) or "").strip(), self.catalog.domains)
+            st.write(df.withColumn(cm.group(1).lower(), F.lit(None).cast(spark_type)))
         elif op.startswith("DROP"):
             col = rest.split()[0].lower()
             st.write(df.drop(col))
@@ -1538,8 +1530,9 @@ class StatementRouter:
             for iname, meta in list(cat.indexes.items()):
                 if meta.table == name:
                     del cat.indexes[iname]
-                    if iname == f"__pk_{name}":
-                        iname = f"__pk_{new}"
+                    if iname.startswith((f"__pk_{name}", f"__uq_{name}_")):
+                        # a key declared in the table's DDL is named after it
+                        iname = iname[:5] + new + iname[5 + len(name):]
                     cat.indexes[iname] = IndexMeta(
                         iname, new, meta.columns, unique=meta.unique
                     )
@@ -1589,12 +1582,8 @@ class StatementRouter:
             re.IGNORECASE,
         )
         if m:
-            typ = m.group("typ").lower()
-            args = (m.group("args") or "").strip()
-            spark_type = (
-                f"decimal{args}"
-                if typ in ("decimal", "numeric", "dec", "number") and args
-                else TYPE_MAP.get(typ, "string")
+            spark_type = _spark_type(
+                m.group("typ"), (m.group("args") or "").strip(), self.catalog.domains
             )
             df = st.read()
             new_value = F.col(col).cast(spark_type)
@@ -1832,6 +1821,10 @@ class StatementRouter:
                     self._drop(f"DROP TABLE IF EXISTS {dep} CASCADE")
             self.catalog.tables.pop(name).drop()
             self.catalog.table_ddl.pop(name, None)
+            self.catalog.constraints.pop(name, None)
+            for iname, meta in list(self.catalog.indexes.items()):
+                if meta.table == name:
+                    del self.catalog.indexes[iname]
             self.spark.catalog.dropTempView(name)
         elif kind == "VIEW":
             if self.catalog.views.pop(name, None) is None and not if_exists:
@@ -2259,10 +2252,7 @@ class StatementRouter:
         body = s.split(None, 1)[1]
         if body.upper().startswith("ANALYZE"):
             body = body.split(None, 1)[1]
-        plan, kind, text, _ = self._parse(body)
-        if kind in _DML_HANDLERS:
-            raise ValueError(f"EXPLAIN of DML is not supported: {text[:80]}")
-        plan = self._frame(plan)._jdf.queryExecution().explainString(
+        plan = self._query(body)[0]._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
@@ -2270,13 +2260,6 @@ class StatementRouter:
         return self.spark.createDataFrame(
             [(line,) for line in plan.splitlines()], "plan string"
         )
-
-    # SET COLLATION name → Spark 4 native ICU collation (reference:
-    # dml/Set.java COLLATION branch + CompareModeIcu4J.java). Mapping
-    # shared with per-column DDL COLLATE — see module-level
-    # collation_to_spark above _parse_columns.
-    def _collation_to_spark(self, name: str, strength: str | None) -> str | None:
-        return collation_to_spark(name, strength)
 
     def _set(self, s: str) -> DataFrame:
         m = re.match(
@@ -2294,9 +2277,7 @@ class StatementRouter:
                 raise ValueError(
                     f"collation cannot be changed: data table exists ({first})"
                 )
-            spark_collation = self._collation_to_spark(
-                m.group("name"), m.group("strength")
-            )
+            spark_collation = collation_to_spark(m.group("name"), m.group("strength"))
             if spark_collation is not None:
                 # validate eagerly so a bad locale fails at SET time like
                 # the reference does (DbException INVALID_VALUE)
@@ -2352,7 +2333,7 @@ class StatementRouter:
             return self.spark.createDataFrame(
                 [(None if result is None else str(result),)], "result string"
             )
-        return self.spark.sql(rewrite(f"SELECT {expr} AS result", session=self.session))
+        return self._query(f"SELECT {expr} AS result")[0]
 
     def _script(self, s: str) -> DataFrame:
         """SCRIPT [NODATA] [TO 'file'] — dump the catalog (and data) as a
@@ -2408,7 +2389,7 @@ class StatementRouter:
                 vals = ", ".join(_sql_literal(v) for v in row)
                 yield f"INSERT INTO {table} ({cols}) VALUES ({vals})"
         for m in cat.indexes.values():
-            if not m.name.startswith("__pk_"):
+            if not m.name.startswith(("__pk_", "__uq_")):  # the table DDL has them
                 uq = "UNIQUE " if m.unique else ""
                 ddl.append(
                     f"CREATE {uq}INDEX {m.name} ON {m.table} "
@@ -2526,10 +2507,7 @@ class StatementRouter:
             raise KeyError(f"materialized view not found: {name}")
         if m.group("inc"):
             return self._refresh_incremental(name)
-        df = self.spark.sql(
-            rewrite(self.catalog.mat_views[name], session=self.session)
-        )
-        self.catalog.tables[name].write(df)
+        self.catalog.tables[name].write(self._query(self.catalog.mat_views[name])[0])
         if name in self.catalog.mv_base:
             base, _ = self.catalog.mv_base[name]
             self.catalog.mv_base[name] = (base, self.catalog.tables[base].version)
@@ -2587,13 +2565,8 @@ class StatementRouter:
         delta = st.inserted_since(last_v)  # raises if history not append-only
         view = f"__mv_delta_{name}"
         delta.createOrReplaceTempView(view)
-        delta_agg = self.spark.sql(
-            rewrite(
-                re.sub(
-                    rf"\bFROM\s+{base}\b", f"FROM {view}", query, flags=re.IGNORECASE
-                ),
-                session=self.session,
-            )
+        delta_agg, _ = self._query(
+            re.sub(rf"\bFROM\s+{base}\b", f"FROM {view}", query, flags=re.IGNORECASE)
         )
         old = self.catalog.tables[name].read()
         o, d = old.alias("o"), delta_agg.alias("d")

@@ -81,9 +81,10 @@ def _rewrite_from_first(sql: str) -> str:
 
 
 def _rewrite_top(sql: str) -> str:
-    """``SELECT TOP n ...`` → ``SELECT ... LIMIT n`` (Parser.java:1596)."""
+    """``SELECT TOP n ...`` → ``SELECT ... LIMIT n`` (Parser.java:1596),
+    also as the query of ``CREATE TABLE … AS``."""
     return _sub_outside_literals(
-        r"^(\s*SELECT)\s+TOP\s+(\d+)\s+(.*)$",
+        r"^(\s*(?:CREATE\b.*?\bAS\s+)?SELECT)\s+TOP\s+(\d+)\s+(.*)$",
         lambda m: f"{m.group(1)} {m.group(3)} LIMIT {m.group(2)}",
         sql,
         re.IGNORECASE | re.DOTALL,

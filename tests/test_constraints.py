@@ -246,3 +246,40 @@ def test_renames_keep_constraints(es, rename, table, stmt):
         es.sql(f"INSERT INTO {table} VALUES (3, -1)")
     es.sql(f"INSERT INTO {table} VALUES (4, 4)")
     assert es.sql(f"SELECT count(*) FROM {table}").collect()[0][0] == 2
+
+
+# -- constraints declared in CREATE TABLE, read from Spark's parse tree ----
+
+
+@pytest.mark.parametrize(
+    "ddl, bad",
+    [
+        ("CREATE TABLE kd (a int, b int, CONSTRAINT pk PRIMARY KEY (a))", "(1, 2)"),
+        ("CREATE TABLE kd (a int UNIQUE, b int)", "(1, 2)"),
+        ("CREATE TABLE kd (a int, b int, CONSTRAINT uq UNIQUE (b))", "(2, 1)"),
+        ("CREATE TABLE kd (a int, b int, CONSTRAINT ck CHECK (a > 0))", "(-1, 1)"),
+    ],
+    ids=["named_pk", "column_unique", "table_unique", "named_check"],
+)
+def test_declared_constraint_enforced(es, ddl, bad):
+    es.sql(ddl)
+    es.sql("INSERT INTO kd VALUES (1, 1)")
+    _rejected(es, "kd", f"INSERT INTO kd VALUES {bad}", "constraint violation")
+    es.sql("INSERT INTO kd VALUES (3, 3)")
+    assert es.sql("SELECT count(*) FROM kd").collect()[0][0] == 2
+
+
+def test_two_primary_keys_raise_at_create(es):
+    with pytest.raises(ValueError, match="MULTIPLE_PRIMARY_KEYS"):
+        es.sql("CREATE TABLE kd (a int PRIMARY KEY, b int, PRIMARY KEY (b))")
+    assert "kd" not in es.catalog.tables
+
+
+def test_drop_table_drops_its_keys(es):
+    """A key belongs to its table: DROP TABLE removes it, so a table
+    created again under the name does not inherit it."""
+    es.sql("CREATE TABLE kd (a int PRIMARY KEY, b int UNIQUE)")
+    es.sql("DROP TABLE kd")
+    es.sql("CREATE TABLE kd (a int, b int)")
+    es.sql("INSERT INTO kd VALUES (1, 1), (1, 1)")
+    assert es.sql("SELECT count(*) FROM kd").collect()[0][0] == 2

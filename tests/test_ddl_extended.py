@@ -386,3 +386,98 @@ def test_describe_history_and_describe(es):
         f"SELECT v FROM dh VERSION AS OF {v_ins} WHERE id = 1"
     ).collect()
     assert old[0]["v"] == 10
+
+
+def test_lealone_create_table_forms(es):
+    """Lealone's CREATE TABLE forms that Spark's grammar lacks become
+    ANSI text before the parse; what they declare is kept."""
+    es.sql(
+        "CREATE CACHED TABLE f1 (id serial PRIMARY KEY, "
+        "n int NULL SELECTIVITY 10, a_id int REFERENCES a) ENGINE=mvstore HIDDEN"
+    )
+    es.sql(
+        "CREATE LOCAL TEMPORARY TABLE f2 (k bigint AUTO_INCREMENT, "
+        "w varchar(9) DEFAULT 'x' COLLATE UNICODE STRENGTH SECONDARY NOT NULL, "
+        "FOREIGN KEY (k) REFERENCES f1)"
+    )
+    es.sql("INSERT INTO f2 (w) VALUES ('Ab')")
+    assert es.sql("SELECT count(*) FROM f2 WHERE w = 'aB' AND k IS NOT NULL").first()[0] == 1
+    cons = es.catalog.constraints
+    assert cons["f1"].identity == ["id"] and cons["f1"].not_null == ["id"]
+    assert cons["f1"].foreign_keys == [("", ["a_id"], "a", ["id"])]
+    assert cons["f2"].identity == ["k"] and cons["f2"].not_null == ["w"]
+    assert cons["f2"].foreign_keys == [("", ["k"], "f1", ["id"])]
+    assert es.catalog.indexes["__pk_f1"].columns == ["id"]
+    es.sql("CREATE MEMORY TABLE f4 (k) AS SELECT TOP 1 id FROM a ORDER BY id DESC")
+    assert [tuple(r) for r in es.sql("SELECT * FROM f4").collect()] == [(2,)]
+    for bad in (
+        "CREATE TABLE f3 (x int) USING parquet",
+        "CREATE TABLE f3 (x int REFERENCES f2)",  # f2 has no primary key
+        "CREATE TABLE f3 (x varchar(9) COLLATE QQXYZZY)",
+        "CREATE TABLE f3 (x int, CHECK (x >))",
+        "CREATE TABLE f3 (x int DEFAULT NEXTVAL('sq'))",  # not once per row
+    ):
+        with pytest.raises(ValueError):
+            es.sql(bad)
+    assert "f3" not in es.catalog.tables
+
+
+def test_one_type_mapping(es):
+    """CREATE TABLE, ALTER TABLE ADD / ALTER COLUMN and CREATE DOMAIN map
+    type names alike: the decimal family keeps (p,s), a domain column
+    takes the domain's type, an unknown name raises."""
+    from decimal import Decimal
+
+    es.sql("CREATE DOMAIN money AS decimal(10,2)")
+    es.sql("CREATE TABLE ty (m money, n int)")
+    es.sql("INSERT INTO ty VALUES (10.25, 1), (9.50, 2)")
+    got = [r.m for r in es.sql("SELECT m FROM ty ORDER BY m").collect()]
+    assert got == [Decimal("9.50"), Decimal("10.25")]
+    es.sql("ALTER TABLE ty ADD COLUMN c NUMBER(10,4)")
+    es.sql("ALTER TABLE ty ADD COLUMN d DEC(12,3)")
+    es.sql("ALTER TABLE ty ALTER COLUMN n SET DATA TYPE money")
+    assert es.sql("SELECT * FROM ty").dtypes == [
+        ("m", "decimal(10,2)"), ("n", "decimal(10,2)"),
+        ("c", "decimal(10,4)"), ("d", "decimal(12,3)"),
+    ]
+    for bad in (
+        "CREATE TABLE ty2 (x integr)",
+        "ALTER TABLE ty ADD COLUMN x integr",
+        "ALTER TABLE ty ALTER COLUMN n integr",
+        "CREATE DOMAIN d2 AS integr",
+    ):
+        with pytest.raises(ValueError, match="unknown type"):
+            es.sql(bad)
+
+
+# Query text inside DDL passes the same rewrites as a SELECT: each source
+# reads from q (k PRIMARY KEY) at versions 1 and 2.
+_DDL_SOURCES = {
+    "version_as_of": "SELECT count(*) AS n FROM q VERSION AS OF 1",
+    "diff": "SELECT count(*) AS n FROM DIFF(q, 1, 2)",
+    "info_schema": "SELECT count(*) AS n FROM INFORMATION_SCHEMA.TABLES WHERE table_name = 'q'",
+}
+_DDL_FORMS = {
+    "ctas": ["CREATE TABLE x AS {q}"],
+    "view": ["CREATE VIEW x AS {q}"],
+    "alter_view": ["CREATE VIEW x AS SELECT 0 AS n", "ALTER VIEW x AS {q}"],
+    "mat_view": ["CREATE MATERIALIZED VIEW x AS {q}", "REFRESH MATERIALIZED VIEW x"],
+    "call": [],
+}
+
+
+@pytest.mark.parametrize("form", list(_DDL_FORMS))
+@pytest.mark.parametrize("source", list(_DDL_SOURCES))
+def test_ddl_query_takes_the_router_rewrites(spark, tmp_path, source, form):
+    s = EngineSession(spark, warehouse=str(tmp_path))
+    s.sql("CREATE TABLE q (k int PRIMARY KEY, v int)")
+    s.sql("INSERT INTO q VALUES (1, 1), (2, 2)")
+    s.sql("UPDATE q SET v = 3 WHERE k = 2")
+    q = _DDL_SOURCES[source]
+    want = s.sql(q).first()["n"]
+    for stmt in _DDL_FORMS[form]:
+        s.sql(stmt.format(q=q))
+    if form == "call":
+        assert s.sql(f"CALL ({q})").first()["result"] == want
+    else:
+        assert s.sql("SELECT n FROM x").first()["n"] == want

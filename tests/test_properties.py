@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -456,7 +457,7 @@ def test_pagerank_mass_conserved_random(spark, edges):
     assert abs(sum(got.values()) - n * SCALE) < n * 3
 
 
-# -- catalog column-definition parsing laws (r07: literal robustness) ----
+# -- CREATE TABLE column-definition laws (literal robustness) -----------
 _LIT_CHARS = st.text(
     alphabet=st.characters(
         codec="utf-8", blacklist_characters="\x00", blacklist_categories=("Cs",)
@@ -465,36 +466,67 @@ _LIT_CHARS = st.text(
 )
 
 
+@pytest.fixture(scope="module")
+def router(spark, tmp_path_factory):
+    from etl_lealone_spark.session import EngineSession
+
+    es = EngineSession(spark, warehouse=str(tmp_path_factory.mktemp("props")))
+    return es._router
+
+
+def _table_def(router, lit: str, ddl: str):
+    """The (schema, primary key, unique keys, constraints) the session's
+    router reads from CREATE TABLE ``ddl``, or None when Spark's lexer
+    rejects string literal ``lit`` (``'\\'``: the backslash escapes the
+    closing quote) — then the statement must raise ValueError and create
+    nothing."""
+    from pyspark.errors import ParseException
+
+    try:
+        router._parser.parseExpression(lit)
+    except ParseException:
+        with pytest.raises(ValueError):
+            router.execute(ddl)
+        assert "b1" not in router.catalog.tables
+        return None
+    return router._columns(router._parse(ddl)[0])
+
+
 @given(v=_LIT_CHARS)
+@example(v="\\")
 @settings(max_examples=120, deadline=None)
-def test_default_literal_roundtrips_and_creates_no_phantom_clauses(v):
+def test_default_literal_roundtrips_and_creates_no_phantom_clauses(router, v):
     """LAW: whatever a DEFAULT string literal contains — commas, parens,
     quotes, or text spelling NOT NULL / PRIMARY KEY / CHECK(...) /
-    COLLATE — the parser must (a) store the literal byte-for-byte and
-    (b) derive ZERO column semantics from its content."""
-    from etl_lealone_spark.catalog import _parse_columns
-
+    COLLATE — CREATE TABLE must (a) store the literal byte-for-byte and
+    (b) derive ZERO column semantics from its content, or raise
+    ValueError if Spark's lexer rejects the literal."""
     lit = "'" + v.replace("'", "''") + "'"
-    ddl, pks, cons = _parse_columns(
-        f"id int primary key, w varchar(80) DEFAULT {lit}"
-    )
+    ddl = f"CREATE TABLE b1 (id int primary key, w varchar(80) DEFAULT {lit})"
+    got = _table_def(router, lit, ddl)
+    if got is None:
+        return
+    schema, pk, uniques, cons = got
     assert cons.defaults.get("w") == lit
-    assert pks == ["id"]
+    assert pk == ["id"] and uniques == {}
     assert "w" not in cons.not_null
     assert "w" not in cons.identity
     assert cons.checks == []
-    assert ddl == "id int, w string"
+    assert [(f.name, f.dataType.simpleString()) for f in schema] == [
+        ("id", "int"), ("w", "string")
+    ]
 
 
 @given(v=_LIT_CHARS)
+@example(v="\\")
 @settings(max_examples=120, deadline=None)
-def test_check_expression_survives_nested_parens_and_literals(v):
-    """LAW: a column CHECK expression round-trips through the parser
+def test_check_expression_survives_nested_parens_and_literals(router, v):
+    """LAW: a column CHECK expression round-trips through CREATE TABLE
     whatever literal it embeds — nested calls and quoted parens
-    included (the [^)]* truncation class)."""
-    from etl_lealone_spark.catalog import _parse_columns
-
+    included (the [^)]* truncation class) — or CREATE TABLE raises
+    ValueError if Spark's lexer rejects the literal."""
     lit = "'" + v.replace("'", "''") + "'"
     expr = f"COALESCE(w, {lit}) <> {lit}"
-    _ddl, _pks, cons = _parse_columns(f"w varchar(80) CHECK ({expr})")
-    assert cons.checks == [expr]
+    got = _table_def(router, lit, f"CREATE TABLE b1 (w varchar(80) CHECK ({expr}))")
+    if got is not None:
+        assert got[3].checks == [expr]
